@@ -1,29 +1,42 @@
-"""Connected components over an edge list — the cluster-resolution
+"""Graph operators. Connected components is the cluster-resolution
 step a dedup pipeline needs after pair generation.
 
 Near-duplicate similarity is NOT transitive (A≈B, B≈C does not imply
 A≈C above threshold), so "which documents are one cluster" is the
-transitive closure of the verified-pair graph. At 100 TB that's a
-graph problem, solved here the Spark-native way: iterative min-label
-propagation — every node repeatedly adopts the smallest label among
-itself and its neighbors until fixpoint. Each round is one shuffle
-join (edges ⋈ labels on the edge source) + one min-aggregate; rounds
-needed = graph diameter, and dup clusters are near-cliques
-(diameter ≤ 3), so 3-4 rounds in practice. `localCheckpoint` after
-every round truncates the lineage that iterative DataFrame loops
-otherwise accumulate (on a real cluster, reliable `checkpoint` to
-the cluster FS). For adversarial long-chain graphs the
-large-star/small-star variant (Kiveris et al. 2014) halves round
-count; dedup workloads never need it.
+transitive closure of the verified-pair graph, solved the
+Spark-native way: iterative min-label propagation — every node
+repeatedly adopts the smallest label among itself and its neighbors
+until fixpoint; rounds needed = graph diameter, and dup clusters are
+near-cliques (diameter ≤ 3), so 3-4 rounds in practice. For
+adversarial long-chain graphs the large-star/small-star variant
+(Kiveris et al. 2014) halves round count; dedup workloads never
+need it.
 
-Driver involvement per round is ONE scalar (the changed-count), not
-data — the algorithm is fully distributed.
+Every iterative operator truncates its lineage with an eager
+``localCheckpoint`` per round. These loops are bound by per-job
+fixed cost, not by work, so the scalars a loop needs (node count,
+dangling mass, changed-count, L2 norms) are ``DataFrame.observe``
+aggregates of the round's checkpoint (``_checkpoint``): they
+complete inside the job that materializes the frame, cost no job of
+their own, and enter the next round as literals.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it with the named
+    ``metrics`` aggregated over its rows. The aggregates ride the
+    checkpoint job itself (an Observation completes on
+    ``localCheckpoint``), so a loop scalar costs no extra Spark job."""
+    obs = Observation()
+    out = df.observe(
+        obs, *[m.alias(k) for k, m in metrics.items()]
+    ).localCheckpoint()
+    return out, obs.get
 
 
 def connected_components(
@@ -38,7 +51,13 @@ def connected_components(
     node id reachable from ``node``. Nodes with no edges don't
     appear (a dedup pipeline treats them as singleton clusters).
     Deterministic: min() is order-insensitive, so the result is
-    independent of partitioning and iteration scheduling."""
+    independent of partitioning and iteration scheduling.
+
+    Per round: one keyed join (edges ⋈ labels on the edge source),
+    then the labels UNION ALL the neighbor messages and ONE
+    groupBy(node) min — the new label and the node's old one come out
+    of the same aggregate, so the changed-count that stops the loop
+    is an observed scalar of the round's checkpoint, not a job."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionAll(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -51,32 +70,29 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
-        # Each node's neighbors broadcast their current label; the node
-        # keeps the min of its own and the best incoming.
-        msgs = (
-            sym.join(labels, sym["a"] == labels["node"])
-            .groupBy(F.col("b").alias("node2"))
-            .agg(F.min("component").alias("incoming"))
+        # Each node's neighbors send their current label; the node
+        # keeps the min of its own (the only row carrying `old`) and
+        # the best incoming.
+        msgs = sym.join(labels, sym["a"] == labels["node"]).select(
+            F.col("b").alias("node"),
+            "component",
+            F.lit(None).cast(labels.schema["node"].dataType).alias("old"),
         )
-        new_labels = (
-            labels.join(msgs, labels["node"] == msgs["node2"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("incoming", F.col("component")),
-                ).alias("component"),
-                F.col("component").alias("__old"),
+        labels, seen = _checkpoint(
+            labels.select(
+                "node", "component", F.col("component").alias("old")
             )
-            .localCheckpoint(eager=True)
+            .unionAll(msgs)
+            .groupBy("node")
+            .agg(
+                F.min("component").alias("component"),
+                F.max("old").alias("old"),
+            ),
+            changed=F.count_if(F.col("component") < F.col("old")),
         )
-        changed = new_labels.filter(
-            F.col("component") < F.col("__old")
-        ).count()
-        labels = new_labels.drop("__old")
-        if changed == 0:
+        if seen["changed"] == 0:
             break
-    return labels
+    return labels.select("node", "component")
 
 
 def pagerank(
@@ -92,77 +108,66 @@ def pagerank(
     their rank uniformly each round (the standard stochastic-matrix
     completion), so rank mass is conserved on ANY directed graph.
 
-    Per iteration: ONE keyed join (edges ⋈ ranks on src) + one
-    groupBy(dst) partial-aggregated sum + a one-row dangling-mass
-    aggregate broadcast back — no driver round-trip, lineage
-    truncated per round via localCheckpoint exactly as
-    connected_components/kmeans_lloyd do. A fixed ``iters`` makes the
-    whole computation SQL-unrollable, so the oracle checks the
-    algorithm end to end. Returns (node, rank) over all nodes
-    appearing in the edge list; Σ rank = 1.
+    Before the loop: the edge list is checkpointed once, and ONE
+    aggregate over it gives every node's out-degree; the node count
+    ``n`` and the dangling count are observed scalars of that
+    aggregate's checkpoint. Per iteration: the broadcast ``r/deg``
+    frame joined to the edges, UNION ALL the node list with 0.0
+    contributions, and ONE groupBy(v) sum — no nodes ⋈ contributions
+    join. The next round's dangling mass is an observed scalar of the
+    round's checkpoint, so ``n`` and the mass enter the update as
+    literals: 3 Spark jobs per iteration (broadcast, shuffle map
+    stage, checkpoint) where one-row aggregates broadcast back into
+    the plan cost 11. A fixed ``iters`` makes the whole computation
+    SQL-unrollable, so the oracle checks it end to end. Returns
+    (node, rank) over all nodes in the edge list; Σ rank = 1.
     """
-    # Materialize the static structures ONCE — but as few frames as
-    # possible: the r14 event-log profile showed this query running
-    # ~50 serial JOBS with 9.5 s of inter-job driver gaps (planning,
-    # eager-checkpoint barriers) against 7.3 s of actual task time, so
-    # every eliminated materialization is ~2 jobs of fixed cost.
-    # r14 (was 5 pre-loop checkpoints, r13 shape):
-    #  - out-degree rides the SAME hash(src) pass as the edge frame
-    #    via a window count instead of a groupBy + keyed join (guide
-    #    §2.4: two operations keyed the same way share one exchange);
-    #    deg values — and therefore the r/deg float chain — are
-    #    bit-identical (count is order-insensitive).
-    #  - vtx and the dangling set collapse into ONE (v, has_out)
-    #    frame: max(has_out) over the src/dst union replaces the
-    #    distinct + anti-join pair, and the per-iteration dangling
-    #    mass becomes a filter on the rank frame instead of a join.
-    ed = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .withColumn(
-            "deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-        )
-        .localCheckpoint()
-    )
-    nodes = (
-        ed.select(F.col("src").alias("v"), F.lit(1).alias("has_out"))
-        .union(ed.select(F.col("dst").alias("v"), F.lit(0).alias("has_out")))
+    ed = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst")
+    ).localCheckpoint()
+    ranks, seen = _checkpoint(
+        ed.select(F.col("src").alias("v"), F.lit(1).alias("out"))
+        .unionAll(ed.select(F.col("dst").alias("v"), F.lit(0).alias("out")))
         .groupBy("v")
-        .agg(F.max("has_out").alias("has_out"))
-        .localCheckpoint()
+        .agg(F.sum("out").alias("deg")),
+        n=F.count(F.lit(1)),
+        dangling=F.count_if(F.col("deg") == 0),
     )
-    n_row = F.broadcast(nodes.groupBy().agg(F.count(F.lit(1)).alias("n")))
-    ranks = nodes.crossJoin(n_row).select(
-        "v", "has_out", (F.lit(1.0) / F.col("n")).alias("r")
-    )
+    n = seen["n"]
+    if n == 0:
+        # An empty graph has no rank to spread, and 1.0 / n below
+        # would divide by zero.
+        return ranks.select(
+            F.col("v").alias("node"), F.lit(0.0).alias("rank")
+        )
+    r0 = 1.0 / n
+    ranks = ranks.withColumn("r", F.lit(r0))
+    dng = seen["dangling"] * r0
     for _ in range(iters):
-        contrib = (
-            ed.join(ranks, ed["src"] == ranks["v"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") / F.col("deg")).alias("insum"))
+        q = ranks.filter(F.col("deg") > 0).select(
+            F.col("v").alias("src"), (F.col("r") / F.col("deg")).alias("q")
         )
-        dangle = F.broadcast(
-            ranks.filter(F.col("has_out") == 0)
-            .groupBy()
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dng"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["v"] == contrib["dst"], "left")
-            .crossJoin(n_row)
-            .crossJoin(dangle)
+        ranks, seen = _checkpoint(
+            ed.join(F.broadcast(q), "src")
+            .select(
+                F.col("dst").alias("v"),
+                F.lit(None).cast("long").alias("deg"),
+                "q",
+            )
+            .unionAll(ranks.select("v", "deg", F.lit(0.0).alias("q")))
+            .groupBy("v")
+            .agg(F.max("deg").alias("deg"), F.sum("q").alias("insum"))
             .select(
                 "v",
-                "has_out",
+                "deg",
                 (
-                    (1.0 - damping) / F.col("n")
-                    + damping
-                    * (
-                        F.coalesce(F.col("insum"), F.lit(0.0))
-                        + F.col("dng") / F.col("n")
-                    )
+                    F.lit((1.0 - damping) / n)
+                    + damping * (F.col("insum") + F.lit(dng / n))
                 ).alias("r"),
-            )
-            .localCheckpoint()
+            ),
+            dng=F.sum(F.when(F.col("deg") == 0, F.col("r")).otherwise(0.0)),
         )
+        dng = seen["dng"]
     return ranks.select(F.col("v").alias("node"), F.col("r").alias("rank"))
 
 
@@ -574,16 +579,15 @@ def hits(
     connected_components and pagerank, natural on a bipartite graph
     (customers are pure hubs, suppliers pure authorities).
 
-    Per iteration: authority scores are ONE keyed join (edges ⋈ hubs
-    on src) + a partial-aggregated groupBy(dst), L2-normalized by a
-    one-row aggregate broadcast back (one-row-stat crossJoin); then
-    the hub update mirrors it through the new authorities. Lineage is
-    truncated per round via localCheckpoint exactly as pagerank does.
-    A fixed ``iters`` keeps the whole trajectory SQL-unrollable so
-    the DuckDB oracle certifies every iteration including the
-    normalizations. Returns (role, node, score) with role ∈
-    {'hub', 'auth'} — roles, not id-relabeling, disambiguate node
-    ids shared across the two sides.
+    Per iteration: raw authority scores are ONE keyed join (edges ⋈
+    hubs on src) + a partial-aggregated groupBy(dst), checkpointed
+    with their L2 norm as an observed scalar, which then divides them
+    as a literal; the hub update mirrors it through the new
+    authorities. A fixed ``iters`` keeps the whole trajectory
+    SQL-unrollable so the DuckDB oracle certifies every iteration
+    including the normalizations. Returns (role, node, score) with
+    role ∈ {'hub', 'auth'} — roles, not id-relabeling, disambiguate
+    node ids shared across the two sides.
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
@@ -594,35 +598,24 @@ def hits(
         .select("v", F.lit(1.0).alias("h"))
         .localCheckpoint()
     )
+
+    def normalized(raw: DataFrame, x: str) -> DataFrame:
+        raw, seen = _checkpoint(raw, z=F.sqrt(F.sum(F.col(x) * F.col(x))))
+        return raw.select("v", (F.col(x) / F.lit(seen["z"])).alias(x))
+
     auths = None
     for _ in range(iters):
-        a_raw = (
+        auths = normalized(
             e.join(hubs, e["src"] == hubs["v"])
-            .groupBy("dst")
-            .agg(F.sum("h").alias("a"))
-            .select(F.col("dst").alias("v"), "a")
+            .groupBy(F.col("dst").alias("v"))
+            .agg(F.sum("h").alias("a")),
+            "a",
         )
-        za = F.broadcast(
-            a_raw.agg(F.sqrt(F.sum(F.col("a") * F.col("a"))).alias("z"))
-        )
-        auths = (
-            a_raw.crossJoin(za)
-            .select("v", (F.col("a") / F.col("z")).alias("a"))
-            .localCheckpoint()
-        )
-        h_raw = (
+        hubs = normalized(
             e.join(auths, e["dst"] == auths["v"])
-            .groupBy("src")
-            .agg(F.sum("a").alias("h"))
-            .select(F.col("src").alias("v"), "h")
-        )
-        zh = F.broadcast(
-            h_raw.agg(F.sqrt(F.sum(F.col("h") * F.col("h"))).alias("z"))
-        )
-        hubs = (
-            h_raw.crossJoin(zh)
-            .select("v", (F.col("h") / F.col("z")).alias("h"))
-            .localCheckpoint()
+            .groupBy(F.col("src").alias("v"))
+            .agg(F.sum("a").alias("h")),
+            "h",
         )
     return hubs.select(
         F.lit("hub").alias("role"), "v", F.col("h").alias("score")

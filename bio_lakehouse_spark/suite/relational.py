@@ -1115,9 +1115,10 @@ def pagerank_cust_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (3 power iterations, damping 0.85, dangling mass
     redistributed) over the symmetrized customer-supplier trade
     graph — entity-importance ranking, the second iterative-graph
-    operator after connected_components. One keyed join + one
-    partial-aggregated groupBy + a one-row dangling broadcast per
-    iteration, lineage checkpoint-truncated; rank mass sums to 1."""
+    operator after connected_components. One broadcast join + one
+    partial-aggregated groupBy per iteration, checkpointed with the
+    next round's dangling mass as an observed scalar (3 Spark jobs
+    per iteration); rank mass sums to 1."""
     from bio_lakehouse_spark.operators.graph import pagerank
 
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -1756,8 +1757,8 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIRECTED customer→supplier trade graph: customers score as hubs
     (order from authoritative suppliers), suppliers as authorities
     (supply to strong hubs). Per iteration one keyed join + one
-    partial-aggregated groupBy per side, norms as one-row broadcast
-    stats, lineage checkpoint-truncated (operators/graph.hits)."""
+    partial-aggregated groupBy per side, each side's L2 norm an
+    observed scalar of its checkpoint (operators/graph.hits)."""
     from bio_lakehouse_spark.operators.graph import hits
 
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")

@@ -521,16 +521,18 @@ def sessionize_gap30(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag→flag→cumsum — the batch twin of the streaming session-window
     operator in `streaming/` (the reference is batch-only, §2.10; this
     is the training-pipeline extension). Fully window-expressible: no
-    shuffle beyond the user_id partition."""
+    shuffle beyond the user_id partition. The gap is compared in
+    microseconds, the timestamps' own precision: whole seconds would
+    merge a gap in (1800 s, 1801 s) that the oracle splits."""
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.withColumn(
         "new_session",
         F.when(
             (
-                F.unix_timestamp("ts")
-                - F.unix_timestamp(F.lag(F.col("ts")).over(w))
-                > 1800
+                F.unix_micros("ts")
+                - F.unix_micros(F.lag(F.col("ts")).over(w))
+                > 1800 * 1_000_000
             )
             | F.lag(F.col("ts")).over(w).isNull(),
             1,

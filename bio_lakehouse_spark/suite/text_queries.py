@@ -631,8 +631,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     components problem — solved distributed via iterative min-label
     propagation (operators/graph.py: one join + min-agg per round,
     rounds = diameter ≈ 3 for dup clusters, localCheckpoint per
-    round). The oracle computes the same closure with a recursive
-    CTE over the brute-force pair scan. Output: every clustered doc
+    round with the changed-count observed inside it). The oracle
+    computes the same closure with a recursive CTE over the
+    brute-force pair scan. Output: every clustered doc
     with its canonical (min-id) cluster and cluster size — the table
     a pipeline keeps one representative per cluster_id from."""
     docs = load(spark, sf_dir, "documents")
@@ -1751,11 +1752,6 @@ FROM feat
     )
 
 
-@register(
-    "curation_pipeline_full",
-    survey=("F6", "F7", "A11", "J6", "P5"),
-    oracle=_curation_full_oracle(),
-)
 def _curation_verdicts(
     spark: SparkSession, sf_dir: str, carry_source_tok: bool = False
 ) -> DataFrame:
@@ -1864,6 +1860,11 @@ def _curation_verdicts(
     )
 
 
+@register(
+    "curation_pipeline_full",
+    survey=("F6", "F7", "A11", "J6", "P5"),
+    oracle=_curation_full_oracle(),
+)
 def curation_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE training-data curation chain as one per-document
     verdict frame over the training slice (doc_id ≥ 20; doc_id < 20

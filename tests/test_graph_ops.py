@@ -111,17 +111,21 @@ def test_neighbor_jaccard_hub_cap_drops_hub_centers(graph):
     assert any(p not in capped for p in only_hub) or not only_hub
 
 
+def _bipartite_edges(n_h=12, n_a=9):
+    rng = np.random.default_rng(11)
+    return sorted(
+        {(int(rng.integers(n_h)), 100 + int(rng.integers(n_a)))
+         for _ in range(60)}
+    )
+
+
 def test_hits_matches_numpy_power_iteration(spark):
     """HITS on a random bipartite graph vs the numpy mutual power
     iteration (same L2 normalization, same iteration count)."""
     from bio_lakehouse_spark.operators.graph import hits
 
-    rng = np.random.default_rng(11)
     n_h, n_a = 12, 9
-    edges = sorted(
-        {(int(rng.integers(n_h)), 100 + int(rng.integers(n_a)))
-         for _ in range(60)}
-    )
+    edges = _bipartite_edges(n_h, n_a)
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         (r["role"], r["v"]): r["score"]
@@ -143,6 +147,22 @@ def test_hits_matches_numpy_power_iteration(spark):
         assert abs(got[("hub", i)] - h[i]) < 1e-9
     for d in auth_nodes:
         assert abs(got[("auth", d)] - a[d - 100]) < 1e-9
+
+
+def test_iterative_graph_jobs_per_round(spark, count_jobs):
+    """The loop scalars (pagerank's dangling mass, the HITS norms) are
+    observed inside each round's checkpoint job, so a pagerank
+    iteration costs 3 Spark jobs and a HITS half-round 5."""
+    from bio_lakehouse_spark.operators.graph import hits, pagerank
+
+    df = spark.createDataFrame(_bipartite_edges(), "src long, dst long")
+    sym = df.union(df.select("dst", "src"))
+
+    def jobs(op, g, iters):
+        return count_jobs(lambda: op(g, iters=iters))
+
+    assert jobs(pagerank, sym, 3) - jobs(pagerank, sym, 1) <= 6
+    assert jobs(hits, df, 3) - jobs(hits, df, 1) <= 20
 
 
 # -- r11 edge-hunt: degenerate-input contracts -------------------------------

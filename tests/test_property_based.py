@@ -536,6 +536,22 @@ def test_pagerank_mass_and_dangling(spark):
     assert rows[3] > rows[1] > rows[2]  # 2 in-links > 1 > 0-ish
     assert min(rows.values()) > 0.15 / 4 - 1e-12  # teleport floor
 
+    # Every rank against a numpy power iteration: node 3's rank is the
+    # (nonzero) dangling mass the operator observes each round.
+    ids = [1, 2, 3, 4]
+    out = {1: [3], 2: [3], 3: [], 4: [1]}
+    r = np.full(4, 1 / 4)
+    for _ in range(5):
+        insum = np.zeros(4)
+        for s, dsts in out.items():
+            for d in dsts:
+                insum[ids.index(d)] += r[ids.index(s)] / len(dsts)
+        dng = sum(r[ids.index(s)] for s, dsts in out.items() if not dsts)
+        assert dng > 0
+        r = 0.15 / 4 + 0.85 * (insum + dng / 4)
+    for i, v in enumerate(ids):
+        assert abs(rows[v] - r[i]) < 1e-12
+
 
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])

@@ -126,20 +126,46 @@ def test_hash_unit_is_uniform(docs):
     assert abs(m - 0.5) < 5 * (1 / 12) ** 0.5 / 500**0.5
 
 
+# Chain 1-2-3-4 (diameter 3), triangle 10-11-12, pair 20-21.
+CHAIN_CLIQUE_PAIR = [
+    (1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)
+]
+
+
 def test_connected_components_chain_and_clique(spark):
     """Chain 1-2-3-4 (diameter 3), triangle 10-11-12, pair 20-21:
     labels converge to min-id per component regardless of shape."""
     from bio_lakehouse_spark.operators.graph import connected_components
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
-        "src long, dst long",
-    )
+    edges = spark.createDataFrame(CHAIN_CLIQUE_PAIR, "src long, dst long")
     got = {
         r.node: r.component
         for r in connected_components(edges).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def test_connected_components_stops_on_observed_count(spark, count_jobs):
+    """The chain needs 3 label-moving rounds; the 4th changes nothing,
+    and its checkpoint's observed changed-count (no extra job) stops
+    the loop, so max_iter=20 runs exactly the jobs of max_iter=4."""
+    from bio_lakehouse_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(CHAIN_CLIQUE_PAIR, "src long, dst long")
+    early = {
+        r.node: r.component
+        for r in connected_components(edges, max_iter=2).collect()
+    }
+    assert early[4] == 2  # round 3 still had a label to move
+
+    def jobs(max_iter):
+        return count_jobs(
+            lambda: connected_components(edges, max_iter=max_iter)
+        )
+
+    j3, j4, j20 = jobs(3), jobs(4), jobs(20)
+    assert j20 == j4 > j3
+    assert j4 - j3 <= 6
 
 
 def test_temperature_mixture_flattens_sources(docs):

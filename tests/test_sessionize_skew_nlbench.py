@@ -16,6 +16,58 @@ BIO_ROOT = "/root/repo/.fixtures/bio"
 EVENT_SCHEMA = "event_id long, ts string, user_id long, event_type string, value double"
 
 
+# -- batch sessionization: the 30-minute gap at microsecond precision -------
+
+
+def test_sessionize_gap30_splits_subsecond_gap_over_limit(spark, tmp_path):
+    """A gap of 1800.5 s exceeds 30 minutes and starts a new session;
+    a gap of exactly 1800 s does not. Gaps compared in whole seconds
+    merged the first; the query must match its DuckDB oracle here."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bio_lakehouse_spark.suite import REGISTRY
+    from tests.oracle_harness import compare
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 7, 179575)
+    gap = dt.timedelta(seconds=1800)
+    rows = [  # (event_id, ts, user_id)
+        (0, t0, 1),
+        (1, t0 + gap + dt.timedelta(microseconds=500_000), 1),
+        (2, t0, 2),
+        (3, t0 + gap, 2),
+    ]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": ["click"] * len(rows),
+            "value": [1.0] * len(rows),
+            "props": ["{}"] * len(rows),
+        }),
+        tmp_path / "events.parquet",
+    )
+    spec = REGISTRY["sessionize_gap30"]
+    got = spec.fn(spark, str(tmp_path)).toPandas()
+    assert dict(zip(got["user_id"], got["n_sessions"])) == {1: 2, 2: 1}
+
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/events.parquet')"
+        )
+        want = con.execute(spec.oracle).fetchdf()
+    finally:
+        con.close()
+    assert not compare(got, want, strict=True)
+
+
 # -- stateful streaming sessionization --------------------------------------
 
 

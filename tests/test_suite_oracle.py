@@ -37,6 +37,17 @@ def test_query_matches_oracle(name, spark, sf_dir):
     assert not problems, f"{name}: {problems}"
 
 
+def test_registry_entry_is_the_public_wrapper():
+    """The registry keeps the function registered under a name and
+    its doc; curation_pipeline_full must be the public wrapper, not
+    the shared verdict helper it calls."""
+    from bio_lakehouse_spark.suite import text_queries
+
+    spec = REGISTRY["curation_pipeline_full"]
+    assert spec.fn is text_queries.curation_pipeline_full
+    assert spec.doc == text_queries.curation_pipeline_full.__doc__.strip()
+
+
 def test_simhash64_halves_consistent(spark, sf_dir):
     """simhash64's HI half must equal simhash32 (same top-bit votes),
     and banded candidates must be a superset-exact match of the
