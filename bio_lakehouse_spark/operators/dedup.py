@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bio_lakehouse_spark.operators.joins import explode_pairs
+from bio_lakehouse_spark.operators.skew import spread
 from bio_lakehouse_spark.operators.textops import word_ngrams, words
 
 DEFAULT_NUM_HASHES = 16
@@ -55,18 +57,11 @@ def exact_dedup_groups(
 def shingle_sets(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """(id, shingles) — distinct word n-gram sets.
-
-    Small corpora arrive as a single parquet split (one task — the
-    whole shingle pipeline would run on one core); spread the rows to
-    the cluster's parallelism first. The shuffle moves only raw text
-    (cheap); at real scale the input already has enough splits and
-    this widens nothing."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, id_col)
-    return df.select(
+    """(id, shingles) — distinct word n-gram sets. The input is
+    spread first (``skew.spread``) so a single-split corpus does not
+    run the whole shingle pipeline on one core; the shuffle moves
+    only raw text."""
+    return spread(df, id_col).select(
         F.col(id_col).alias("doc_id"),
         word_ngrams(words(text_col), n).alias("shingles"),
     )
@@ -76,6 +71,10 @@ def _jaccard(a, b):
     return F.size(F.array_intersect(a, b)).cast("double") / F.size(
         F.array_union(a, b)
     )
+
+
+def _doc_pair(a: Column, b: Column) -> list[Column]:
+    return [a.alias("doc_a"), b.alias("doc_b")]
 
 
 def ngram_jaccard_pairs(
@@ -171,14 +170,9 @@ def minhash_signatures_raw(
     sig = let(
         words(text_col), lambda w: let(word_ngram_stream(w, n), mins)
     )
-    # Small corpora arrive as one parquet split — spread rows so the
-    # per-row signature work uses every core (moves only raw text; at
-    # real scale the input already has enough splits → no-op).
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, id_col)
-    return df.select(
+    # Spread so the per-row signature work uses every core (moves
+    # only raw text).
+    return spread(df, id_col).select(
         F.col(id_col).alias("doc_id"), sig.alias("_sig")
     ).select(
         "doc_id",
@@ -276,28 +270,16 @@ def minhash_lsh_pairs(
             .filter(F.col("size") > 1)
             .withColumn("dropped", F.col("size") > max_bucket_size)
         )
-    cand = (
+    buckets = (
         sized.filter(
             (F.col("bsize") > 1) & (F.col("bsize") <= max_bucket_size)
         )
         .groupBy("band", "value")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size("ids")),
-                            lambda b: F.struct(
-                                a.alias("doc_a"), b.alias("doc_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .groupBy("p.doc_a", "p.doc_b")
+    )
+    cand = (
+        explode_pairs(buckets, "ids", _doc_pair)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))
         .filter(F.col("n_bands") >= min_band_matches)
         .select("doc_a", "doc_b")
@@ -866,30 +848,14 @@ def simhash_pairs_banded(
             .filter(F.col("size") > max_bucket_size)
             .withColumn("dropped", F.lit(True))
         )
-    cand = (
+    buckets = (
         sized.filter(
             (F.col("bsize") > 1) & (F.col("bsize") <= max_bucket_size)
         )
         .groupBy(*bucket_key)
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size("ids")),
-                            lambda b: F.struct(
-                                a.alias("doc_a"), b.alias("doc_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
     )
+    cand = explode_pairs(buckets, "ids", _doc_pair).distinct()
     hamming = F.bit_count(
         F.col("hi_a").bitwiseXOR(F.col("hi_b"))
     ) + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
@@ -1061,12 +1027,9 @@ def repeated_window_flags(
     """
     from bio_lakehouse_spark.operators.textops import let
 
-    # Small corpora arrive as one parquet split — spread rows so both
-    # gram passes (frequency build + flag join) use every core; at
-    # real scale the input already has enough splits → no-op.
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism, id_col)
+    # Spread so both gram passes (frequency build + flag join) use
+    # every core.
+    df = spread(df, id_col)
 
     # Window strings via ONE slice+array_join per position instead of
     # `window` element_at calls (HOF lambdas are interpreted — 16

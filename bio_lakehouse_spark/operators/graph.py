@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from bio_lakehouse_spark.operators.joins import explode_pairs
+
 
 def _checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     """Eagerly ``localCheckpoint`` ``df`` and return it with the named
@@ -232,35 +234,21 @@ def triangle_stats(
         )
         .select("e.u", "e.v")
     )
-    # r14: wedges by ONE aggregation on the center node instead of the
+    # Wedges by ONE aggregation on the center node instead of the
     # o1 ⋈ o2 self-join (the minhash_lsh_pairs bucket trick, guide
     # §2.4): a self-join evaluates the oriented-edge lineage twice and
-    # shuffles both sides; groupBy(u) scans it once — which also lets
-    # the r13 |edges|-sized `oriented` localCheckpoint go entirely
-    # (one less corpus-scale materialization, VERDICT r13 #3/#5). The
-    # per-center out-neighbor list is O(√m) under this orientation, so
+    # shuffles both sides; groupBy(u) scans it once, and no
+    # |edges|-sized `oriented` checkpoint is needed. The per-center
+    # out-neighbor list is O(√m) under this orientation, so
     # collect_list is bounded exactly where the self-join fan-out was.
     # sort_array makes pairs (vs[i], vs[j] with j > i) satisfy
     # v1 < v2 — the same pair set the o1.v < o2.v filter produced.
-    wedge_pairs = (
-        oriented.groupBy("u")
-        .agg(F.sort_array(F.collect_list("v")).alias("vs"))
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("vs"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("vs"), i + 2, F.size("vs")),
-                            lambda b: F.struct(
-                                a.alias("x"), b.alias("y")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.x", "p.y")
+    wedge_pairs = explode_pairs(
+        oriented.groupBy("u").agg(
+            F.sort_array(F.collect_list("v")).alias("vs")
+        ),
+        "vs",
+        lambda a, b: [a.alias("x"), b.alias("y")],
     )
     closing = canon.select(
         F.col("a").alias("x"), F.col("b").alias("y")
@@ -337,7 +325,7 @@ def neighbor_jaccard_topk(
         canon.select(F.col("b").alias("node"), F.col("a").alias("nb"))
     )
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-    # r14: leaf degrees ride the adjacency rows INTO the pair
+    # Leaf degrees ride the adjacency rows INTO the pair
     # expansion (one keyed join before the center groupBy) instead of
     # two |nodes|-sized broadcast joins on the pair table afterwards.
     # With that, deg has ONE consumer (two when max_degree caps), so
@@ -354,51 +342,36 @@ def neighbor_jaccard_topk(
     centers_d = centers.join(
         deg.select(F.col("node").alias("leaf"), "d"), "leaf"
     )
-    # r14: common-neighbor pairs by ONE aggregation on the center
-    # instead of the l1 ⋈ l2 self-join (guide §2.4, the
-    # minhash_lsh_pairs bucket trick — also applied to triangle_stats
-    # this round): the self-join evaluated the adjacency lineage twice
-    # and shuffled both sides; groupBy(c) scans it once. sort_array
-    # over (leaf, d) structs orders by leaf first, so in-array pairs
-    # (ls[i], ls[j>i]) are exactly the l1.leaf < l2.leaf pair set;
-    # leaves are distinct per center by construction (canon is a
-    # distinct edge set). Per-center fan-out is deg(c)² either way —
-    # max_degree caps it HERE, before the lists ever materialize,
-    # same as it capped the join.
-    pairs = (
-        centers_d.groupBy("c")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("leaf", "d"))
-            ).alias("ls")
-        )
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ls"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("ls"), i + 2, F.size("ls")),
-                            lambda b: F.struct(
-                                a["leaf"].alias("s1"),
-                                a["d"].alias("d1"),
-                                b["leaf"].alias("s2"),
-                                b["d"].alias("d2"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+    # Common-neighbor pairs by ONE aggregation on the center instead
+    # of the l1 ⋈ l2 self-join (guide §2.4, the minhash_lsh_pairs
+    # bucket trick, as in triangle_stats): the self-join evaluated the
+    # adjacency lineage twice and shuffled both sides; groupBy(c)
+    # scans it once. sort_array over (leaf, d) structs orders by leaf
+    # first, so in-array pairs (ls[i], ls[j>i]) are exactly the
+    # l1.leaf < l2.leaf pair set; leaves are distinct per center by
+    # construction (canon is a distinct edge set). Per-center fan-out
+    # is deg(c)² either way — max_degree caps it HERE, before the
+    # lists ever materialize, same as it capped the join.
+    pairs = explode_pairs(
+        centers_d.groupBy("c").agg(
+            F.sort_array(F.collect_list(F.struct("leaf", "d"))).alias("ls")
+        ),
+        "ls",
+        lambda a, b: [
+            a["leaf"].alias("s1"),
+            a["d"].alias("d1"),
+            b["leaf"].alias("s2"),
+            b["d"].alias("d2"),
+        ],
     )
     # d1/d2 are functionally dependent on s1/s2 (every occurrence of
     # a pair carries that node's one degree) — max() just reads it.
     scored = (
-        pairs.groupBy(F.col("p.s1").alias("s1"), F.col("p.s2").alias("s2"))
+        pairs.groupBy("s1", "s2")
         .agg(
             F.count(F.lit(1)).alias("common"),
-            F.max("p.d1").alias("d1"),
-            F.max("p.d2").alias("d2"),
+            F.max("d1").alias("d1"),
+            F.max("d2").alias("d2"),
         )
         .select(
             "s1",

@@ -14,10 +14,10 @@ fact-fact joins shuffle on the key and AQE handles skew.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -376,3 +376,28 @@ def bloom_prune(
         c = word.bitwiseAND(mask) == mask
         cond = c if cond is None else (cond & c)
     return aug.filter(cond).drop("__bloom", *bit_cols)
+
+
+def explode_pairs(
+    df: DataFrame,
+    arr: str,
+    make: Callable[[Column, Column], Sequence[Column]],
+) -> DataFrame:
+    """All (arr[i], arr[j]) pairs with i < j of each row's array, one
+    output row per pair carrying the columns ``make(a, b)`` returns.
+    This is the in-bucket candidate-pair step that replaces a bucket
+    self-join: one aggregation collects each bucket's members, and the
+    pairs are expanded in-array instead of evaluating and shuffling
+    the bucket lineage twice. Callers sort the array upstream when
+    they need a < b.
+
+    The expansion runs in two levels — ``posexplode(arr)``, then
+    ``explode(slice(arr, i+2, size-i-1))`` — so no row ever holds more
+    than one copy of ``arr``; a bucket's whole C(n,2) pair array is
+    never built as one row value. NULL, empty and one-element arrays
+    yield no rows."""
+    elems = df.select(F.posexplode(arr).alias("__i", "__a"), arr)
+    tail = F.slice(arr, F.col("__i") + 2, F.size(arr) - F.col("__i") - 1)
+    return elems.select("__a", F.explode(tail).alias("__b")).select(
+        *make(F.col("__a"), F.col("__b"))
+    )

@@ -25,27 +25,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bio_lakehouse_spark.operators.skew import spread
+
 DECODED_SCHEMA = (
     "doc_id long, media_type string, n_bytes long, content_md5 string, "
     "width int, height int, n_channels int, feature_vec array<float>"
 )
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Spread a narrow input to the session's parallelism before the
-    Python stage (guide §2.5 input skew / §2.6): small corpora — and
-    any single unsplittable media container — arrive as ONE split, so
-    the whole mapInPandas decode/expansion used to run as a single
-    Python task (the r14 event-log profile showed
-    multimodal_audio_chunks executing 5 000 docs' md5+chunk expansion
-    in exactly 1 task on a 32-core session). Deterministic key-hash
-    repartition (never round-robin: retried map tasks must reproduce
-    the same row→partition assignment, SPARK-38388); no-op when the
-    source already has enough splits, which is the 100 TB case."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, key)
-    return df
 
 
 class Decoder:
@@ -109,7 +94,7 @@ def decode_batches(
     """mapInPandas decode: Arrow ships (id, content, media_type)
     batches to Python; the decoder runs per record within a batch —
     vectorized transfer, library-friendly loop. The input is spread
-    to the session's parallelism first (``_spread``); batch size is
+    to the session's parallelism first (``skew.spread``); batch size is
     capped by ``spark.sql.execution.arrow.maxRecordsPerBatch``, and a
     caller with very large media cells can additionally
     ``repartitionByRange(n, id_col)`` to bound per-task bytes."""
@@ -142,7 +127,7 @@ def decode_batches(
             yield pd.DataFrame(out)
 
     cols = [id_col, "content", "media_type", "n_bytes", "content_md5"]
-    return _spread(df.select(cols), id_col).mapInPandas(
+    return spread(df.select(cols), id_col).mapInPandas(
         run, schema=DECODED_SCHEMA
     )
 
@@ -222,7 +207,7 @@ def frame_sample_batches(
                 columns=[id_col, "duration_s", "frame_idx", "t_offset_s"],
             )
 
-    return _spread(df.select(id_col, content_col), id_col).mapInPandas(
+    return spread(df.select(id_col, content_col), id_col).mapInPandas(
         gen, schema
     )
 
@@ -293,7 +278,7 @@ def audio_chunk_batches(
                 ],
             )
 
-    return _spread(df.select(id_col, content_col), id_col).mapInPandas(
+    return spread(df.select(id_col, content_col), id_col).mapInPandas(
         gen, schema
     )
 

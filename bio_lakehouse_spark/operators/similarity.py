@@ -27,15 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Small corpora arrive as one parquet split — one task would
-    compute every norm/dot single-threaded. Spread to the session's
-    parallelism; no-op when the input already has enough splits."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, key)
-    return df
+from bio_lakehouse_spark.operators.skew import spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -88,7 +80,7 @@ def cosine_topk(
         F.col(vec_col).alias("q_vec"),
         norm(F.col(vec_col)).alias("q_norm"),
     )
-    c = _spread(corpus, id_col).select(
+    c = spread(corpus, id_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         norm(F.col(vec_col)).alias("c_norm"),
@@ -134,7 +126,7 @@ def embedding_neardup_pairs(
     ]
     if block_col:
         cols.append(F.col(block_col).alias("block"))
-    v = _spread(df, id_col).select(*cols)
+    v = spread(df, id_col).select(*cols)
     a, b = v.alias("a"), v.alias("b")
     cond = F.col("a.vid") < F.col("b.vid")
     if block_col:
@@ -181,7 +173,7 @@ def assign_cells(
         F.col(vec_col).alias("cent_vec"),
         norm(F.col(vec_col)).alias("cent_norm"),
     )
-    scored = _spread(corpus, id_col).withColumn(
+    scored = spread(corpus, id_col).withColumn(
         "_vnorm", norm(F.col(vec_col))
     ).crossJoin(
         F.broadcast(cent)
@@ -481,7 +473,7 @@ def kmeans_lloyd(
     is deterministic (first k by id), so the result is reproducible.
     Returns (centroid_id, centroid array<double>, n_members).
     """
-    v = _spread(corpus, id_col).select(
+    v = spread(corpus, id_col).select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
     )
     # Deterministic init: first k rows by id. Centroids live as a
@@ -603,7 +595,7 @@ def ivf_neardup_pairs(
         norm(F.col(vec_col)).alias("cent_norm"),
     )
     scored = (
-        _spread(corpus, id_col)
+        spread(corpus, id_col)
         .withColumn("_vnorm", norm(F.col(vec_col)))
         .crossJoin(F.broadcast(cent))
         .select(

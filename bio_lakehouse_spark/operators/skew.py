@@ -1,4 +1,5 @@
-"""Skew mitigation: key salting for aggregations and joins.
+"""Skew mitigation: input spreading, and key salting for aggregations
+and joins.
 
 AQE's skew-join splitting handles sort-merge join skew at runtime, but
 two shapes still need manual salting at 100 TB: (a) groupBy on a key
@@ -94,3 +95,33 @@ def salted_join(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
     return f.join(d, on=[on, "__salt"]).drop("__salt")
+
+
+def spread(df: DataFrame, key: str, barrier: bool = False) -> DataFrame:
+    """Spread an input that arrives as too few splits to the session's
+    parallelism. Small corpora (and any single unsplittable media
+    container) arrive as ONE parquet split, so an expression-heavy
+    scan, a hash/shingle stream or a mapInPandas decode would run as
+    one task on one core (an event-log profile showed
+    multimodal_audio_chunks expanding 5 000 docs in exactly 1 task on
+    a 32-core session). The repartition is a deterministic hash on
+    ``key``, never round-robin: retried map tasks must reproduce the
+    same row→partition assignment (SPARK-38388). An input that already
+    has ``defaultParallelism`` splits — the 100 TB case — is returned
+    unchanged, so the production plan is the same with or without it.
+
+    ``barrier=True`` additionally truncates lineage with a LAZY
+    localCheckpoint. Use it when Catalyst would otherwise push an
+    expensive derived filter/projection THROUGH the repartition back
+    into the single-split scan (filters commute with Repartition —
+    correct, and the right call on a real cluster, but it re-
+    single-threads exactly the work the spread exists to
+    parallelize) or when two consumers would each re-scan. Inside
+    the small-input branch only, so a multi-split production input
+    is never materialized."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        df = df.repartition(target, key)
+        if barrier:
+            df = df.localCheckpoint(eager=False)
+    return df

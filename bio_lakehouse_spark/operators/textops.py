@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from bio_lakehouse_spark.operators.skew import spread
+
 # Tiny deterministic stopword lists per language. Heuristic, not a
 # model: language with the highest stopword hit count wins, ties break
 # in STOPWORDS key order.
@@ -349,12 +351,9 @@ def repetition_profile(
     keyed on doc_id, and the row-wise side carries no arrays into the
     join (scalars only), so the join exchange is narrow.
     """
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        # Small-fixture spread (see nb_quality_classifier): both
-        # consumers of `base` would otherwise run as one task.
-        df = df.repartition(sc.defaultParallelism, id_col)
-    base = df.select(
+    # Spread: both consumers of `base` would otherwise run as one task
+    # on a single-split input.
+    base = spread(df, id_col).select(
         F.col(id_col).alias("doc_id"), words(text_col).alias("w")
     )
     rowwise = base.select(
@@ -543,13 +542,9 @@ def nb_quality_classifier(
     scoring is explode → broadcast join → one keyed aggregate.
     Returns (id, n_feat, nb_logodds).
     """
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        # Small fixtures arrive as ONE split; without this the whole
-        # explode+hash feature stream runs as a single task. No-op on
-        # real multi-split inputs.
-        df = df.repartition(sc.defaultParallelism, id_col)
-    feats = df.select(
+    # Spread: on a single-split input the whole explode+hash feature
+    # stream would run as one task.
+    feats = spread(df, id_col).select(
         F.col(id_col),
         F.col(label_col).cast("boolean").alias("__pos"),
         F.explode(hashed_ngram_features(text_col, dim)).alias("b"),
@@ -646,12 +641,8 @@ def dsir_importance(
     bucketize = feature_fn or (
         lambda c: hashed_ngram_features(c, dim)
     )
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        # Same small-fixture spread as nb_quality_classifier: the
-        # explode+hash stream must not run as one task.
-        df = df.repartition(sc.defaultParallelism, id_col)
-    feats = df.select(
+    # Spread: the explode+hash stream must not run as one task.
+    feats = spread(df, id_col).select(
         F.col(id_col),
         F.col(target_col).cast("boolean").alias("__t"),
         F.explode(bucketize(text_col)).alias("b"),

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bio_lakehouse_spark.operators.skew import spread
 from bio_lakehouse_spark.operators.stats import (
     acf,
     chi_square_independence,
@@ -557,7 +558,6 @@ def bootstrap_ci_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     B × partitions partial rows, never B × N.
     """
     from bio_lakehouse_spark.operators.sampling import hash_unit
-    from bio_lakehouse_spark.suite.registry import spread
 
     # Filter pushes to the scan (cheap, correct); the B-fold explode
     # + per-row md5 must NOT run in the fixture's single split.

@@ -150,29 +150,3 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             # preserved, identical to the scan-level path.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def spread(df: DataFrame, key: str, barrier: bool = False) -> DataFrame:
-    """Spread a small input to the session's parallelism — the suite
-    twin of dedup.shingle_sets'/similarity._spread's conditional
-    repartition. Small-SF fixtures arrive as ONE parquet split, so an
-    expression-heavy scan (entropy, quality metrics, LM scoring) runs
-    as one task on one core; at real scale the input already has
-    enough splits and this is a no-op, so the local fix costs nothing
-    at 100 TB.
-
-    ``barrier=True`` additionally truncates lineage with a LAZY
-    localCheckpoint. Use it when Catalyst would otherwise push an
-    expensive derived filter/projection THROUGH the repartition back
-    into the single-split scan (filters commute with Repartition —
-    correct, and the right call on a real cluster, but it re-
-    single-threads exactly the work the spread exists to
-    parallelize) or when two consumers would each re-scan. Inside
-    the small-fixture branch only, so a multi-split production input
-    is never materialized."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, key)
-        if barrier:
-            df = df.localCheckpoint(eager=False)
-    return df

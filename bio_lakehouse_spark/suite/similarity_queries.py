@@ -16,6 +16,7 @@ from bio_lakehouse_spark.operators.similarity import (
     embedding_neardup_pairs,
     ivf_topk,
 )
+from bio_lakehouse_spark.operators.skew import spread
 from bio_lakehouse_spark.operators.stats import safe_corr
 from bio_lakehouse_spark.suite.registry import REGISTRY, load, register
 
@@ -1798,8 +1799,6 @@ def pca_power_iteration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-split fixture → the 2080-structs-per-row explode below
     # would run as ONE task; spread to session parallelism first
     # (no-op on a multi-split production input)
-    from bio_lakehouse_spark.suite.registry import spread
-
     centered = spread(emb, "vec_id", barrier=True).crossJoin(mrow).select(
         F.expr(
             "zip_with(embedding, mean_arr,"

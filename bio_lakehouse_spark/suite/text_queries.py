@@ -18,6 +18,8 @@ from bio_lakehouse_spark.operators.dedup import (
     minhash_lsh_pairs,
     simhash32,
 )
+from bio_lakehouse_spark.operators.joins import explode_pairs
+from bio_lakehouse_spark.operators.skew import spread
 from bio_lakehouse_spark.operators.textops import (
     STOPWORDS,
     TOKEN_REGEX,
@@ -698,8 +700,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index-free score-everything form, which at 100 TB is the
     map-side rerank stage (a real search system materializes the
     postings; the scoring math is identical)."""
-    from bio_lakehouse_spark.suite.registry import spread
-
     # Single-split fixture → the tf scan would run (twice: stats +
     # scoring) as one task, and the any_tf>0 filter pushes straight
     # through a bare repartition back into that scan — barrier=True
@@ -1972,7 +1972,6 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     — inlining `ent` twice doubled the codegen'd expression and
     measured ~2× slower."""
     from bio_lakehouse_spark.operators.textops import char_entropy
-    from bio_lakehouse_spark.suite.registry import spread
 
     docs = spread(load(spark, sf_dir, "documents"), "doc_id")
     ent = F.round(char_entropy("text"), 6)
@@ -2243,7 +2242,6 @@ def crossdoc_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated_span_flags; the line-level one is dedup_frequent_lines.
     """
     from bio_lakehouse_spark.operators.textops import let, word_ngram_stream
-    from bio_lakehouse_spark.suite.registry import spread
 
     # Two consumers of the gram stream off a single-split fixture →
     # spread first (no-op on real inputs).
@@ -2356,7 +2354,6 @@ def inverted_index_topdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists are the output — naturally partitioned by term, which IS
     the serving layout."""
     from bio_lakehouse_spark.operators.textops import let
-    from bio_lakehouse_spark.suite.registry import spread
 
     docs = spread(load(spark, sf_dir, "documents"), "doc_id")
     pw = docs.select(
@@ -3198,29 +3195,11 @@ def cross_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("h").alias("tot")
     )
     pairs = (
-        fp.filter(F.size("srcs") >= 2)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("srcs"),
-                        lambda a, i: F.transform(
-                            F.slice(
-                                F.col("srcs"),
-                                i + 2,
-                                F.greatest(
-                                    F.size("srcs") - i - 1, F.lit(0)
-                                ),
-                            ),
-                            lambda b: F.struct(
-                                a.alias("source_a"), b.alias("source_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
+        explode_pairs(
+            fp.filter(F.size("srcs") >= 2),
+            "srcs",
+            lambda a, b: [a.alias("source_a"), b.alias("source_b")],
         )
-        .select("p.source_a", "p.source_b")
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )

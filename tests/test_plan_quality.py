@@ -386,6 +386,35 @@ def test_lsh_bucket_path_single_exchange_no_self_join(spark, sf_dir):
     assert n_bucket_exchanges == n_windows, plan
 
 
+def test_pair_callers_expand_without_flatten(spark, sf_dir):
+    """Every in-bucket pair expansion goes through joins.explode_pairs:
+    its two-level posexplode → explode must be in each caller's
+    optimized plan, and no flatten(transform(...)) that would build a
+    bucket's whole C(n,2) pair array as one row value."""
+    from bio_lakehouse_spark.operators.dedup import minhash_lsh_pairs
+    from bio_lakehouse_spark.suite.registry import load
+
+    frames = {
+        name: REGISTRY[name].fn(spark, sf_dir)
+        for name in (
+            "dedup_simhash_banded",
+            "graph_triangle_stats",
+            "graph_neighbor_jaccard",
+            "cross_source_overlap_matrix",
+        )
+    }
+    # The registry query checkpoints its candidates, which hides the
+    # expansion from the final plan; the un-checkpointed form keeps it.
+    frames["minhash_lsh_pairs"] = minhash_lsh_pairs(
+        load(spark, sf_dir, "documents"), "doc_id", "text",
+        eager_checkpoint=False,
+    )
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "posexplode(" in plan, f"{name}:\n{plan}"
+        assert "flatten(" not in plan, f"{name}:\n{plan}"
+
+
 def test_interval_overlap_join_is_hash_on_bins(spark, sf_dir):
     """The interval-overlap self-join must plan as a hash equi-join on
     the exploded bin key — never a nested-loop over the interval

@@ -1062,13 +1062,13 @@ def test_lsh_recall_audit_buckets_and_bounds(spark):
 
 
 def test_spread_is_noop_on_multi_split_inputs(spark):
-    """The 100 TB posture of registry.spread(): a production input
+    """The 100 TB posture of skew.spread(): a production input
     that already has >= defaultParallelism splits must pass through
     UNTOUCHED — same object, no repartition, no checkpoint — so the
     plan Catalyst sees at scale is identical with or without the
     local fixture fix. The small-input branch must repartition to
     exactly defaultParallelism (and only checkpoint when asked)."""
-    from bio_lakehouse_spark.suite.registry import spread
+    from bio_lakehouse_spark.operators.skew import spread
 
     par = spark.sparkContext.defaultParallelism
     big = spark.range(0, 10_000).repartition(par + 4, "id")
@@ -1083,6 +1083,61 @@ def test_spread_is_noop_on_multi_split_inputs(spark):
     outb = spread(small, "id", barrier=True)
     assert outb.rdd.getNumPartitions() == par
     assert sorted(r.id for r in outb.collect()) == list(range(100))
+
+
+_STRUCT_ELEMS = [(3, 1), (5, 4), (8, 2), (13, 7), (21, 3)]
+
+
+@pytest.mark.parametrize(
+    "arr",
+    [[], [7], [3, 9], [2, 4, 5, 11, 17, 30, 41], None, _STRUCT_ELEMS,
+     list(range(4000))],
+    ids=["empty", "one", "two", "seven", "null", "structs", "n4000"],
+)
+def test_explode_pairs_matches_combinations(spark, arr):
+    """joins.explode_pairs yields exactly itertools.combinations(arr, 2)
+    in array order: nothing for NULL/empty/one-element arrays, struct
+    elements field by field (the neighbor_jaccard (leaf, d) shape), and
+    C(4000,2) rows for a 4000-element bucket."""
+    import itertools
+    import math
+
+    from bio_lakehouse_spark.operators.joins import explode_pairs
+
+    if arr is _STRUCT_ELEMS:
+        df = spark.createDataFrame(
+            [(arr,)], "ls array<struct<leaf:bigint,d:bigint>>"
+        )
+        out = explode_pairs(df, "ls", lambda a, b: [
+            a["leaf"].alias("s1"), a["d"].alias("d1"),
+            b["leaf"].alias("s2"), b["d"].alias("d2"),
+        ])
+        got = sorted(tuple(r) for r in out.collect())
+        assert got == sorted(
+            (*a, *b) for a, b in itertools.combinations(arr, 2)
+        )
+        return
+    df = spark.createDataFrame([(arr,)], "ids array<bigint>")
+    out = explode_pairs(df, "ids", lambda a, b: [
+        a.alias("x"), b.alias("y"),
+    ])
+    if len(arr or []) < 100:
+        assert sorted(tuple(r) for r in out.collect()) == sorted(
+            itertools.combinations(arr or [], 2)
+        )
+        return
+    r = out.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.count_if(F.col("x") >= F.col("y")).alias("unordered"),
+    ).first()
+    n = sx = sy = 0
+    for a, b in itertools.combinations(arr, 2):
+        n, sx, sy = n + 1, sx + a, sy + b
+    assert r["n"] == n == math.comb(len(arr), 2)
+    assert (r["sx"], r["sy"]) == (sx, sy)
+    assert r["unordered"] == 0
 
 
 def test_ntile_rank_closed_form_matches_native_windows(spark):

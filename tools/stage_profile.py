@@ -7,6 +7,8 @@ pass with task counts and wall-clock — the "which stage is slow, and
 how many tasks did it actually get" data the Stages tab would show.
 
     python tools/stage_profile.py dedup_minhash_lsh [--sf DIR] [--cpus N]
+
+``--cpus`` defaults to $SPARK_GRAFT_CPUS, else the host's usable cores.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bio_lakehouse_spark.session import get_spark  # noqa: E402
 from bio_lakehouse_spark.suite import REGISTRY  # noqa: E402
 
-EVDIR = "/tmp/spark-events-r14"
+EVDIR = "/tmp/spark-events-stage-profile"
 
 
 def main() -> None:
@@ -31,7 +33,8 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))))
     ap.add_argument("--warm", type=int, default=1)
     args = ap.parse_args()
 
@@ -68,7 +71,10 @@ def main() -> None:
 
     spark.stop()  # flush the event log
 
-    ev = sorted(glob.glob(f"{EVDIR}/*"))[-1]
+    logs = sorted(glob.glob(f"{EVDIR}/*"))
+    if not logs:
+        sys.exit(f"no event log under {EVDIR}")
+    ev = logs[-1]
     if os.path.isdir(ev):  # rolling eventlog_v2 layout: events_* inside
         parts = sorted(glob.glob(f"{ev}/events_*"))
     else:
