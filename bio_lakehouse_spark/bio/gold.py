@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bio_lakehouse_spark.functions.dates import day_of_week_iso, safe_date
+from bio_lakehouse_spark.session import fan_out
 
 
 def _sorted_set(col: str) -> Column:
@@ -443,12 +444,16 @@ def build_gold(
     features = feature_readiness_daily(rollup)
     recovery = workout_recovery_windows(rollup)
     if gold_root:
-        features.write.mode("overwrite").parquet(
-            f"{gold_root}/feature_readiness_daily"
-        )
-        recovery.write.mode("overwrite").parquet(
-            f"{gold_root}/workout_recovery_windows"
-        )
+        # Both windows read the re-read rollup and write their own
+        # directory: independent jobs, run concurrently.
+        fan_out([
+            lambda: features.write.mode("overwrite").parquet(
+                f"{gold_root}/feature_readiness_daily"
+            ),
+            lambda: recovery.write.mode("overwrite").parquet(
+                f"{gold_root}/workout_recovery_windows"
+            ),
+        ])
     return {
         "gold_daily_rollup": rollup,
         "feature_readiness_daily": features,

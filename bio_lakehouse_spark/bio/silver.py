@@ -12,6 +12,7 @@ else is already DataFrame code in the reference.
 
 from __future__ import annotations
 
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from bio_lakehouse_spark.bio import schemas as S
 from bio_lakehouse_spark.functions.banding import map_lookup
 from bio_lakehouse_spark.operators.windows import forward_fill
+from bio_lakehouse_spark.session import fan_out
 from bio_lakehouse_spark.sources.csv_source import (
     read_header_grouped_csv,
     snake_case,
@@ -392,12 +394,19 @@ def run_silver(
     spark: SparkSession, bronze_root: str, silver_root: str
 ) -> dict[str, str]:
     """All nine normalizers → partitioned parquet. One Spark app
-    replaces the Lambda/Glue/crawler chain (SURVEY §3.2): the writes
-    are independent jobs sharing the session."""
-    out: dict[str, str] = {}
-    for table, fn in SILVER_TABLES.items():
-        df = fn(spark, bronze_root)
+    replaces the Lambda/Glue/crawler chain (SURVEY §3.2): each table
+    is read and written by its own jobs into its own directory, so the
+    nine normalize-and-write calls run concurrently through
+    ``fan_out``. The first failing table, in ``SILVER_TABLES`` order,
+    raises once all nine have finished."""
+
+    def normalize_and_write(table: str, fn) -> str:
         path = str(Path(silver_root) / table)
-        write_partitioned_parquet(df, path, ["year", "month"])
-        out[table] = path
-    return out
+        write_partitioned_parquet(fn(spark, bronze_root), path, ["year", "month"])
+        return path
+
+    paths = fan_out([
+        partial(normalize_and_write, table, fn)
+        for table, fn in SILVER_TABLES.items()
+    ])
+    return dict(zip(SILVER_TABLES, paths))

@@ -5,7 +5,7 @@ Port of the reference's AthenaClient + safety gate semantics onto
 ``spark.sql``:
 
 - **execute** (S8, ref insights_engine/core/athena_client.py:41-88):
-  md5(sql)-keyed result cache with a TTL (default 600 s, the
+  md5(sql)-keyed DataFrame cache with a TTL (default 600 s, the
   reference's 10 minutes), safety gate, optional query log.
 - **safety gate** (P9, ref insights_engine/core/nl_to_sql.py:177-191):
   only SELECT / WITH statements may execute — DDL/DML from an
@@ -17,10 +17,11 @@ Port of the reference's AthenaClient + safety gate semantics onto
   append-only parquet rows (sql, md5, started_at, duration_ms, rows,
   success, error) — the SQLite log as an engine table.
 
-The cache stores the materialized pandas result (like the reference,
-which caches fetched pages) — a cached hit costs zero Spark work. The
-DataFrame handle is also kept for callers that want to keep composing
-lazily.
+The cache stores the DataFrame handle and its row count, not the
+fetched rows. A hit still passes the safety gate, then skips
+``spark.sql``, the count job and the log write; a caller that fetches
+the hit (``toPandas()``, ``collect()``) runs the query again, one job
+per fetch. Callers may keep composing on the handle lazily.
 """
 
 from __future__ import annotations
@@ -138,17 +139,18 @@ class QueryEngine:
     # -- S9 -----------------------------------------------------------------
     def get_schema(self) -> dict[str, list[tuple[str, str]]]:
         """{table: [(column, spark_type)]} across current-catalog
-        tables/views, cached for the engine's lifetime."""
+        tables/views, cached for the engine's lifetime. Column types
+        come from each table's resolved schema, which runs no Spark
+        job; ``catalog.listColumns`` runs several per table and renders
+        the same type strings."""
         if self._schema_cache is None:
             out: dict[str, list[tuple[str, str]]] = {}
             for t in self.spark.catalog.listTables():
-                # qualified-name form: the dbName= kwarg is deprecated
-                # since Spark 3.4
                 qual = (
                     f"{t.namespace[0]}.{t.name}" if t.namespace else t.name
                 )
-                cols = self.spark.catalog.listColumns(qual)
-                out[t.name] = [(c.name, c.dataType) for c in cols]
+                fields = self.spark.table(qual).schema.fields
+                out[t.name] = [(f.name, f.dataType.simpleString()) for f in fields]
             self._schema_cache = out
         return self._schema_cache
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bio_lakehouse_spark.products.numerics import linregress
+from bio_lakehouse_spark.session import fan_out
 
 
 def ema_exact_series(s: pd.Series, span: int) -> pd.Series:
@@ -1393,7 +1394,8 @@ def _stats_table(stats: dict) -> str:
 
 class WeeklyReportGenerator:
     """S17 (ref reports/weekly_report.py:121-456): fan across the
-    analyzers sequentially, render Jinja2 HTML with embedded plotly
+    analyzers concurrently (``session.fan_out``; results stay in
+    analyzer order), render Jinja2 HTML with embedded plotly
     figure JSON (products.render — the reference's weekly.html
     equivalent, with browser-side plotly.js standing in for the
     reference's server-side PNG export), deliver to a file sink.
@@ -1403,7 +1405,7 @@ class WeeklyReportGenerator:
         self.analyzers = analyzers
 
     def generate(self, week_label: str) -> tuple[str, list[InsightResult]]:
-        results = [a.analyze() for a in self.analyzers]
+        results = fan_out([a.analyze for a in self.analyzers])
         # Only the render-module IMPORT may degrade to the plain-text
         # fallback (render raises RuntimeError solely when jinja2 is
         # absent, re-raised here as the same signal). Exceptions from

@@ -11,8 +11,14 @@ the per-query code never assumes local mode.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 _DEFAULTS: dict[str, str] = {
     # Runtime re-planning: coalesce small shuffle partitions, split skewed
@@ -131,3 +137,37 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def fan_out(fns: Sequence[Callable[[], _T]]) -> list[_T]:
+    """Run independent zero-argument calls at the same time and return
+    their results in submission order.
+
+    Spark's scheduler accepts jobs from many threads at once, so
+    independent jobs (writes to distinct directories, actions over
+    shared inputs) overlap their planning, scheduling and commit
+    instead of queueing one behind the other. Each call runs on a
+    worker thread that carries the caller's local properties (job
+    group, job description, scheduler pool) and active session. A call
+    must not mutate session-wide state such as a SQL conf: the other
+    calls would see it. Every call finishes before this returns; the
+    first failure in submission order is then re-raised."""
+    if not fns:
+        return []
+    spark = SparkSession.active()
+    jsession = spark._jsparkSession
+
+    def task(fn: Callable[[], _T]) -> Callable[[], _T]:
+        def run() -> _T:
+            spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(jsession)
+            return fn()
+
+        # Wrapping here, in the caller's thread, snapshots its local
+        # properties; one snapshot per call, so a call that sets its
+        # own job group does not change its siblings'.
+        return inheritable_thread_target(spark)(run)
+
+    workers = min(len(fns), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(task(fn)) for fn in fns]
+    return [f.result() for f in futures]

@@ -113,7 +113,12 @@ def _no_partition_inference(spark: SparkSession):
     the old set-and-leave silently changed partition typing for all
     subsequent unrelated reads on externally built sessions). Safe to
     restore immediately after ``spark.read...`` returns: the scan's
-    partition schema is resolved eagerly at DataFrame creation."""
+    partition schema is resolved eagerly at DataFrame creation.
+
+    The conf it pins is session-wide, not per-thread, so a call run by
+    ``session.fan_out`` must not enter it (nor ``read_partitioned_parquet``
+    or ``read_table_format``): a sibling call would read under the pinned
+    value, and the two restores can interleave."""
     import contextlib
 
     @contextlib.contextmanager

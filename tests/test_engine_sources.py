@@ -23,6 +23,8 @@ from bio_lakehouse_spark.sources.csv_source import (
 )
 from bio_lakehouse_spark.sources.files import latest_file, list_files
 
+BIO_ROOT = Path(__file__).resolve().parents[1] / ".fixtures" / "bio"
+
 
 # -- P9 gate ----------------------------------------------------------------
 
@@ -82,22 +84,59 @@ def test_facade_cache_hit_and_ttl(spark):
     eng = QueryEngine(spark, cache_ttl_s=60.0)
     a = eng.execute("SELECT 41 + 1 AS x")
     b = eng.execute("SELECT 41 + 1 AS x")
-    assert a is b  # identical handle → cache hit, zero Spark work
+    assert a is b  # identical handle → cache hit, no count job; a fetch re-runs
     eng.cache_ttl_s = 0.0
     c = eng.execute("SELECT 41 + 1 AS x")
     assert c is not b  # expired → re-executed
     assert c.collect()[0]["x"] == 42
 
 
-def test_facade_schema_ddl(spark):
+@pytest.fixture(scope="module")
+def bio_views(spark, tmp_path_factory):
+    """The 12 views a refresh publishes for the facade, over silver
+    built from the fixture bronze."""
+    from bio_lakehouse_spark.bio.fixtures import generate_bronze
+    from bio_lakehouse_spark.bio.gold import build_gold, stg_sleep
+    from bio_lakehouse_spark.bio.silver import run_silver
+    from bio_lakehouse_spark.bio.views import register_views
+
+    silver = str(tmp_path_factory.mktemp("silver"))
+    run_silver(spark, str(generate_bronze(BIO_ROOT / "bronze")), silver)
+    gold = build_gold(spark, silver)["gold_daily_rollup"]
+    return register_views(
+        spark, gold, stg_sleep(spark.read.parquet(f"{silver}/oura_daily_sleep"))
+    )
+
+
+def test_facade_schema_ddl(spark, bio_views):
     spark.range(3).selectExpr("id AS k", "CAST(id AS STRING) AS v""").createOrReplaceTempView(
         "ddl_probe"
     )
+    spark.sql(
+        "SELECT array(1, 2) AS arr,"
+        " named_struct('x', 1, 'y', array(named_struct('k', 1.5D))) AS st,"
+        " CAST(1.25 AS DECIMAL(10, 2)) AS dec"
+    ).createOrReplaceTempView("ddl_probe_nested")
     eng = QueryEngine(spark)
     schema = eng.get_schema()
     assert ("k", "bigint") in schema["ddl_probe"]
+    assert schema["ddl_probe_nested"] == [
+        ("arr", "array<int>"),
+        ("st", "struct<x:int,y:array<struct<k:double>>>"),
+        ("dec", "decimal(10,2)"),
+    ]
+    # get_schema reads resolved schemas; its type strings are listColumns'.
+    for name in [*bio_views, "ddl_probe", "ddl_probe_nested"]:
+        assert schema[name] == [
+            (c.name, c.dataType) for c in spark.catalog.listColumns(name)
+        ], name
     ddl = eng.get_schema_ddl()
     assert "CREATE TABLE ddl_probe" in ddl and "v string" in ddl
+
+
+def test_facade_schema_runs_no_column_jobs(spark, bio_views, count_jobs):
+    tables = count_jobs(spark.catalog.listTables)
+    assert count_jobs(QueryEngine(spark).get_schema) <= tables
 
 
 def test_facade_query_log(spark, tmp_path):

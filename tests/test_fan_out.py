@@ -1,0 +1,147 @@
+"""``session.fan_out`` and the refresh stages that run through it: the
+nine silver writes and the two gold window writes must write what a
+one-at-a-time loop writes, with the same number of Spark jobs."""
+
+from __future__ import annotations
+
+import threading
+from functools import partial
+from pathlib import Path
+
+import pytest
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from bio_lakehouse_spark.session import fan_out
+
+BIO_ROOT = Path(__file__).resolve().parents[1] / ".fixtures" / "bio"
+
+# Jobs the one-at-a-time loops ran on the fixture bronze before the
+# stages fanned out; overlapping the jobs must not add or drop any.
+SILVER_JOBS = 28
+GOLD_JOBS = 30
+
+
+def _order(spark, count_jobs):
+    # Call i waits for call i+1 to finish, so they finish in reverse.
+    n = 4
+    finished = [threading.Event() for _ in range(n + 1)]
+    finished[n].set()
+    order: list[int] = []
+
+    def call(i: int) -> int:
+        assert finished[i + 1].wait(timeout=60)
+        order.append(i)
+        finished[i].set()
+        return 10 * i
+
+    assert fan_out([partial(call, i) for i in range(n)]) == [0, 10, 20, 30]
+    assert order == [3, 2, 1, 0]
+
+
+def _empty(spark, count_jobs):
+    assert fan_out([]) == []
+
+
+def _failure(spark, count_jobs):
+    # The later call fails first in time; the earlier one's error wins.
+    later_failed = threading.Event()
+    ran: list[str] = []
+
+    def first():
+        assert later_failed.wait(timeout=60)
+        raise KeyError("first")
+
+    def later():
+        later_failed.set()
+        raise ValueError("later")
+
+    with pytest.raises(KeyError, match="first"):
+        fan_out([lambda: ran.append("ok"), first, later])
+    assert ran == ["ok"]
+
+
+def _job_group(spark, count_jobs):
+    groups: list[str] = []
+    sc = spark.sparkContext
+
+    def job() -> int:
+        groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return spark.range(10).count()
+
+    one = count_jobs(job)
+    assert count_jobs(lambda: fan_out([job, job, job])) == 3 * one > 0
+    # every worker call saw the group count_jobs set around fan_out
+    assert len(set(groups[1:])) == 1 and groups[1] != groups[0]
+
+
+def _active_session(spark, count_jobs):
+    def active():
+        return SparkSession.getActiveSession()._jsparkSession
+
+    assert all(s.equals(spark._jsparkSession)
+               for s in fan_out([active, active]))
+
+
+@pytest.mark.parametrize(
+    "case", [_order, _empty, _failure, _job_group, _active_session],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_fan_out(spark, count_jobs, case):
+    case(spark, count_jobs)
+
+
+def _digest(df) -> tuple[int, int]:
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+    ).collect()[0]
+    return int(row[0]), int(row[1] or 0)
+
+
+@pytest.fixture(scope="module")
+def silver_ref(spark, tmp_path_factory):
+    """Silver written by calling the normalizers one at a time."""
+    from bio_lakehouse_spark.bio.fixtures import generate_bronze
+    from bio_lakehouse_spark.bio.silver import SILVER_TABLES
+    from bio_lakehouse_spark.sources.sinks import write_partitioned_parquet
+
+    bronze = str(generate_bronze(BIO_ROOT / "bronze"))
+    root = tmp_path_factory.mktemp("silver_ref")
+    for table, fn in SILVER_TABLES.items():
+        write_partitioned_parquet(
+            fn(spark, bronze), str(root / table), ["year", "month"]
+        )
+    return bronze, root
+
+
+def test_run_silver_matches_sequential_loop(spark, count_jobs, silver_ref,
+                                            tmp_path):
+    from bio_lakehouse_spark.bio.silver import SILVER_TABLES, run_silver
+
+    bronze, ref = silver_ref
+    out: dict[str, str] = {}
+    jobs = count_jobs(
+        lambda: out.update(run_silver(spark, bronze, str(tmp_path)))
+    )
+    assert jobs == SILVER_JOBS
+    assert list(out) == list(SILVER_TABLES)
+    for table, path in out.items():
+        assert _digest(spark.read.parquet(path)) == _digest(
+            spark.read.parquet(str(ref / table))
+        ), table
+
+
+def test_build_gold_writes_what_it_returns(spark, count_jobs, silver_ref,
+                                           tmp_path):
+    from bio_lakehouse_spark.bio.gold import build_gold
+
+    gold: dict = {}
+    jobs = count_jobs(
+        lambda: gold.update(build_gold(spark, str(silver_ref[1]), str(tmp_path)))
+    )
+    assert jobs == GOLD_JOBS
+    for table in ("feature_readiness_daily", "workout_recovery_windows"):
+        assert _digest(spark.read.parquet(str(tmp_path / table))) == _digest(
+            gold[table]
+        ), table

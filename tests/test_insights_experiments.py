@@ -226,8 +226,14 @@ def test_weekly_report_covers_all_sections(spark, gold):
     gen = WeeklyReportGenerator(analyzers)
     html, rendered = gen.generate("2025-W41")
     assert len(rendered) == 13
-    for r in rendered:
-        assert f"<h2>{r.name}</h2>" in html
+    # generate() runs the analyzers concurrently; sections must still
+    # come out in analyzer order, equal to a one-at-a-time loop.
+    expected = [a.analyze() for a in analyzers]
+    assert [(r.name, r.narrative) for r in rendered] == [
+        (r.name, r.narrative) for r in expected
+    ]
+    heads = [html.find(f"<h2>{r.name}</h2>") for r in rendered]
+    assert -1 not in heads and heads == sorted(heads)
 
 
 # -- experiments ------------------------------------------------------------
