@@ -156,16 +156,3 @@ def validate_required_columns(
             f"Schema validation failed for {dataset}. Missing columns: "
             f"{missing}. Available columns: {sorted(columns)}"
         )
-
-
-def detect_schema_drift(
-    columns: list[str], expected: list[str]
-) -> dict[str, list[str]]:
-    """P10 drift report (ref lambda/ingestion_trigger/handler.py:117-167):
-    unexpected new columns and missing expected ones — the caller
-    decides whether to alert (new cols) or fail (missing)."""
-    actual, exp = set(columns), set(expected)
-    return {
-        "unexpected": sorted(actual - exp),
-        "missing": sorted(exp - actual),
-    }

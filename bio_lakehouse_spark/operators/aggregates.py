@@ -9,8 +9,6 @@ is nondeterministic across partitions (SURVEY.md §7.4.5).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -20,14 +18,6 @@ def sorted_set_join(col: str | Column, sep: str = ",") -> Column:
     comma-joined category sets (ref stg_peloton_workouts.sql:9-11,
     glue/mfp_normalizer.py:129), sorted for deterministic output."""
     return F.array_join(F.array_sort(F.collect_set(col)), sep)
-
-
-def last_of_group(col: str | Column) -> Column:
-    """``F.last(x, ignorenulls=True)`` aggregate — last reading of the
-    day wins (A3, ref glue/readiness_aggregator_ARCHIVED.py:113-158).
-    Order-sensitive: callers must pre-sort within groups or use the
-    ROW_NUMBER variant (windows.dedupe_latest) for determinism."""
-    return F.last(col, ignorenulls=True)
 
 
 def conditional_avg(cond: Column, value: Column | str) -> Column:
@@ -48,21 +38,6 @@ def percentile_exact(col: str | Column, p: float) -> Column:
     100 TB tier where a t-digest is the right trade."""
     c = F.col(col) if isinstance(col, str) else col
     return F.percentile(c, F.lit(p))
-
-
-def grouped_descriptive_stats(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-) -> DataFrame:
-    """Per-group mean/median/std/n (A10, ref insights/workout_recovery
-    .py:86-97) — median is the exact 0.5 percentile."""
-    return df.groupBy(*group_cols).agg(
-        F.avg(value_col).alias("mean"),
-        percentile_exact(value_col, 0.5).alias("median"),
-        F.stddev(value_col).alias("std"),
-        F.count(value_col).alias("n"),
-    )
 
 
 def skyline_2d(

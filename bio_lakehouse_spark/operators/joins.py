@@ -57,19 +57,6 @@ def next_day_self_join(
     return left.join(right, cond, "inner")
 
 
-def join_enrich(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: Sequence[str],
-    how: str = "left",
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Left-enrichment join (J5) with the dim broadcast by default —
-    at 100 TB the fact side never shuffles for a small dim."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=list(on), how=how)
-
-
 def anti(df: DataFrame, other: DataFrame, on: Sequence[str]) -> DataFrame:
     """``LEFT ANTI`` — rows of ``df`` with no match (J6)."""
     return df.join(other, on=list(on), how="left_anti")

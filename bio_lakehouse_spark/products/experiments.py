@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bio_lakehouse_spark.functions.dates import safe_date
-from bio_lakehouse_spark.operators.windows import rolling_corr
 from bio_lakehouse_spark.products.numerics import linregress
 
 
@@ -186,17 +185,6 @@ def analyze_experiment(
             "effect": did_effect,
         },
     }
-
-
-def rolling_correlation_series(
-    daily: DataFrame, x: str, y: str, window_days: int = 14
-) -> DataFrame:
-    """14-day rolling Pearson r between two metrics (ref
-    experiments/analyzer.py:366-375)."""
-    return daily.select(
-        "date",
-        rolling_corr(x, y, "date", window_days - 1).alias("rolling_r"),
-    )
 
 
 def summarize(result: dict) -> str:

@@ -17,7 +17,6 @@ a headless-chromium print; no such binary ships in this environment).
 from __future__ import annotations
 
 import json
-from pathlib import Path
 from typing import Any
 
 import pandas as pd
@@ -197,10 +196,3 @@ def render_weekly_html(
         # break out of the block (data is numeric/dates, but belt+braces)
         charts_json=json.dumps(charts).replace("</", "<\\/"),
     )
-
-
-def deliver_html(html: str, path: str | Path) -> str:
-    out = Path(path)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    out.write_text(html, encoding="utf-8")
-    return str(out)

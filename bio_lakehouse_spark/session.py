@@ -20,6 +20,30 @@ from pyspark.sql import SparkSession
 
 _T = TypeVar("_T")
 
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` if set, else half of the host's
+    MemTotal in whole GiB, between 1g and 24g.
+
+    Local mode runs every executor thread inside the driver JVM, so
+    "driver" memory is the engine's entire heap. Half leaves the rest
+    to the Python workers, the shuffle files under /dev/shm and the
+    page cache. 24g is where GC churn stopped mattering on a 128 GiB
+    host (an 8g heap doubled the gold rebuild once ~60 query
+    executions had warmed the session). Without a readable
+    ``MemTotal`` the cap is used."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo, encoding="ascii") as fh:
+            kb = next(int(line.split()[1]) for line in fh
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "24g"
+    return f"{min(24, max(1, kb // (2 * 1024 * 1024)))}g"
+
+
 _DEFAULTS: dict[str, str] = {
     # Runtime re-planning: coalesce small shuffle partitions, split skewed
     # ones, convert sort-merge to broadcast when a side turns out small.
@@ -64,11 +88,19 @@ _DEFAULTS: dict[str, str] = {
     # Don't let tiny local files create thousands of tasks at bench SFs.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.shuffle.partitions": "32",
-    # Local mode runs every executor thread inside the driver JVM, so
-    # "driver" memory is the engine's entire heap — size it to the host
-    # (measured: 8g causes GC churn that doubles the gold rebuild once
-    # ~60 query executions have warmed the session; 24g removes it).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    # Generated-class cache (static, read once per JVM at the first
+    # codegen). At Spark's default of 100 every warm pass recompiled
+    # its whole working set: 94 of 120 classes per query_suite pass and
+    # 435 of 443 per medallion_refresh pass. Distinct classes measured
+    # on a 4-core host: query_suite 120, medallion_refresh 429–443, and
+    # one sweep of all 308 registry queries at sf0.01 4,838 (a second
+    # sweep in the same JVM compiled 188 more, from queries whose code
+    # differs run to run). 10k holds the sweep twice over. With it,
+    # warm passes compile 0 (query_suite) and 0–8 (medallion_refresh,
+    # new request shapes). A cached class keeps 4–9 KB of
+    # Metaspace (single-projection classes +8 MB per 2,000; medallion
+    # +3.6 MB for ~430), so a full cache costs under 100 MB off-heap.
+    "spark.sql.codegen.cache.maxEntries": "10000",
     "spark.ui.enabled": "false",
 }
 
@@ -88,6 +120,7 @@ def get_spark(
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
+    conf["spark.driver.memory"] = driver_memory()
     # Local mode only: put shuffle/spill files on tmpfs. This VM's
     # balloon pins the page cache to ~1 GB, so disk-backed shuffle
     # files go uncached and EVERY stage boundary pays virtio latency —
