@@ -1,138 +1,179 @@
 """Gold tables: ``gold_daily_rollup``, ``feature_readiness_daily``,
 ``workout_recovery_windows`` (SURVEY.md §7.2 phase 3).
 
-DataFrame-native ports of the dbt models (ref
-models/gold/gold_daily_rollup.sql, models/features/
-feature_readiness_daily.sql, models/gold/workout_recovery_windows.sql,
-macros/tss_calculation.sql). The FULL OUTER chain uses Spark's
-named-column join, whose automatic key coalescing is exactly the SQL's
-manual ``COALESCE(r.date, s.date, ...)`` accumulation (SURVEY §7.4.2).
+Spark SQL ports of the dbt models (ref models/gold/gold_daily_rollup.sql,
+models/features/feature_readiness_daily.sql,
+models/gold/workout_recovery_windows.sql, macros/tss_calculation.sql):
+one statement per model, its input DataFrames bound by name through
+``spark.sql(text, name=df)``. The FULL OUTER chain joins ``USING
+(date)``, whose key coalescing is exactly the reference's manual
+``COALESCE(r.date, s.date, ...)`` accumulation (SURVEY §7.4.2).
+Texts that inline a shared snippet are f-strings, so their input
+placeholders are written doubled (``{{gold}}``). Fractional literals
+carry a ``D`` suffix: a bare ``0.6`` is a DECIMAL in Spark SQL and
+would change result types.
 
 Windows are global ``ORDER BY date`` — correct for the single-user
-grain; every window helper takes a partition key for the multi-entity
-version at scale (SURVEY §7.1.5).
+grain; the multi-entity version at scale adds ``PARTITION BY`` the
+entity (SURVEY §7.1.5).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from collections.abc import Mapping
 
-from bio_lakehouse_spark.functions.dates import day_of_week_iso, safe_date
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from bio_lakehouse_spark.functions.dates import day_of_week_iso_sql, safe_date_sql
 from bio_lakehouse_spark.session import fan_out
 
-
-def _sorted_set(col: str) -> Column:
-    """ARRAY_JOIN(ARRAY_AGG(DISTINCT x), ',') with a sort for
-    deterministic output (the reference's is engine-order —
-    SURVEY §7.4.5)."""
-    return F.array_join(F.array_sort(F.collect_set(col)), ",")
-
-
 # ---------------------------------------------------------------------------
-# Staging aggregates (ref models/staging/*.sql)
+# Staging (ref models/staging/stg_sleep.sql)
 # ---------------------------------------------------------------------------
 
-
-def stg_readiness(silver: DataFrame) -> DataFrame:
-    """stg_readiness.sql: rename-projection."""
-    return silver.select(
-        F.col("day").alias("date"),
-        F.col("score").alias("readiness_score"),
-        F.col("contributors_hrv_balance").alias("hrv_balance_score"),
-        F.col("contributors_resting_heart_rate").alias("resting_hr_score"),
-        F.col("contributors_previous_night").alias("previous_night_score"),
-        F.col("contributors_recovery_index").alias("recovery_index_score"),
-        "temperature_deviation",
-    )
+_STG_SLEEP = """
+SELECT day AS date, score AS sleep_score,
+       contributors_deep_sleep AS deep_sleep_score,
+       contributors_rem_sleep AS rem_sleep_score,
+       contributors_efficiency AS sleep_efficiency_score,
+       contributors_total_sleep AS total_sleep_score
+FROM {oura_daily_sleep}
+"""
 
 
 def stg_sleep(silver: DataFrame) -> DataFrame:
     """stg_sleep.sql: rename-projection."""
-    return silver.select(
-        F.col("day").alias("date"),
-        F.col("score").alias("sleep_score"),
-        F.col("contributors_deep_sleep").alias("deep_sleep_score"),
-        F.col("contributors_rem_sleep").alias("rem_sleep_score"),
-        F.col("contributors_efficiency").alias("sleep_efficiency_score"),
-        F.col("contributors_total_sleep").alias("total_sleep_score"),
-    )
-
-
-def stg_activity(silver: DataFrame) -> DataFrame:
-    """gold_daily_rollup.sql:19-26 activity CTE."""
-    return silver.select(
-        F.col("day").alias("date"),
-        F.col("score").alias("activity_score"),
-        "active_calories",
-        "steps",
-        "total_calories",
-    )
-
-
-def stg_peloton(silver: DataFrame) -> DataFrame:
-    """stg_peloton_workouts.sql: daily workout rollup (A1)."""
-    return (
-        silver.groupBy(
-            F.date_format("workout_date", "yyyy-MM-dd").alias("date")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("workout_count"),
-            F.sum("total_output_kj").alias("total_output_kj"),
-            F.sum("calories_burned").alias("peloton_calories"),
-            F.avg("avg_watts").alias("avg_watts"),
-            F.max("avg_heartrate").alias("max_avg_hr"),
-            F.avg("output_per_minute").alias("avg_output_per_minute"),
-            _sorted_set("workout_category").alias("workout_categories"),
-            F.sum("length_minutes").alias("total_workout_minutes"),
-            _sorted_set("fitness_discipline").alias("disciplines"),
-        )
-    )
-
-
-def stg_hk_workouts(silver: DataFrame) -> DataFrame:
-    """stg_healthkit_workouts.sql: daily rollup (A2)."""
-    return silver.groupBy("date").agg(
-        F.count(F.lit(1)).alias("hk_workout_count"),
-        F.sum("calories_burned").alias("hk_calories"),
-        F.sum("duration_minutes").alias("hk_workout_minutes"),
-        _sorted_set("workout_category").alias("hk_workout_categories"),
-        _sorted_set("workout_type").alias("hk_workout_types"),
-    )
-
-
-def stg_nutrition(silver: DataFrame) -> DataFrame:
-    """stg_nutrition.sql: rename-projection."""
-    return silver.select(
-        "date",
-        F.col("calories").alias("daily_calories"),
-        "protein_g",
-        F.col("carbohydrates_g").alias("carbs_g"),
-        "fat_g", "fiber_g", "sugar_g", "sodium_mg", "cholesterol_mg",
-        "protein_pct", "carb_pct", "fat_pct", "meal_count", "meals_logged",
-    )
-
-
-def _last_of_day(
-    silver: DataFrame, cols_last: list[str], cols_avg: list[str]
-) -> DataFrame:
-    """gold_daily_rollup.sql:32-76 (A3/W8/W7): collapse multiple
-    same-day readings to the LAST non-null value per column (by the
-    scan-order ``reading_seq`` the normalizer materialized) plus the
-    day's mean for the averaged vitals."""
-    aggs = [
-        F.expr(
-            f"max_by({c}, reading_seq) FILTER (WHERE {c} IS NOT NULL)"
-        ).alias(c)
-        for c in cols_last
-    ]
-    aggs += [F.avg(c).alias(c) for c in cols_avg]
-    return silver.groupBy("date").agg(*aggs)
+    return silver.sparkSession.sql(_STG_SLEEP, oura_daily_sleep=silver)
 
 
 # ---------------------------------------------------------------------------
 # gold_daily_rollup (ref models/gold/gold_daily_rollup.sql)
 # ---------------------------------------------------------------------------
+
+# The staging CTEs are the stg_*.sql models (peloton and HealthKit
+# workouts roll up per day, A1/A2; set aggregates are sorted so the
+# output is deterministic, SURVEY §7.4.5). Vitals and body collapse
+# same-day readings to the LAST non-null value per column by the
+# scan-order ``reading_seq`` the normalizer materialized, vitals also
+# averaging two columns (A3/W8/W7).
+_GOLD_DAILY_ROLLUP = f"""
+WITH r AS (
+  SELECT day AS date, score AS readiness_score,
+         contributors_hrv_balance AS hrv_balance_score,
+         contributors_resting_heart_rate AS resting_hr_score,
+         contributors_previous_night AS previous_night_score,
+         contributors_recovery_index AS recovery_index_score,
+         temperature_deviation
+  FROM {{oura_daily_readiness}}
+), s AS ({_STG_SLEEP}
+), a AS (
+  SELECT day AS date, score AS activity_score, active_calories, steps,
+         total_calories
+  FROM {{oura_daily_activity}}
+), p AS (
+  SELECT date_format(workout_date, 'yyyy-MM-dd') AS date,
+         count(1) AS workout_count,
+         sum(total_output_kj) AS total_output_kj,
+         sum(calories_burned) AS peloton_calories,
+         avg(avg_watts) AS avg_watts,
+         max(avg_heartrate) AS max_avg_hr,
+         avg(output_per_minute) AS avg_output_per_minute,
+         array_join(array_sort(collect_set(workout_category)), ',')
+           AS workout_categories,
+         sum(length_minutes) AS total_workout_minutes,
+         array_join(array_sort(collect_set(fitness_discipline)), ',')
+           AS disciplines
+  FROM {{peloton_workouts}}
+  GROUP BY date_format(workout_date, 'yyyy-MM-dd')
+), v AS (
+  SELECT date,
+         max_by(resting_heart_rate_bpm, reading_seq)
+           FILTER (WHERE resting_heart_rate_bpm IS NOT NULL)
+           AS resting_heart_rate_bpm,
+         max_by(hrv_ms, reading_seq) FILTER (WHERE hrv_ms IS NOT NULL) AS hrv_ms,
+         max_by(vo2_max, reading_seq) FILTER (WHERE vo2_max IS NOT NULL) AS vo2_max,
+         avg(blood_oxygen_pct) AS blood_oxygen_pct,
+         avg(respiratory_rate) AS respiratory_rate
+  FROM {{healthkit_daily_vitals}}
+  GROUP BY date
+), hw AS (
+  SELECT date, count(1) AS hk_workout_count,
+         sum(calories_burned) AS hk_calories,
+         sum(duration_minutes) AS hk_workout_minutes,
+         array_join(array_sort(collect_set(workout_category)), ',')
+           AS hk_workout_categories,
+         array_join(array_sort(collect_set(workout_type)), ',')
+           AS hk_workout_types
+  FROM {{healthkit_workouts}}
+  GROUP BY date
+), b AS (
+  SELECT date,
+         max_by(weight_lbs, reading_seq) FILTER (WHERE weight_lbs IS NOT NULL)
+           AS weight_lbs,
+         max_by(body_fat_pct, reading_seq) FILTER (WHERE body_fat_pct IS NOT NULL)
+           AS body_fat_pct,
+         max_by(bmi, reading_seq) FILTER (WHERE bmi IS NOT NULL) AS bmi,
+         max_by(lean_body_mass_lbs, reading_seq)
+           FILTER (WHERE lean_body_mass_lbs IS NOT NULL) AS lean_body_mass_lbs
+  FROM {{healthkit_body}}
+  GROUP BY date
+), m AS (
+  SELECT date, sum(duration_minutes) AS mindfulness_minutes,
+         sum(session_count) AS mindfulness_session_count
+  FROM {{healthkit_mindfulness}}
+  GROUP BY date
+), n AS (
+  SELECT date, calories AS daily_calories, protein_g,
+         carbohydrates_g AS carbs_g, fat_g, fiber_g, sugar_g, sodium_mg,
+         protein_pct, carb_pct, fat_pct, meal_count
+  FROM {{mfp_daily_nutrition}}
+), joined AS (
+  SELECT *
+  FROM r
+  FULL OUTER JOIN s USING (date)
+  FULL OUTER JOIN a USING (date)
+  FULL OUTER JOIN p USING (date)
+  FULL OUTER JOIN v USING (date)
+  LEFT JOIN hw USING (date)
+  LEFT JOIN b USING (date)
+  LEFT JOIN m USING (date)
+  LEFT JOIN n USING (date)
+)
+SELECT *,
+  CASE WHEN readiness_score IS NOT NULL AND readiness_score > 0
+            AND total_output_kj IS NOT NULL
+       THEN round(CAST(total_output_kj AS DOUBLE) / readiness_score, 2)
+  END AS readiness_to_output_ratio,
+  CASE WHEN readiness_score IS NOT NULL AND sleep_score IS NOT NULL
+       THEN round(readiness_score * 0.6D + sleep_score * 0.4D, 1)
+       ELSE CAST(coalesce(readiness_score, sleep_score) AS DOUBLE)
+  END AS combined_wellness_score,
+  coalesce(workout_count, 0) + coalesce(hk_workout_count, 0)
+    AS total_workout_count,
+  coalesce(peloton_calories, 0) + coalesce(hk_calories, 0)
+    AS total_calories_all_sources,
+  coalesce(total_workout_minutes, 0) + coalesce(hk_workout_minutes, 0.0D)
+    AS total_workout_minutes_all,
+  coalesce(workout_count, 0) + coalesce(hk_workout_count, 0) > 0
+    AS had_workout,
+  CASE WHEN readiness_score IS NOT NULL AND sleep_score IS NOT NULL
+            AND mindfulness_minutes IS NOT NULL AND mindfulness_minutes > 0
+       THEN least(round(readiness_score * 0.6D + sleep_score * 0.4D
+                        + least(mindfulness_minutes / 10.0D, 3.0D), 1),
+                  100.0D)
+       WHEN readiness_score IS NOT NULL AND sleep_score IS NOT NULL
+       THEN round(readiness_score * 0.6D + sleep_score * 0.4D, 1)
+       ELSE CAST(coalesce(readiness_score, sleep_score) AS DOUBLE)
+  END AS mindfulness_adjusted_wellness,
+  CASE WHEN protein_g IS NOT NULL AND weight_lbs IS NOT NULL AND weight_lbs > 0
+       THEN round(CAST(protein_g AS DOUBLE) / weight_lbs, 2)
+  END AS protein_per_lb,
+  substring(date, 1, 4) AS year,
+  substring(date, 6, 2) AS month
+FROM joined
+WHERE date IS NOT NULL
+"""
 
 
 def gold_daily_rollup(silver: dict[str, DataFrame]) -> DataFrame:
@@ -140,140 +181,96 @@ def gold_daily_rollup(silver: dict[str, DataFrame]) -> DataFrame:
     (full outer, coalesced date key) then LEFT hk_workouts / body /
     mindfulness / nutrition, plus the derived metrics block
     (gold_daily_rollup.sql:91-215)."""
-    r = stg_readiness(silver["oura_daily_readiness"])
-    s = stg_sleep(silver["oura_daily_sleep"])
-    a = stg_activity(silver["oura_daily_activity"])
-    p = stg_peloton(silver["peloton_workouts"])
-    v = _last_of_day(
-        silver["healthkit_daily_vitals"],
-        cols_last=["resting_heart_rate_bpm", "hrv_ms", "vo2_max"],
-        cols_avg=["blood_oxygen_pct", "respiratory_rate"],
-    )
-    hw = stg_hk_workouts(silver["healthkit_workouts"])
-    b = _last_of_day(
-        silver["healthkit_body"],
-        cols_last=["weight_lbs", "body_fat_pct", "bmi", "lean_body_mass_lbs"],
-        cols_avg=[],
-    )
-    m = silver["healthkit_mindfulness"].groupBy("date").agg(
-        F.sum("duration_minutes").alias("mindfulness_minutes"),
-        F.sum("session_count").alias("mindfulness_session_count"),
-    )
-    n = stg_nutrition(silver["mfp_daily_nutrition"])
-
-    joined = (
-        r.join(s, on="date", how="full_outer")
-        .join(a, on="date", how="full_outer")
-        .join(p, on="date", how="full_outer")
-        .join(v, on="date", how="full_outer")
-        .join(hw, on="date", how="left")
-        .join(b, on="date", how="left")
-        .join(m, on="date", how="left")
-        .join(n.drop("cholesterol_mg", "meals_logged"), on="date", how="left")
-    )
-
-    rs = F.col("readiness_score")
-    ss = F.col("sleep_score")
-    out_kj = F.col("total_output_kj")
-    wellness = F.round(rs * 0.6 + ss * 0.4, 1)
-    mind_bonus = F.least(F.col("mindfulness_minutes") / 10.0, F.lit(3.0))
-    total_workouts = (
-        F.coalesce(F.col("workout_count"), F.lit(0))
-        + F.coalesce(F.col("hk_workout_count"), F.lit(0))
-    )
-    derived = joined.select(
-        "*",
-        F.when(
-            rs.isNotNull() & (rs > 0) & out_kj.isNotNull(),
-            F.round(out_kj.cast("double") / rs, 2),
-        ).alias("readiness_to_output_ratio"),
-        F.when(rs.isNotNull() & ss.isNotNull(), wellness)
-        .otherwise(F.coalesce(rs, ss).cast("double"))
-        .alias("combined_wellness_score"),
-        total_workouts.alias("total_workout_count"),
-        (
-            F.coalesce(F.col("peloton_calories"), F.lit(0))
-            + F.coalesce(F.col("hk_calories"), F.lit(0))
-        ).alias("total_calories_all_sources"),
-        (
-            F.coalesce(F.col("total_workout_minutes"), F.lit(0))
-            + F.coalesce(F.col("hk_workout_minutes"), F.lit(0.0))
-        ).alias("total_workout_minutes_all"),
-        (total_workouts > 0).alias("had_workout"),
-        F.when(
-            rs.isNotNull() & ss.isNotNull()
-            & F.col("mindfulness_minutes").isNotNull()
-            & (F.col("mindfulness_minutes") > 0),
-            F.least(F.round(rs * 0.6 + ss * 0.4 + mind_bonus, 1), F.lit(100.0)),
-        )
-        .when(rs.isNotNull() & ss.isNotNull(), wellness)
-        .otherwise(F.coalesce(rs, ss).cast("double"))
-        .alias("mindfulness_adjusted_wellness"),
-        F.when(
-            F.col("protein_g").isNotNull()
-            & F.col("weight_lbs").isNotNull()
-            & (F.col("weight_lbs") > 0),
-            F.round(F.col("protein_g").cast("double") / F.col("weight_lbs"), 2),
-        ).alias("protein_per_lb"),
-        F.substring("date", 1, 4).alias("year"),
-        F.substring("date", 6, 2).alias("month"),
-    )
-    return derived.filter(F.col("date").isNotNull())
+    spark = silver["oura_daily_readiness"].sparkSession
+    return spark.sql(_GOLD_DAILY_ROLLUP, **silver)
 
 
 # ---------------------------------------------------------------------------
 # TSS (ref macros/tss_calculation.sql)
 # ---------------------------------------------------------------------------
 
-
-def tss_expr(
-    had_workout: str = "had_workout",
-    total_output_kj: str = "total_output_kj",
-    max_avg_hr: str = "max_avg_hr",
-    peloton_calories: str = "peloton_calories",
-    total_workout_minutes: str = "total_workout_minutes",
-    active_calories: str = "active_calories",
-    hk_calories: str = "hk_calories",
-    hk_workout_minutes: str = "hk_workout_minutes",
-) -> Column:
-    """5-tier Training Stress Score fallback ladder (F6 — power data,
-    then Peloton calories×minutes, HK active calories×minutes, HK
-    workout calories×minutes, active calories alone; each tier capped).
-    """
-    hw = F.col(had_workout)
-    out = F.col(total_output_kj)
-    hr = F.col(max_avg_hr)
-    pcal = F.col(peloton_calories)
-    mins = F.col(total_workout_minutes)
-    acal = F.col(active_calories)
-    hcal = F.col(hk_calories)
-    hmin = F.col(hk_workout_minutes)
-    return (
-        F.when(hw == False, F.lit(0.0))  # noqa: E712
-        .when(
-            out.isNotNull() & (out > 0),
-            F.least(F.lit(300.0), out * F.coalesce(hr, F.lit(140)) / 600.0),
-        )
-        .when(
-            pcal.isNotNull() & (pcal > 0) & mins.isNotNull() & (mins > 0),
-            F.least(F.lit(300.0), pcal * mins / 150.0),
-        )
-        .when(
-            acal.isNotNull() & (acal > 0) & mins.isNotNull() & (mins > 0),
-            F.least(F.lit(300.0), acal * mins / 450.0),
-        )
-        .when(
-            hcal.isNotNull() & (hcal > 0) & hmin.isNotNull() & (hmin > 0),
-            F.least(F.lit(300.0), hcal * hmin / 450.0),
-        )
-        .when(acal.isNotNull() & (acal > 0), F.least(F.lit(200.0), acal / 12.0))
-        .otherwise(F.lit(0.0))
-    )
+# 5-tier Training Stress Score fallback ladder over gold columns (F6 —
+# power data, then Peloton calories×minutes, HK active
+# calories×minutes, HK workout calories×minutes, active calories alone;
+# each tier capped).
+TSS_SQL = """CASE
+  WHEN had_workout = false THEN 0.0D
+  WHEN total_output_kj IS NOT NULL AND total_output_kj > 0
+    THEN least(300.0D, total_output_kj * coalesce(max_avg_hr, 140) / 600.0D)
+  WHEN peloton_calories IS NOT NULL AND peloton_calories > 0
+       AND total_workout_minutes IS NOT NULL AND total_workout_minutes > 0
+    THEN least(300.0D, peloton_calories * total_workout_minutes / 150.0D)
+  WHEN active_calories IS NOT NULL AND active_calories > 0
+       AND total_workout_minutes IS NOT NULL AND total_workout_minutes > 0
+    THEN least(300.0D, active_calories * total_workout_minutes / 450.0D)
+  WHEN hk_calories IS NOT NULL AND hk_calories > 0
+       AND hk_workout_minutes IS NOT NULL AND hk_workout_minutes > 0
+    THEN least(300.0D, hk_calories * hk_workout_minutes / 450.0D)
+  WHEN active_calories IS NOT NULL AND active_calories > 0
+    THEN least(200.0D, active_calories / 12.0D)
+  ELSE 0.0D
+END"""
 
 
 # ---------------------------------------------------------------------------
 # feature_readiness_daily (ref models/features/feature_readiness_daily.sql)
 # ---------------------------------------------------------------------------
+
+_FEATURE_READINESS_DAILY = f"""
+WITH with_tss AS (
+  SELECT *, {TSS_SQL} AS tss
+  FROM {{gold}}
+  WHERE date IS NOT NULL
+), feats AS (
+  SELECT date, readiness_score, sleep_score,
+    CAST(deep_sleep_score AS DOUBLE) AS deep_sleep_score,
+    CAST(rem_sleep_score AS DOUBLE) AS rem_sleep_score,
+    CAST(total_sleep_score AS DOUBLE) AS total_sleep_score,
+    CAST(hrv_balance_score AS DOUBLE) AS hrv_balance_score,
+    CAST(resting_heart_rate_bpm AS DOUBLE) AS resting_hr,
+    CAST(hrv_ms AS DOUBLE) AS hrv_ms,
+    CASE WHEN had_workout = true THEN 1 ELSE 0 END AS had_workout,
+    tss,
+    avg(readiness_score) OVER (ORDER BY date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+      AS readiness_7d_avg,
+    avg(sleep_score) OVER (ORDER BY date ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+      AS sleep_score_3d_avg,
+    (readiness_score - lag(readiness_score, 2) OVER (ORDER BY date)) / 2.0D
+      AS readiness_3d_slope,
+    sum(tss) OVER (ORDER BY date ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+      AS cumulative_tss_3d,
+    sum(tss) OVER (ORDER BY date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+      AS cumulative_tss_7d,
+    avg(tss) OVER (ORDER BY date ROWS BETWEEN 41 PRECEDING AND CURRENT ROW) AS ctl,
+    avg(tss) OVER (ORDER BY date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS atl,
+    avg(tss) OVER (ORDER BY date ROWS BETWEEN 41 PRECEDING AND CURRENT ROW)
+      - avg(tss) OVER (ORDER BY date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+      AS tsb,
+    {day_of_week_iso_sql(safe_date_sql('date'))} AS day_of_week,
+    sum(CASE WHEN had_workout = true THEN 1 ELSE 0 END)
+      OVER (ORDER BY date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+      AS workouts_last_7d,
+    avg(sleep_score) OVER (ORDER BY date ROWS BETWEEN 14 PRECEDING AND 1 PRECEDING)
+      AS sleep_baseline_14d,
+    sleep_score
+      - avg(sleep_score) OVER (ORDER BY date ROWS BETWEEN 14 PRECEDING AND 1 PRECEDING)
+      AS sleep_deficit_daily,
+    CAST(hrv_ms AS DOUBLE) - lag(CAST(hrv_ms AS DOUBLE), 2) OVER (ORDER BY date)
+      AS hrv_2day_change,
+    lead(readiness_score, 1) OVER (ORDER BY date) AS next_day_readiness
+  FROM with_tss
+), derived AS (
+  SELECT *,
+    sum(sleep_deficit_daily)
+      OVER (ORDER BY date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+      AS sleep_debt_7d,
+    CASE WHEN hrv_2day_change > 10 THEN 'rising'
+         WHEN hrv_2day_change < -10 THEN 'falling'
+         ELSE 'stable' END AS hrv_velocity_flag
+  FROM feats
+)
+SELECT * FROM derived WHERE readiness_score IS NOT NULL
+"""
 
 
 def feature_readiness_daily(gold: DataFrame) -> DataFrame:
@@ -282,137 +279,61 @@ def feature_readiness_daily(gold: DataFrame) -> DataFrame:
     semantics, W10), ISO day-of-week, sleep debt, HRV velocity, LEAD
     target. Windows run over ALL non-null dates; the readiness filter
     applies last — frame contents must match the reference exactly."""
-    base = gold.filter(F.col("date").isNotNull())
-    with_tss = base.withColumn("tss", tss_expr())
-    w = Window.orderBy("date")
-
-    def roll(agg, col, lo, hi=0):
-        fn = getattr(F, agg)
-        return fn(col).over(w.rowsBetween(lo, hi))
-
-    feats = with_tss.select(
-        "date",
-        "readiness_score",
-        "sleep_score",
-        F.col("deep_sleep_score").cast("double").alias("deep_sleep_score"),
-        F.col("rem_sleep_score").cast("double").alias("rem_sleep_score"),
-        F.col("total_sleep_score").cast("double").alias("total_sleep_score"),
-        F.col("hrv_balance_score").cast("double").alias("hrv_balance_score"),
-        F.col("resting_heart_rate_bpm").cast("double").alias("resting_hr"),
-        F.col("hrv_ms").cast("double").alias("hrv_ms"),
-        F.when(F.col("had_workout") == True, 1).otherwise(0).alias("had_workout"),  # noqa: E712
-        "tss",
-        roll("avg", "readiness_score", -6).alias("readiness_7d_avg"),
-        roll("avg", "sleep_score", -2).alias("sleep_score_3d_avg"),
-        ((F.col("readiness_score") - F.lag("readiness_score", 2).over(w)) / 2.0
-         ).alias("readiness_3d_slope"),
-        roll("sum", "tss", -2).alias("cumulative_tss_3d"),
-        roll("sum", "tss", -6).alias("cumulative_tss_7d"),
-        roll("avg", "tss", -41).alias("ctl"),
-        roll("avg", "tss", -6).alias("atl"),
-        (roll("avg", "tss", -41) - roll("avg", "tss", -6)).alias("tsb"),
-        day_of_week_iso(safe_date("date")).alias("day_of_week"),
-        F.sum(F.when(F.col("had_workout") == True, 1).otherwise(0))  # noqa: E712
-        .over(w.rowsBetween(-6, 0))
-        .alias("workouts_last_7d"),
-        roll("avg", "sleep_score", -14, -1).alias("sleep_baseline_14d"),
-        (F.col("sleep_score") - roll("avg", "sleep_score", -14, -1)).alias(
-            "sleep_deficit_daily"
-        ),
-        (F.col("hrv_ms").cast("double")
-         - F.lag(F.col("hrv_ms").cast("double"), 2).over(w)).alias(
-            "hrv_2day_change"
-        ),
-        F.lead("readiness_score", 1).over(w).alias("next_day_readiness"),
-    )
-    derived = feats.select(
-        "*",
-        F.sum("sleep_deficit_daily").over(w.rowsBetween(-6, 0)).alias(
-            "sleep_debt_7d"
-        ),
-        F.when(F.col("hrv_2day_change") > 10, "rising")
-        .when(F.col("hrv_2day_change") < -10, "falling")
-        .otherwise("stable")
-        .alias("hrv_velocity_flag"),
-    )
-    return derived.filter(F.col("readiness_score").isNotNull())
+    return gold.sparkSession.sql(_FEATURE_READINESS_DAILY, gold=gold)
 
 
 # ---------------------------------------------------------------------------
 # workout_recovery_windows (ref models/gold/workout_recovery_windows.sql)
 # ---------------------------------------------------------------------------
 
+_WORKOUT_RECOVERY_WINDOWS = """
+WITH daily AS (
+  SELECT date, readiness_score, sleep_score,
+    coalesce(workout_count, 0) + coalesce(hk_workout_count, 0) AS total_workouts,
+    coalesce(total_workout_minutes, 0) + coalesce(hk_workout_minutes, 0.0D)
+      AS total_minutes,
+    coalesce(peloton_calories, 0) + coalesce(hk_calories, 0) AS total_calories,
+    total_output_kj, max_avg_hr,
+    CASE WHEN had_workout = true THEN 1 ELSE 0 END AS had_workout,
+    lead(readiness_score, 1) OVER (ORDER BY date) AS readiness_d1,
+    lead(readiness_score, 2) OVER (ORDER BY date) AS readiness_d2,
+    lead(readiness_score, 3) OVER (ORDER BY date) AS readiness_d3,
+    lead(sleep_score, 1) OVER (ORDER BY date) AS sleep_d1,
+    lead(sleep_score, 2) OVER (ORDER BY date) AS sleep_d2,
+    lag(readiness_score, 1) OVER (ORDER BY date) AS readiness_prev,
+    avg(readiness_score) OVER (ORDER BY date ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
+      AS readiness_7d_baseline
+  FROM {gold}
+  WHERE date IS NOT NULL
+)
+SELECT date AS workout_date,
+  readiness_score AS workout_day_readiness,
+  sleep_score AS workout_day_sleep,
+  total_workouts, total_minutes, total_calories, total_output_kj,
+  max_avg_hr, readiness_7d_baseline,
+  CASE WHEN total_output_kj >= 300 OR total_calories >= 400 OR total_minutes >= 60
+         THEN 'high'
+       WHEN total_output_kj >= 150 OR total_calories >= 200 OR total_minutes >= 30
+         THEN 'moderate'
+       ELSE 'light' END AS intensity,
+  readiness_d1, readiness_d2, readiness_d3, sleep_d1, sleep_d2,
+  readiness_d1 - readiness_score AS readiness_delta_d1,
+  readiness_d2 - readiness_score AS readiness_delta_d2,
+  readiness_d3 - readiness_score AS readiness_delta_d3,
+  CASE WHEN readiness_d1 >= readiness_7d_baseline THEN 1
+       WHEN readiness_d2 >= readiness_7d_baseline THEN 2
+       WHEN readiness_d3 >= readiness_7d_baseline THEN 3
+  END AS days_to_recover
+FROM daily
+WHERE had_workout = 1 AND readiness_score IS NOT NULL
+"""
+
 
 def workout_recovery_windows(gold: DataFrame) -> DataFrame:
     """Per-workout-day recovery trajectory: LEAD readiness/sleep d1-d3,
     intensity banding, deltas, and days-to-recover vs the 7-day
     excluding-current baseline."""
-    w = Window.orderBy("date")
-    daily = gold.filter(F.col("date").isNotNull()).select(
-        "date",
-        "readiness_score",
-        "sleep_score",
-        (
-            F.coalesce(F.col("workout_count"), F.lit(0))
-            + F.coalesce(F.col("hk_workout_count"), F.lit(0))
-        ).alias("total_workouts"),
-        (
-            F.coalesce(F.col("total_workout_minutes"), F.lit(0))
-            + F.coalesce(F.col("hk_workout_minutes"), F.lit(0.0))
-        ).alias("total_minutes"),
-        (
-            F.coalesce(F.col("peloton_calories"), F.lit(0))
-            + F.coalesce(F.col("hk_calories"), F.lit(0))
-        ).alias("total_calories"),
-        "total_output_kj",
-        "max_avg_hr",
-        F.when(F.col("had_workout") == True, 1).otherwise(0).alias("had_workout"),  # noqa: E712
-        F.lead("readiness_score", 1).over(w).alias("readiness_d1"),
-        F.lead("readiness_score", 2).over(w).alias("readiness_d2"),
-        F.lead("readiness_score", 3).over(w).alias("readiness_d3"),
-        F.lead("sleep_score", 1).over(w).alias("sleep_d1"),
-        F.lead("sleep_score", 2).over(w).alias("sleep_d2"),
-        F.lag("readiness_score", 1).over(w).alias("readiness_prev"),
-        F.avg("readiness_score").over(w.rowsBetween(-7, -1)).alias(
-            "readiness_7d_baseline"
-        ),
-    )
-    out = F.col("total_output_kj")
-    cal = F.col("total_calories")
-    mins = F.col("total_minutes")
-    wd = daily.filter(
-        (F.col("had_workout") == 1) & F.col("readiness_score").isNotNull()
-    ).select(
-        F.col("date").alias("workout_date"),
-        F.col("readiness_score").alias("workout_day_readiness"),
-        F.col("sleep_score").alias("workout_day_sleep"),
-        "total_workouts",
-        "total_minutes",
-        "total_calories",
-        "total_output_kj",
-        "max_avg_hr",
-        "readiness_7d_baseline",
-        F.when((out >= 300) | (cal >= 400) | (mins >= 60), "high")
-        .when((out >= 150) | (cal >= 200) | (mins >= 30), "moderate")
-        .otherwise("light")
-        .alias("intensity"),
-        "readiness_d1", "readiness_d2", "readiness_d3",
-        "sleep_d1", "sleep_d2",
-        (F.col("readiness_d1") - F.col("readiness_score")).alias(
-            "readiness_delta_d1"
-        ),
-        (F.col("readiness_d2") - F.col("readiness_score")).alias(
-            "readiness_delta_d2"
-        ),
-        (F.col("readiness_d3") - F.col("readiness_score")).alias(
-            "readiness_delta_d3"
-        ),
-        F.when(F.col("readiness_d1") >= F.col("readiness_7d_baseline"), 1)
-        .when(F.col("readiness_d2") >= F.col("readiness_7d_baseline"), 2)
-        .when(F.col("readiness_d3") >= F.col("readiness_7d_baseline"), 3)
-        .alias("days_to_recover"),
-    )
-    return wd
+    return gold.sparkSession.sql(_WORKOUT_RECOVERY_WINDOWS, gold=gold)
 
 
 # ---------------------------------------------------------------------------
@@ -420,27 +341,44 @@ def workout_recovery_windows(gold: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def load_silver(spark: SparkSession, silver_root: str) -> dict[str, DataFrame]:
+def load_silver(
+    spark: SparkSession,
+    silver_root: str,
+    schemas: Mapping[str, StructType] | None = None,
+) -> dict[str, DataFrame]:
+    """The nine silver tables under ``silver_root``. A table with an
+    entry in ``schemas`` (the data schemas ``run_silver`` returns) is
+    read with it, which spares the one-task job Spark otherwise runs
+    to infer the schema from a parquet footer."""
     from bio_lakehouse_spark.bio.silver import SILVER_TABLES
 
+    schemas = schemas or {}
     return {
-        t: spark.read.parquet(f"{silver_root}/{t}") for t in SILVER_TABLES
+        t: (spark.read.schema(schemas[t]) if t in schemas else spark.read)
+        .parquet(f"{silver_root}/{t}")
+        for t in SILVER_TABLES
     }
 
 
 def build_gold(
-    spark: SparkSession, silver_root: str, gold_root: str | None = None
+    spark: SparkSession,
+    silver_root: str,
+    gold_root: str | None = None,
+    silver_schemas: Mapping[str, StructType] | None = None,
 ) -> dict[str, DataFrame]:
     """All three gold tables from silver parquet; optionally persisted
-    (the reference's ~45 s daily CTAS refresh becomes three writes)."""
-    silver = load_silver(spark, silver_root)
+    (the reference's ~45 s daily CTAS refresh becomes three writes).
+    ``silver_schemas`` are the schemas ``run_silver`` wrote; without
+    them each silver read infers its schema. A persisted rollup is
+    read back with the schema it was just written with."""
+    silver = load_silver(spark, silver_root, silver_schemas)
     rollup = gold_daily_rollup(silver)
     if gold_root:
         from bio_lakehouse_spark.sources.sinks import write_partitioned_parquet
 
-        write_partitioned_parquet(rollup, f"{gold_root}/gold_daily_rollup",
-                                  ["year", "month"])
-        rollup = spark.read.parquet(f"{gold_root}/gold_daily_rollup")
+        path = f"{gold_root}/gold_daily_rollup"
+        schema = write_partitioned_parquet(rollup, path, ["year", "month"])
+        rollup = spark.read.schema(schema).parquet(path)
     features = feature_readiness_daily(rollup)
     recovery = workout_recovery_windows(rollup)
     if gold_root:

@@ -17,6 +17,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bio_lakehouse_spark.bio import schemas as S
 from bio_lakehouse_spark.functions.banding import map_lookup
@@ -392,21 +393,27 @@ SILVER_TABLES = {
 
 def run_silver(
     spark: SparkSession, bronze_root: str, silver_root: str
-) -> dict[str, str]:
-    """All nine normalizers → partitioned parquet. One Spark app
-    replaces the Lambda/Glue/crawler chain (SURVEY §3.2): each table
-    is read and written by its own jobs into its own directory, so the
-    nine normalize-and-write calls run concurrently through
-    ``fan_out``. The first failing table, in ``SILVER_TABLES`` order,
-    raises once all nine have finished."""
+) -> dict[str, StructType]:
+    """All nine normalizers → partitioned parquet under
+    ``silver_root/<table>``. One Spark app replaces the
+    Lambda/Glue/crawler chain (SURVEY §3.2): each table is read and
+    written by its own jobs into its own directory, so the nine
+    normalize-and-write calls run concurrently through ``fan_out``.
+    The first failing table, in ``SILVER_TABLES`` order, raises once
+    all nine have finished.
 
-    def normalize_and_write(table: str, fn) -> str:
+    Returns each table's written data schema, in ``SILVER_TABLES``
+    order — the schema a reader passes instead of inferring it, as the
+    reference's crawler records it in the Glue catalog."""
+
+    def normalize_and_write(table: str, fn) -> StructType:
         path = str(Path(silver_root) / table)
-        write_partitioned_parquet(fn(spark, bronze_root), path, ["year", "month"])
-        return path
+        return write_partitioned_parquet(
+            fn(spark, bronze_root), path, ["year", "month"]
+        )
 
-    paths = fan_out([
+    schemas = fan_out([
         partial(normalize_and_write, table, fn)
         for table, fn in SILVER_TABLES.items()
     ])
-    return dict(zip(SILVER_TABLES, paths))
+    return dict(zip(SILVER_TABLES, schemas))

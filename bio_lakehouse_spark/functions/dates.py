@@ -8,6 +8,10 @@ models/features/feature_readiness_daily.sql:81-84). ``safe_date`` is
 that idiom as a single Spark expression; the Presto→Spark dialect
 edges (``day_of_week`` Monday=1, ``date_trunc('week')``) live here too
 so view ports stay mechanical.
+
+Each helper has a Spark SQL twin (``*_sql``, taking and returning SQL
+text) for the gold models and views, which are SQL statements; a test
+pins every pair equal on edge inputs.
 """
 
 from __future__ import annotations
@@ -28,6 +32,14 @@ def safe_date(col: Column | str) -> Column:
     )
 
 
+def safe_date_sql(col: str) -> str:
+    """``safe_date`` as Spark SQL over the expression ``col``."""
+    return (
+        f"COALESCE(CAST(try_to_timestamp({col}, 'yyyy-MM-dd') AS DATE), "
+        f"CAST(try_to_timestamp({col}, 'yyyy-MM-dd HH:mm:ss') AS DATE))"
+    )
+
+
 def day_of_week_iso(col: Column | str) -> Column:
     """ISO day-of-week, Monday=1..Sunday=7 (Presto ``day_of_week``).
 
@@ -39,6 +51,11 @@ def day_of_week_iso(col: Column | str) -> Column:
     return ((F.dayofweek(c) + 5) % 7 + 1).cast("int")
 
 
+def day_of_week_iso_sql(col: str) -> str:
+    """``day_of_week_iso`` as Spark SQL over the expression ``col``."""
+    return f"CAST((dayofweek({col}) + 5) % 7 + 1 AS INT)"
+
+
 def week_start(col: Column | str) -> Column:
     """Monday-based week truncation (Presto ``date_trunc('week', d)``).
 
@@ -47,3 +64,8 @@ def week_start(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.date_trunc("week", c).cast("date")
+
+
+def week_start_sql(col: str) -> str:
+    """``week_start`` as Spark SQL over the expression ``col``."""
+    return f"CAST(date_trunc('week', {col}) AS DATE)"

@@ -42,6 +42,17 @@ def safe_corr(x: Column | str, y: Column | str) -> Column:
     )
 
 
+def safe_corr_sql(x: str, y: str) -> str:
+    """``safe_corr`` as Spark SQL over the expressions ``x`` and ``y``."""
+    both = f"{x} IS NOT NULL AND {y} IS NOT NULL"
+    xp = f"CASE WHEN {both} THEN {x} END"
+    yp = f"CASE WHEN {both} THEN {y} END"
+    return (
+        f"try_divide(covar_samp({xp}, {yp}), "
+        f"stddev_samp({xp}) * stddev_samp({yp}))"
+    )
+
+
 def pearson_ols(
     df: DataFrame,
     x: str,

@@ -196,14 +196,15 @@ def run_daily_pipeline(
 
     state: dict = {}
 
+    # Silver hands its written schemas on in-process, so the stages
+    # after it read silver without inferring a schema.
     def silver():
-        run_silver(spark, bronze_root, silver_root)
+        state["silver"] = run_silver(spark, bronze_root, silver_root)
         return f"silver written to {silver_root}"
 
     def gold():
         state["gold"] = build_gold(
-            spark, silver_root,
-            **({"gold_root": gold_root} if gold_root else {}),
+            spark, silver_root, gold_root, silver_schemas=state["silver"]
         )
         return f"{len(state['gold'])} gold tables"
 
@@ -211,7 +212,8 @@ def run_daily_pipeline(
         from bio_lakehouse_spark.bio.gold import stg_sleep
 
         stg_sleep_df = stg_sleep(
-            spark.read.parquet(f"{silver_root}/oura_daily_sleep")
+            spark.read.schema(state["silver"]["oura_daily_sleep"])
+            .parquet(f"{silver_root}/oura_daily_sleep")
         )
         names = register_views(
             spark, state["gold"]["gold_daily_rollup"], stg_sleep_df

@@ -13,6 +13,7 @@ import os as _os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def write_zorder_parquet(
@@ -100,11 +101,20 @@ def write_partitioned_parquet(
     path: str,
     partition_cols: Sequence[str],
     mode: str = "overwrite",
-) -> None:
+) -> StructType:
     """S12: Hive-layout partitioned parquet overwrite. Partition
     columns become directories (``year=.../month=...``) so date-
-    filtered reads prune files without touching footers."""
+    filtered reads prune files without touching footers.
+
+    Returns the data schema written: ``df``'s fields without the
+    partition columns. ``spark.read.schema(it).parquet(path)`` then
+    skips the job that infers a schema from a parquet footer; the
+    partition columns still come from the directory names, and every
+    field reads back nullable, exactly as an inferring read gives."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    return StructType(
+        [f for f in df.schema.fields if f.name not in partition_cols]
+    )
 
 
 def _no_partition_inference(spark: SparkSession):

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 import uuid
@@ -72,5 +73,30 @@ def count_jobs(spark):
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
+def count_py4j(spark):
+    """``count_py4j(fn)`` calls ``fn()`` and returns how many py4j
+    commands the Python side sent the JVM meanwhile, from any thread:
+    each is one driver round trip."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def count(fn) -> int:
+        calls = itertools.count()
+
+        def counted(*args, **kwargs):
+            next(calls)
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            fn()
+        finally:
+            del client.send_command
+        return next(calls)
 
     return count

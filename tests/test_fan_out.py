@@ -1,6 +1,8 @@
 """``session.fan_out`` and the refresh stages that run through it: the
 nine silver writes and the two gold window writes must write what a
-one-at-a-time loop writes, with the same number of Spark jobs."""
+one-at-a-time loop writes, with the same number of Spark jobs. Also
+the refresh's driver work: jobs a carried schema saves, and py4j round
+trips spent building the views."""
 
 from __future__ import annotations
 
@@ -18,8 +20,13 @@ BIO_ROOT = Path(__file__).resolve().parents[1] / ".fixtures" / "bio"
 
 # Jobs the one-at-a-time loops ran on the fixture bronze before the
 # stages fanned out; overlapping the jobs must not add or drop any.
+# GOLD_JOBS infers the nine silver schemas from parquet footers, one
+# job each; the rollup it writes is read back with the written schema.
 SILVER_JOBS = 28
-GOLD_JOBS = 30
+GOLD_JOBS = 29
+# py4j round trips allowed for publishing gold and the 11 views; built
+# call by call as DataFrames they took ~9.1k.
+REGISTER_VIEWS_PY4J = 400
 
 
 def _order(spark, count_jobs):
@@ -108,26 +115,32 @@ def silver_ref(spark, tmp_path_factory):
 
     bronze = str(generate_bronze(BIO_ROOT / "bronze"))
     root = tmp_path_factory.mktemp("silver_ref")
-    for table, fn in SILVER_TABLES.items():
-        write_partitioned_parquet(
+    schemas = {
+        table: write_partitioned_parquet(
             fn(spark, bronze), str(root / table), ["year", "month"]
         )
-    return bronze, root
+        for table, fn in SILVER_TABLES.items()
+    }
+    return bronze, root, schemas
 
 
 def test_run_silver_matches_sequential_loop(spark, count_jobs, silver_ref,
                                             tmp_path):
     from bio_lakehouse_spark.bio.silver import SILVER_TABLES, run_silver
 
-    bronze, ref = silver_ref
-    out: dict[str, str] = {}
+    bronze, ref, _ = silver_ref
+    out: dict = {}
     jobs = count_jobs(
         lambda: out.update(run_silver(spark, bronze, str(tmp_path)))
     )
     assert jobs == SILVER_JOBS
     assert list(out) == list(SILVER_TABLES)
-    for table, path in out.items():
-        assert _digest(spark.read.parquet(path)) == _digest(
+    for table, schema in out.items():
+        path = str(tmp_path / table)
+        inferred = spark.read.parquet(path)
+        # The returned schema reads back exactly what inference gives.
+        assert spark.read.schema(schema).parquet(path).schema == inferred.schema
+        assert _digest(inferred) == _digest(
             spark.read.parquet(str(ref / table))
         ), table
 
@@ -141,7 +154,44 @@ def test_build_gold_writes_what_it_returns(spark, count_jobs, silver_ref,
         lambda: gold.update(build_gold(spark, str(silver_ref[1]), str(tmp_path)))
     )
     assert jobs == GOLD_JOBS
+    rollup = str(tmp_path / "gold_daily_rollup")
+    assert gold["gold_daily_rollup"].schema == spark.read.parquet(rollup).schema
     for table in ("feature_readiness_daily", "workout_recovery_windows"):
         assert _digest(spark.read.parquet(str(tmp_path / table))) == _digest(
             gold[table]
         ), table
+
+
+def test_build_gold_with_written_schemas_skips_inference(
+    spark, count_jobs, silver_ref, tmp_path
+):
+    from bio_lakehouse_spark.bio.gold import build_gold
+    from bio_lakehouse_spark.bio.silver import SILVER_TABLES
+
+    _, root, schemas = silver_ref
+    carried: dict = {}
+    jobs = count_jobs(lambda: carried.update(
+        build_gold(spark, str(root), str(tmp_path / "carried"),
+                   silver_schemas=schemas)
+    ))
+    # One footer-inference job fewer per silver table.
+    assert jobs == GOLD_JOBS - len(SILVER_TABLES)
+    inferred = build_gold(spark, str(root), str(tmp_path / "inferred"))
+    for table, df in carried.items():
+        assert df.schema == inferred[table].schema, table
+        assert _digest(df) == _digest(inferred[table]), table
+
+
+def test_register_views_driver_round_trips(spark, count_py4j, silver_ref):
+    from bio_lakehouse_spark.bio.gold import build_gold, stg_sleep
+    from bio_lakehouse_spark.bio.views import register_views
+
+    _, root, _ = silver_ref
+    gold = build_gold(spark, str(root))["gold_daily_rollup"]
+    sleep = stg_sleep(spark.read.parquet(str(root / "oura_daily_sleep")))
+    names: list[str] = []
+    calls = count_py4j(
+        lambda: names.extend(register_views(spark, gold, sleep))
+    )
+    assert len(names) == 12
+    assert calls <= REGISTER_VIEWS_PY4J, calls
