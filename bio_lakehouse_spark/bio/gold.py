@@ -16,6 +16,12 @@ would change result types.
 Windows are global ``ORDER BY date`` — correct for the single-user
 grain; the multi-entity version at scale adds ``PARTITION BY`` the
 entity (SURVEY §7.1.5).
+
+Gold is day grain for one person: one row per calendar day, ~150 on
+the fixture and ~2k after years of daily refreshes. ``build_gold``
+returns the rollup pinned (``pin_day_grain``): one in-memory
+partition, which the two window tables, the 11 views, the briefing
+and the SQL facade all read instead of re-scanning parquet.
 """
 
 from __future__ import annotations
@@ -341,6 +347,21 @@ def workout_recovery_windows(gold: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def pin_day_grain(df: DataFrame) -> DataFrame:
+    """``df`` computed once into a single in-memory partition.
+
+    Only for frames of one person whose rows are O(calendar days):
+    gold, and the silver sleep and workout tables the report reads.
+    One partition already satisfies every required distribution, so
+    an unpartitioned window ordered by date, a global aggregate or a
+    group-by over the pinned frame plans no exchange, and every later
+    read comes from the block manager instead of parquet. The blocks
+    live as long as something references the frame (a temp view
+    holds it until the next refresh replaces the view); then Spark's
+    ContextCleaner frees them."""
+    return df.coalesce(1).localCheckpoint()
+
+
 def load_silver(
     spark: SparkSession,
     silver_root: str,
@@ -370,7 +391,11 @@ def build_gold(
     (the reference's ~45 s daily CTAS refresh becomes three writes).
     ``silver_schemas`` are the schemas ``run_silver`` wrote; without
     them each silver read infers its schema. A persisted rollup is
-    read back with the schema it was just written with."""
+    read back with the schema it was just written with.
+
+    The returned rollup is pinned (``pin_day_grain``): the read-back
+    when persisted, else the computed join. Both window tables are
+    built on it, and so is every consumer of the returned frame."""
     silver = load_silver(spark, silver_root, silver_schemas)
     rollup = gold_daily_rollup(silver)
     if gold_root:
@@ -379,10 +404,11 @@ def build_gold(
         path = f"{gold_root}/gold_daily_rollup"
         schema = write_partitioned_parquet(rollup, path, ["year", "month"])
         rollup = spark.read.schema(schema).parquet(path)
+    rollup = pin_day_grain(rollup)
     features = feature_readiness_daily(rollup)
     recovery = workout_recovery_windows(rollup)
     if gold_root:
-        # Both windows read the re-read rollup and write their own
+        # Both windows read the pinned rollup and write their own
         # directory: independent jobs, run concurrently.
         fan_out([
             lambda: features.write.mode("overwrite").parquet(

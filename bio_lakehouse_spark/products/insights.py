@@ -1266,10 +1266,29 @@ def default_analyzers(spark, gold: DataFrame,
     """The full 13-analyzer roster the reference's weekly report fans
     over (ref reports/weekly_report.py:121-205). Pass the silver
     peloton frame (or a silver_root to read it from) to include
-    progressive overload; pass stg_sleep for sleep architecture."""
-    from bio_lakehouse_spark.bio import views as V
-    from bio_lakehouse_spark.bio.gold import stg_sleep
+    progressive overload; pass stg_sleep for sleep architecture.
 
+    Every input is day grain for one person (O(calendar days) rows;
+    peloton one row per workout), so each is pinned first, all at
+    once (``gold.pin_day_grain``): the analyzers' windows and
+    aggregates then read one in-memory partition and plan no
+    exchange. The pins live as long as the returned analyzers."""
+    from bio_lakehouse_spark.bio import views as V
+    from bio_lakehouse_spark.bio.gold import pin_day_grain, stg_sleep
+
+    if silver_root is not None:
+        if stg_sleep_df is None:
+            stg_sleep_df = stg_sleep(
+                spark.read.parquet(f"{silver_root}/oura_daily_sleep")
+            )
+        if peloton_silver is None:
+            peloton_silver = spark.read.parquet(
+                f"{silver_root}/peloton_workouts"
+            )
+    gold, stg_sleep_df, peloton_silver, recovery_windows = fan_out([
+        (lambda df=df: None if df is None else pin_day_grain(df))
+        for df in (gold, stg_sleep_df, peloton_silver, recovery_windows)
+    ])
     analyzers: list[InsightAnalyzer] = [
         SleepReadinessAnalyzer(V.sleep_performance_prediction(gold)),
         ReadinessTrendAnalyzer(gold),
@@ -1282,15 +1301,6 @@ def default_analyzers(spark, gold: DataFrame,
         TimingCorrelationAnalyzer(gold),
         WorkoutRecoveryAnalyzer(gold),
     ]
-    if silver_root is not None:
-        if stg_sleep_df is None:
-            stg_sleep_df = stg_sleep(
-                spark.read.parquet(f"{silver_root}/oura_daily_sleep")
-            )
-        if peloton_silver is None:
-            peloton_silver = spark.read.parquet(
-                f"{silver_root}/peloton_workouts"
-            )
     if stg_sleep_df is not None:
         analyzers.append(
             SleepArchitectureAnalyzer(
