@@ -146,7 +146,7 @@ HEADLINE = [
 ROTATION_SLICE = 32
 
 # One mid-suite calib re-probe every N headline queries (plus one at
-# the end) — the contention timeline for bench_compare adjudication.
+# the end) — the contention timeline stamped into the record.
 _CALIB_EVERY = 24
 
 
@@ -291,8 +291,8 @@ def _host_calibration(spark, materialize) -> float:
     # keeps JIT-warming well past run 2 (1.088 → 0.794 → 0.713 →
     # 0.631 → 0.590 in one session) — an under-converged calib makes
     # the normalization rule ADD noise instead of removing it (one
-    # r10 same-code rerun stamped 0.875 vs 0.576 and flipped the
-    # bench_compare verdict to a phantom "code" change). Five runs
+    # r10 same-code rerun stamped 0.875 vs 0.576, which read as a
+    # phantom code change). Five runs
     # cost ~4 s against a ~90 s suite.
     return round(min(probe() for _ in range(5)), 3)
 
@@ -465,7 +465,7 @@ def main() -> None:
     # burst that sat on one query's every run. run_spread/all_runs
     # keep ONLY the main-pass runs — they stay the honest contention
     # fingerprint; the rerun and what it absorbed are stamped
-    # separately so bench_compare can see both.
+    # separately so a reader can see both.
     ledger = _tracked_ledger(sf_val)
     outliers = select_outliers(timings, ledger)
     outlier_stamp: dict | None = None
@@ -547,9 +547,8 @@ def main() -> None:
         "runs": all_runs,
         # Contention fingerprint (VERDICT r10 #1): intra-query run
         # spread distribution + the calib-probe timeline across the
-        # suite. bench_compare.py reads these to stamp a
-        # `contended_host` verdict instead of a false "code" when the
-        # host was loaded during the run.
+        # suite: they show whether the host was loaded during the
+        # run.
         "run_spread": run_spread_stats(all_runs),
         "calib_timeline": calib_timeline,
         # Subset provenance: headline membership is pinned; rotation
@@ -582,7 +581,7 @@ def main() -> None:
     calibs = [p["calib_sec"] for p in calib_timeline]
     if len(calibs) >= 2 and min(calibs) > 0:
         detail["calib_drift"] = round(max(calibs) / min(calibs), 3)
-        # Anchor reliability (r12, tools/bench_compare.py): how far
+        # Anchor reliability (r12): how far
         # the cold start calib sits above the warm timeline floor —
         # ~1.6x is the structural JIT offset; >=2.5 means the start
         # window was contended and the normalization anchor is

@@ -24,6 +24,8 @@ from bio_lakehouse_spark.functions.banding import map_lookup
 from bio_lakehouse_spark.operators.windows import forward_fill
 from bio_lakehouse_spark.session import fan_out
 from bio_lakehouse_spark.sources.csv_source import (
+    header_csv_reader,
+    header_line,
     read_header_grouped_csv,
     snake_case,
 )
@@ -163,11 +165,7 @@ def normalize_peloton(spark: SparkSession, bronze: str) -> DataFrame:
     map → output/min → HR zones → pinned output schema
     (ref peloton_normalizer.py:55-200)."""
     newest = latest_file(f"{bronze}/peloton/workouts", "KnownasNoma_*.csv")
-    df = (
-        spark.read.option("header", "true")
-        .option("inferSchema", "false")
-        .csv(newest)
-    )
+    df = header_csv_reader(spark, header_line(newest)).csv(newest)
     df = df.toDF(*[snake_case(c) for c in df.columns])
     S.validate_required_columns(
         df.columns,

@@ -209,12 +209,14 @@ def run_daily_pipeline(
         return f"{len(state['gold'])} gold tables"
 
     def views():
-        from bio_lakehouse_spark.bio.gold import stg_sleep
+        from bio_lakehouse_spark.bio.gold import pin_day_grain, stg_sleep
 
-        stg_sleep_df = stg_sleep(
+        # Pinned like gold, so no view re-scans silver parquet per
+        # request (sleep_architecture joins the two).
+        stg_sleep_df = pin_day_grain(stg_sleep(
             spark.read.schema(state["silver"]["oura_daily_sleep"])
             .parquet(f"{silver_root}/oura_daily_sleep")
-        )
+        ))
         names = register_views(
             spark, state["gold"]["gold_daily_rollup"], stg_sleep_df
         )

@@ -20,11 +20,13 @@ data itself is only ever read by Spark executors.
 
 from __future__ import annotations
 
+import csv
 import re
 from collections import defaultdict
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 _SNAKE_RE = re.compile(r"[.\s/()]+")
 
@@ -53,6 +55,43 @@ def header_line(path: str | Path) -> str:
         return f.readline().rstrip("\r\n")
 
 
+def header_schema(
+    spark: SparkSession, header: str, sep: str = ","
+) -> StructType | None:
+    """The all-string schema Spark's CSV reader infers from ``header``
+    with ``inferSchema`` off, without the job that reads it. An empty
+    field becomes ``_c<i>``; a name repeated (case-insensitively unless
+    ``spark.sql.caseSensitive``) gets its position appended, as in
+    Spark's ``CSVUtils.makeSafeHeader``. None when a field holds a
+    quote or backslash other than one plain ``"..."`` around it: the
+    CSV parser's handling of those differs from Python's, so Spark
+    reads that header itself."""
+    header = header.removeprefix("\ufeff")  # Spark drops a UTF-8 BOM
+    field = rf'"[^"\\]*"|[^"\\{re.escape(sep)}]*'
+    if not re.fullmatch(rf"(?:{field})(?:{re.escape(sep)}(?:{field}))*", header):
+        return None
+    fields = next(csv.reader([header], delimiter=sep, quotechar='"'))
+    fold = spark.conf.get("spark.sql.caseSensitive") != "true"
+    keys = [f.lower() if fold else f for f in fields]
+    dups = {k for k in keys if k and keys.count(k) > 1}
+    names = [f"_c{i}" if not f else f"{f}{i}" if k in dups else f
+             for i, (f, k) in enumerate(zip(fields, keys))]
+    return StructType([StructField(n, StringType()) for n in names])
+
+
+def header_csv_reader(
+    spark: SparkSession, header: str, sep: str = ","
+) -> DataFrameReader:
+    """A header-skipping, all-string CSV reader for files whose first
+    line is ``header``, with the schema taken from that line when
+    ``header_schema`` can."""
+    reader = spark.read.option("header", "true").option("sep", sep)
+    schema = header_schema(spark, header, sep)
+    if schema is None:
+        return reader.option("inferSchema", "false")
+    return reader.schema(schema)
+
+
 def group_by_header(paths: list[str]) -> dict[str, list[str]]:
     """Group file paths by exact header line (S2). Files with the same
     columns in a different order land in different groups on purpose —
@@ -73,18 +112,15 @@ def read_header_grouped_csv(
     missing columns align by NAME, never by position.
 
     Types are left as strings (the normalizers own casting — explicit
-    schemas per SURVEY §1.3); delimiter is sniffed per group.
+    schemas per SURVEY §1.3); delimiter is sniffed per group. The
+    schema comes from the header line grouping already read, so no
+    group spends a job re-reading it.
     """
     out: DataFrame | None = None
     # Sort groups for a deterministic union order.
     for header, group in sorted(group_by_header(paths).items()):
         d = sniff_delimiter(group[0])
-        df = (
-            spark.read.option("header", "true")
-            .option("sep", d)
-            .option("inferSchema", "false")
-            .csv(sorted(group))
-        )
+        df = header_csv_reader(spark, header, d).csv(sorted(group))
         if normalize_headers:
             df = df.toDF(*[snake_case(c) for c in df.columns])
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)

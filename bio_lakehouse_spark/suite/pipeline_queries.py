@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import zlib
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -37,14 +38,18 @@ _FIXTURE_VERSION = 2
 
 def _sf_tag(sf_dir: str) -> str:
     """Fixture tag = sf name + a fingerprint of the source parquet
-    files (size + mtime) + the fixture-format version. Derived
-    fixtures (CSV variants, partitioned sinks, LSH band tables, IVF
-    indexes) persist across rounds under .fixtures/; if the driver
-    regenerates the testdata OR the building code changes format
-    (_FIXTURE_VERSION), a stale fixture would silently diverge from
-    the fresh oracle — the fingerprint forces a rebuild instead."""
+    files (size + mtime), the fixture-format version and the resolved
+    fixture root. Derived fixtures (CSV variants, partitioned sinks,
+    LSH band tables, IVF indexes) persist across rounds under
+    .fixtures/; if the testdata is regenerated OR the building code
+    changes format (_FIXTURE_VERSION), a stale fixture would silently
+    diverge from the fresh oracle — the fingerprint forces a rebuild
+    instead. The root is in it because a streaming file sink's
+    ``_spark_metadata`` log (and every checkpoint) records absolute
+    paths: a copied or moved ``.fixtures/`` reads as an empty sink
+    unless it is rebuilt where it now lives."""
     p = Path(sf_dir)
-    sig = _FIXTURE_VERSION
+    sig = _FIXTURE_VERSION ^ zlib.crc32(str(_FIXTURE_ROOT).encode())
     for f in sorted(p.glob("*.parquet")):
         st = f.stat()
         sig = (sig * 1000003 + st.st_size + int(st.st_mtime)) & 0xFFFFFFFF

@@ -1,6 +1,7 @@
 """Day-grain gold is pinned (``bio.gold.pin_day_grain``): one in-memory
 partition that the window tables, the 11 views and the weekly report
-read instead of re-scanning parquet. One partition satisfies every
+read instead of re-scanning parquet; the views' ``stg_sleep`` input is
+pinned the same way. One partition satisfies every
 required distribution, so none of them may plan a shuffle; and the
 report over pinned frames must equal the report over plain parquet
 frames while running fewer Spark jobs."""
@@ -61,6 +62,10 @@ def test_gold_consumers_plan_no_shuffle(refreshed):
     frames["workout_recovery_windows"] = workout_recovery_windows(rollup)
     shuffles = {n: _shuffles(df) for n, df in frames.items()}
     assert not any(shuffles.values()), shuffles
+    # Every view reads pinned frames only, none re-scans parquet.
+    scans = [n for n in views if "FileScan" in
+             frames[n]._jdf.queryExecution().executedPlan().toString()]
+    assert scans == [], scans
     assert rollup.rdd.getNumPartitions() == 1
 
 

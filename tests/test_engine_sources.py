@@ -17,6 +17,9 @@ from bio_lakehouse_spark.engine import QueryEngine, UnsafeSqlError
 from bio_lakehouse_spark.engine.facade import sql_is_safe
 from bio_lakehouse_spark.sources.csv_source import (
     group_by_header,
+    header_csv_reader,
+    header_line,
+    header_schema,
     read_header_grouped_csv,
     sniff_delimiter,
     snake_case,
@@ -186,6 +189,34 @@ def test_header_grouped_union(spark, tmp_path):
     assert rows["2"]["day"] == "2025-01-02"  # by-name, not positional
     assert rows["3"]["extra_col"] == "x"
     assert rows["1"]["extra_col"] is None
+
+
+@pytest.mark.parametrize("header,sep,derived", [
+    ('id,"Total, Output",x', ",", True),   # quoted field holding the delimiter
+    ('Id;"Day;Part";Score', ";", True),
+    ("a,b,A,a", ",", True),                # repeated name, case-folded
+    ("a,a,,", ",", True),                  # repeated name and empty fields
+    ("\ufeffid,day", ",", True),           # UTF-8 byte-order mark
+    ('a,"b""q",c', ",", False),            # doubled quote: Spark reads it
+    ('a,"b" ,c', ",", False),              # text after the quote: Spark reads it
+])
+def test_header_schema_reads_as_spark_infers(spark, tmp_path, header, sep, derived):
+    path = tmp_path / "f.csv"
+    path.write_text(f"{header}\n1{sep}\"x{sep}y\"{sep}3{sep}4\n5\n", encoding="utf-8")
+    inferred = (spark.read.option("header", "true").option("sep", sep)
+                .option("inferSchema", "false").csv(str(path)))
+    got = header_csv_reader(spark, header_line(path), sep).csv(str(path))
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, inferred.collect()))
+    schema = header_schema(spark, header_line(path), sep)
+    assert schema == (inferred.schema if derived else None)
+
+
+def test_header_grouped_read_spends_no_job_on_headers(spark, tmp_path, count_jobs):
+    (tmp_path / "a.csv").write_text("id,day\n1,x\n")
+    (tmp_path / "b.csv").write_text("day;id\ny;2\n")
+    paths = list_files(tmp_path, "*.csv")
+    assert count_jobs(lambda: read_header_grouped_csv(spark, paths)) == 0
 
 
 def test_latest_file(tmp_path):
