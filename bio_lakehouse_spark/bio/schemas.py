@@ -99,6 +99,33 @@ HEALTHKIT_MINDFULNESS_SCHEMA = _struct(
      ("session_count", IntegerType())]
 )
 
+# Written silver schemas of the two tables the weekly report reads
+# straight from silver. Each normalizer's final SELECT casts to its
+# schema, and the report reads the parquet with it instead of
+# inferring one from a footer. Oura CSV values stay strings except the
+# score; the partition columns (year, month) are not part of either.
+OURA_DAILY_SLEEP_SILVER_SCHEMA = _struct(
+    [(c, IntegerType() if c == "score" else StringType())
+     for c in OURA_SLEEP_COLUMNS]
+)
+
+PELOTON_WORKOUTS_SILVER_SCHEMA = _struct(
+    [("workout_timestamp", StringType()), ("live_on_demand", StringType()),
+     ("instructor_name", StringType()), ("length_minutes", IntegerType()),
+     ("fitness_discipline", StringType()), ("type", StringType()),
+     ("title", StringType()), ("class_timestamp", StringType()),
+     ("total_output", IntegerType()), ("avg_watts", IntegerType()),
+     ("avg_resistance", StringType()), ("avg_cadence_rpm", IntegerType()),
+     ("avg_speed_mph", DoubleType()), ("distance_mi", DoubleType()),
+     ("calories_burned", IntegerType()), ("avg_heartrate", IntegerType()),
+     ("avg_incline", StringType()), ("avg_pace_min_mi", StringType()),
+     ("workout_date", TimestampType()), ("workout_time", StringType()),
+     ("avg_resistance_pct", IntegerType()),
+     ("workout_timestamp_utc", TimestampType()),
+     ("workout_category", StringType()), ("output_per_minute", DoubleType()),
+     ("hr_zone", IntegerType()), ("total_output_kj", DoubleType())]
+)
+
 # Category maps (ref glue/bio_etl_utils.py:224-259).
 WORKOUT_CATEGORY_MAP = {
     "cycling": "cardio_high", "running": "cardio_high",

@@ -12,7 +12,7 @@ from bio_lakehouse_spark.functions.dates import (
 )
 from bio_lakehouse_spark.functions.banding import (
     case_banding,
-    map_lookup,
+    map_lookup_sql,
 )
 
 __all__ = [
@@ -20,5 +20,5 @@ __all__ = [
     "day_of_week_iso",
     "week_start",
     "case_banding",
-    "map_lookup",
+    "map_lookup_sql",
 ]

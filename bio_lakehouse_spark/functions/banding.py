@@ -1,11 +1,12 @@
 """Categorical banding and literal-map lookup helpers.
 
 The reference's normalizers never register UDFs: categorical recodes
-are ``F.create_map(*literals)[lower(col)]`` (ref:
+are ``map(literals...)[lower(col)]`` (ref:
 glue/bio_etl_utils.py:224-278) and numeric bands are CASE-WHEN chains
 (ref: glue/bio_etl_utils.py:297-311 and ~10 analytics views,
 SURVEY.md §2.8 F5/F6). These helpers keep that discipline: pure
-Column expressions, fully inside whole-stage codegen.
+expressions (SQL text for the map lookup, a Column for the bands),
+fully inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -16,28 +17,28 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def map_lookup(
-    col: Column | str,
-    mapping: dict[str, str],
-    default: str | None = "other",
-    lowercase: bool = True,
-) -> Column:
-    """dict→``create_map`` literal lookup with a default.
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def map_lookup_sql(
+    col: str, mapping: dict[str, str], default: str | None = "other"
+) -> str:
+    """dict→``map(...)`` literal lookup on ``lower(col)``, with a
+    default, as Spark SQL over the expression ``col``.
 
     Stays JVM-side: the map is a literal expression, so Catalyst
     constant-folds it and the lookup runs in codegen — the idiom the
     reference uses instead of a mapping UDF.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    key = F.lower(c) if lowercase else c
-    pairs: list[Column] = []
-    for k, v in mapping.items():
-        pairs.append(F.lit(k.lower() if lowercase else k))
-        pairs.append(F.lit(v))
-    looked_up = F.create_map(*pairs)[key]
+    pairs = ", ".join(
+        f"{sql_string(k.lower())}, {sql_string(v)}" for k, v in mapping.items()
+    )
+    looked_up = f"map({pairs})[lower({col})]"
     if default is None:
         return looked_up
-    return F.coalesce(looked_up, F.lit(default))
+    return f"coalesce({looked_up}, {sql_string(default)})"
 
 
 def case_banding(

@@ -10,12 +10,14 @@ edges (``day_of_week`` Monday=1, ``date_trunc('week')``) live here too
 so view ports stay mechanical.
 
 Each helper has a Spark SQL twin (``*_sql``, taking and returning SQL
-text) for the gold models and views, which are SQL statements; a test
-pins every pair equal on edge inputs.
+text) for the gold models and views, which are SQL statements, and
+``safe_date`` a pandas twin for the weekly report's analyzers; a test
+pins every twin equal on edge inputs.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -38,6 +40,22 @@ def safe_date_sql(col: str) -> str:
         f"COALESCE(CAST(try_to_timestamp({col}, 'yyyy-MM-dd') AS DATE), "
         f"CAST(try_to_timestamp({col}, 'yyyy-MM-dd HH:mm:ss') AS DATE))"
     )
+
+
+_YMD = r"\d{4}-\d{2}-\d{2}"
+
+
+def safe_date_pandas(s: pd.Series) -> pd.Series:
+    """``safe_date`` over a Series of strings: datetime64 at midnight,
+    NaT where neither strict format parses."""
+    text = s.astype("string")
+    day = pd.to_datetime(text.where(text.str.fullmatch(_YMD, na=False)),
+                         format="%Y-%m-%d", errors="coerce")
+    stamp = pd.to_datetime(
+        text.where(text.str.fullmatch(_YMD + r" \d{2}:\d{2}:\d{2}", na=False)),
+        format="%Y-%m-%d %H:%M:%S", errors="coerce",
+    )
+    return day.fillna(stamp.dt.normalize())
 
 
 def day_of_week_iso(col: Column | str) -> Column:

@@ -3,25 +3,31 @@ base.py:26-53, sleep_readiness.py, readiness_trend.py,
 training_load.py; report: reports/weekly_report.py — S17).
 
 The reference's contract: ``analyze() -> InsightResult`` with
-statistics, narrative, caveats (n<30 and p>0.05 warnings). Here
-``analyze`` runs Spark ops against the engine's views and collects
-only the small result; ``visualize`` returns a plot *spec* dict
-(plotly isn't in this container — the spec carries the same content).
-The weekly report fans across analyzers and renders text/HTML with
-str.format templates (no jinja dependency).
+statistics, narrative, caveats (n<30 and p>0.05 warnings). Here each
+analyzer is a pandas function of day-grain frames that
+``default_analyzers`` fetches once (gold, its views, silver peloton);
+where an analyzer reproduces a SQL window or aggregate it adds in
+Spark's order (``spark_sum``, ``window_mean``, ``spark_stddev``), so
+its floats equal the SQL result bit for bit. ``visualize`` returns a
+plot *spec* dict (plotly isn't in this container — the spec carries
+the same content). The weekly report runs the analyzers and renders
+text/HTML with str.format templates (no jinja dependency).
 """
 
 from __future__ import annotations
 
 from abc import ABC, abstractmethod
 from dataclasses import dataclass, field
+from functools import reduce
+import math
 from pathlib import Path
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from bio_lakehouse_spark.functions.dates import safe_date_pandas
 from bio_lakehouse_spark.products.numerics import linregress
 from bio_lakehouse_spark.session import fan_out
 
@@ -65,24 +71,92 @@ class InsightAnalyzer(ABC):
         return caveats
 
 
+def _rows(df: pd.DataFrame, mask: pd.Series | None = None,
+          order_by: str | None = None) -> pd.DataFrame:
+    """``df``'s rows where ``mask`` holds, stably sorted by ``order_by``
+    and numbered from 0 — a filter, ORDER BY and fetch."""
+    out = df if mask is None else df[mask]
+    if order_by is not None:
+        out = out.sort_values(order_by, kind="stable")
+    return out.reset_index(drop=True)
+
+
+def _non_null(values) -> list:
+    return [v for v in values if not pd.isna(v)]
+
+
+def spark_sum(values):
+    """Spark's ``sum``: the non-null values added left to right from
+    zero; None when there are none. Adding in order (not pandas'
+    compensated or pairwise sums) keeps a float sum equal to the SQL
+    aggregate bit for bit."""
+    present = _non_null(values)
+    return reduce(lambda t, v: t + float(v), present, 0.0) if present else None
+
+
+def spark_mean(values) -> float | None:
+    """Spark's ``avg``: ``spark_sum`` as a double over the count of
+    non-null values; None when there are none."""
+    present = _non_null(values)
+    return spark_sum(present) / len(present) if present else None
+
+
+def window_mean(values: pd.Series, lo: int, hi: int,
+                min_count: int = 1) -> pd.Series:
+    """``avg(x) OVER (ORDER BY ... ROWS BETWEEN lo AND hi)`` over
+    ``values`` in their order, NaN where the frame holds fewer than
+    ``min_count`` non-null values. Spark re-aggregates a sliding frame
+    from scratch for each row, so each mean is ``spark_mean`` of its
+    frame (pandas ``rolling`` keeps a running sum and can differ in
+    the last bits)."""
+    x = values.tolist()
+    out = []
+    for i in range(len(x)):
+        frame = _non_null(x[max(0, i + lo):max(0, i + hi + 1)])
+        out.append(spark_mean(frame) if len(frame) >= min_count else None)
+    return pd.Series(out, index=values.index, dtype=float)
+
+
+def spark_stddev(values) -> float | None:
+    """Spark's ``stddev`` (sample): the running update of its
+    central-moment aggregate, row by row in order; None under two
+    values."""
+    n = avg = m2 = 0.0
+    for v in values:
+        n += 1.0
+        delta = float(v) - avg
+        delta_n = delta / n
+        avg += delta_n
+        m2 += delta * (delta - delta_n)
+    return math.sqrt(m2 / (n - 1.0)) if n > 1 else None
+
+
+def _next_day_pairs(gold: pd.DataFrame, a_mask: pd.Series,
+                    b_mask: pd.Series) -> pd.DataFrame:
+    """Gold ⋈ gold on ``safe_date(b.date) = safe_date(a.date) + 1``:
+    each a-row with its next day's b-row, columns suffixed ``_a`` and
+    ``_b``, in a's row order."""
+    day = safe_date_pandas(gold["date"])
+    a = gold[a_mask & day.notna()].assign(_key=day + pd.Timedelta(days=1))
+    b = gold[b_mask & day.notna()].assign(_key=day)
+    return a.merge(b, on="_key", suffixes=("_a", "_b"))
+
+
 class SleepReadinessAnalyzer(InsightAnalyzer):
     """ST1 (ref insights/sleep_readiness.py:25-105): previous-night
     sleep → next-day readiness regression."""
 
     name = "sleep_readiness"
 
-    def __init__(self, sleep_prediction: DataFrame) -> None:
+    def __init__(self, sleep_prediction: pd.DataFrame) -> None:
         self.view = sleep_prediction
 
     def analyze(self) -> InsightResult:
-        pdf = (
-            self.view.filter(
-                F.col("prev_night_sleep").isNotNull()
-                & F.col("next_day_readiness").isNotNull()
-            )
-            .select("sleep_date", "prev_night_sleep", "next_day_readiness")
-            .toPandas()
-        )
+        v = self.view
+        pdf = _rows(v[["sleep_date", "prev_night_sleep",
+                       "next_day_readiness"]],
+                    v["prev_night_sleep"].notna()
+                    & v["next_day_readiness"].notna())
         n = len(pdf)
         if n < 3:
             return InsightResult(self.name, {"n": n},
@@ -112,26 +186,19 @@ class ReadinessTrendAnalyzer(InsightAnalyzer):
 
     name = "readiness_trend"
 
-    def __init__(self, gold: DataFrame, tail_days: int = 14,
+    def __init__(self, gold: pd.DataFrame, tail_days: int = 14,
                  stable_band: float = 0.3) -> None:
         self.gold = gold
         self.tail_days = tail_days
         self.stable_band = stable_band
 
     def analyze(self) -> InsightResult:
-        from pyspark.sql import Window
-
-        w = Window.orderBy("date").rowsBetween(-13, 0)
-        pdf = (
-            self.gold.filter(F.col("readiness_score").isNotNull())
-            .select("date", F.avg("readiness_score").over(w).alias("ma14"))
-            .orderBy("date")
-            .toPandas()
-            .tail(self.tail_days)
-        )
+        g = _rows(self.gold, self.gold["readiness_score"].notna(), "date")
+        pdf = pd.DataFrame({
+            "date": g["date"],
+            "ma14": window_mean(g["readiness_score"], -13, 0),
+        }).tail(self.tail_days)
         n = len(pdf)
-        import numpy as np
-
         reg = linregress(np.arange(n, dtype=float),
                          pdf["ma14"].to_numpy(dtype=float))
         slope = reg["slope"]
@@ -153,45 +220,35 @@ class TrainingLoadAnalyzer(InsightAnalyzer):
 
     name = "training_load"
 
-    def __init__(self, training_load: DataFrame, gold: DataFrame) -> None:
+    def __init__(self, training_load: pd.DataFrame,
+                 gold: pd.DataFrame) -> None:
         self.tl = training_load
         self.gold = gold
 
     def analyze(self) -> InsightResult:
-        tss = self.tl.orderBy("date").select("date", "tss").toPandas()
+        tss = _rows(self.tl[["date", "tss"]], order_by="date")
         n = len(tss)
         ctl = ema_exact_series(tss["tss"].fillna(0.0), span=42)
         atl = ema_exact_series(tss["tss"].fillna(0.0), span=7)
         tsb = float(ctl.iloc[-1] - atl.iloc[-1]) if n else 0.0
         form = ("fresh" if tsb > 15 else "neutral" if tsb >= 0
                 else "building" if tsb >= -15 else "fatigued")
-        # Rolling 14-day baselines, impairment flags (ST15).
-        from pyspark.sql import Window
-
-        wb = Window.orderBy("date").rowsBetween(-14, -1)
-        latest = (
-            self.gold.filter(F.col("resting_heart_rate_bpm").isNotNull())
-            .select(
-                "date",
-                "resting_heart_rate_bpm",
-                "hrv_ms",
-                F.avg("resting_heart_rate_bpm").over(wb).alias("rhr_base"),
-                F.avg("hrv_ms").over(wb).alias("hrv_base"),
-            )
-            .orderBy(F.desc("date"))
-            .limit(1)
-            .collect()
-        )
+        # Rolling 14-day baselines of the latest day, impairment flags
+        # (ST15).
+        g = _rows(self.gold, self.gold["resting_heart_rate_bpm"].notna(),
+                  "date")
         impaired = False
-        if latest:
-            r = latest[0]
+        if len(g):
+            r = g.iloc[-1]
+            rhr_base = spark_mean(g["resting_heart_rate_bpm"].iloc[-15:-1])
+            hrv_base = spark_mean(g["hrv_ms"].iloc[-15:-1])
             impaired = bool(
                 tsb < -15
-                and r["rhr_base"] is not None
+                and rhr_base is not None
                 and (
-                    r["resting_heart_rate_bpm"] > 1.10 * r["rhr_base"]
-                    or (r["hrv_base"] is not None
-                        and r["hrv_ms"] < 0.85 * r["hrv_base"])
+                    r["resting_heart_rate_bpm"] > 1.10 * rhr_base
+                    or (hrv_base is not None
+                        and r["hrv_ms"] < 0.85 * hrv_base)
                 )
             )
         stats = {
@@ -212,56 +269,32 @@ class TrainingLoadAnalyzer(InsightAnalyzer):
         )
 
 
-def _rolling_avg(col: str, lo: int, min_periods: int):
-    """Row-window rolling mean that mirrors pandas
-    ``rolling(n, min_periods=k)``: null until k non-null rows are in
-    the window. Global date order — single-user daily grain."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy("date").rowsBetween(lo, 0)
-    return F.when(
-        F.count(col).over(w) >= min_periods, F.avg(col).over(w)
-    )
-
-
 class AnomalyDetectionAnalyzer(InsightAnalyzer):
     """Readiness anomalies + missed-workout streaks (ref insights/
     anomaly_detection.py:19-96): days >1.5σ below the personal mean,
-    plus 3+-day workout streaks that break. Mean/σ/flags computed in
-    Spark; only the flagged days and the daily had_workout series
-    (bounded by calendar days) reach the driver."""
+    plus 3+-day workout streaks that break. Mean and σ aggregate the
+    rows in gold's order, as the SQL aggregates did."""
 
     name = "anomaly_detection"
 
-    def __init__(self, gold: DataFrame) -> None:
+    def __init__(self, gold: pd.DataFrame) -> None:
         self.gold = gold
 
     def analyze(self) -> InsightResult:
-        base = self.gold.filter(F.col("readiness_score").isNotNull())
-        stats_row = base.agg(
-            F.avg("readiness_score").alias("mean_r"),
-            F.stddev("readiness_score").alias("std_r"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        mean_r = float(stats_row["mean_r"] or 0.0)
-        std_r = float(stats_row["std_r"] or 0.0)
-        n = int(stats_row["n"])
+        base = self.gold[self.gold["readiness_score"].notna()]
+        readiness = base["readiness_score"].astype(float)
+        mean_r = spark_mean(readiness) or 0.0
+        std_r = spark_stddev(readiness) or 0.0
+        n = len(base)
         threshold = mean_r - 1.5 * std_r
-        pdf = (
-            base.select(
-                "date",
-                F.col("readiness_score").cast("double").alias("readiness"),
-                F.col("sleep_score").cast("double").alias("sleep"),
-                F.coalesce(F.col("had_workout"), F.lit(False)).alias(
-                    "had_workout"
-                ),
-                (F.col("readiness_score") < F.lit(threshold)).alias(
-                    "is_anomaly"
-                ),
-            )
-            .orderBy("date")
-            .toPandas()
-        )
+        g = _rows(base, order_by="date")
+        pdf = pd.DataFrame({
+            "date": g["date"],
+            "readiness": g["readiness_score"].astype(float),
+            "sleep": g["sleep_score"].astype(float),
+            "had_workout": g["had_workout"].eq(True),
+            "is_anomaly": g["readiness_score"].astype(float) < threshold,
+        })
         anomaly_details = [
             {
                 "date": str(r.date),
@@ -322,14 +355,14 @@ class AnomalyDetectionAnalyzer(InsightAnalyzer):
 class _VitalsTrendAnalyzer(InsightAnalyzer):
     """Shared engine for the HRV and RHR trend analyzers (ref
     insights/hrv_trend.py:21-119, rhr_trend.py:20-135): 7d/30d rolling
-    averages (Spark windows, pandas min_periods semantics), a
-    7d-vs-30d status band, correlation with readiness, and the
-    30d-vs-prior-30d monthly trend."""
+    averages (pandas min_periods semantics), a 7d-vs-30d status band,
+    correlation with readiness, and the 30d-vs-prior-30d monthly
+    trend."""
 
     metric_col = ""
     higher_is_better = True
 
-    def __init__(self, gold: DataFrame) -> None:
+    def __init__(self, gold: pd.DataFrame) -> None:
         self.gold = gold
 
     def _status(self, diff: float) -> tuple[str, str]:
@@ -337,26 +370,15 @@ class _VitalsTrendAnalyzer(InsightAnalyzer):
 
     def analyze(self) -> InsightResult:
         m = self.metric_col
-        pdf = (
-            self.gold.filter(F.col(m).isNotNull())
-            .select(
-                "date",
-                F.col(m).cast("double").alias("metric"),
-                F.col("readiness_score").cast("double").alias(
-                    "readiness_score"
-                ),
-            )
-            .withColumn("metric", F.col("metric"))
-            .select(
-                "date",
-                "metric",
-                "readiness_score",
-                _rolling_avg("metric", -6, 3).alias("m7"),
-                _rolling_avg("metric", -29, 7).alias("m30"),
-            )
-            .orderBy("date")
-            .toPandas()
-        )
+        g = _rows(self.gold, self.gold[m].notna(), "date")
+        metric = g[m].astype(float)
+        pdf = pd.DataFrame({
+            "date": g["date"],
+            "metric": metric,
+            "readiness_score": g["readiness_score"].astype(float),
+            "m7": window_mean(metric, -6, 0, min_count=3),
+            "m30": window_mean(metric, -29, 0, min_count=7),
+        })
         n = len(pdf)
         if n == 0:
             return InsightResult(self.name, {"n": 0},
@@ -490,21 +512,15 @@ class TemperatureTrendAnalyzer(InsightAnalyzer):
 
     name = "temperature_trend"
 
-    def __init__(self, temperature_trends: DataFrame) -> None:
+    def __init__(self, temperature_trends: pd.DataFrame) -> None:
         self.view = temperature_trends
 
     def analyze(self) -> InsightResult:
-        pdf = (
-            self.view.select(
-                "day", "temp_deviation", "temp_trend_deviation",
-                "temp_dev_7day_avg",
-                F.col("readiness_score").cast("double").alias(
-                    "readiness_score"
-                ),
-                (F.abs("temp_deviation") > 0.3).alias("elevated"),
-            )
-            .orderBy("day")
-            .toPandas()
+        v = _rows(self.view, order_by="day")
+        pdf = v[["day", "temp_deviation", "temp_trend_deviation",
+                 "temp_dev_7day_avg"]].assign(
+            readiness_score=v["readiness_score"].astype(float),
+            elevated=v["temp_deviation"].abs() > 0.3,
         )
         n = len(pdf)
         if n == 0:
@@ -572,12 +588,11 @@ class TemperatureTrendAnalyzer(InsightAnalyzer):
 class NutritionAnalyzer(InsightAnalyzer):
     """Nutrition intake vs recovery (ref insights/nutrition_analyzer.py:
     20-150): averages, macro split, 7-day tail, calorie/protein →
-    readiness correlations. All aggregates run in Spark; the daily
-    frame collected is calendar-bounded."""
+    readiness correlations over the logged days."""
 
     name = "nutrition"
 
-    def __init__(self, gold: DataFrame) -> None:
+    def __init__(self, gold: pd.DataFrame) -> None:
         self.gold = gold
 
     def analyze(self) -> InsightResult:
@@ -592,13 +607,12 @@ class NutritionAnalyzer(InsightAnalyzer):
                 "Run the MFP silver normalizer and gold rebuild.",
                 ["MFP pipeline has not run yet."],
             )
-        pdf = (
-            self.gold.filter(F.col("daily_calories").isNotNull())
-            .select("date", *[F.col(c).cast("double").alias(c)
-                              for c in cols])
-            .dropDuplicates(["date"])
-            .orderBy("date")
-            .toPandas()
+        logged = self.gold[self.gold["daily_calories"].notna()]
+        pdf = _rows(
+            pd.DataFrame({"date": logged["date"],
+                          **{c: logged[c].astype(float) for c in cols}})
+            .drop_duplicates("date"),
+            order_by="date",
         )
         n = len(pdf)
         if n < 3:
@@ -663,43 +677,27 @@ class NutritionAnalyzer(InsightAnalyzer):
 
 class TimingCorrelationAnalyzer(InsightAnalyzer):
     """Workout intensity → next-day recovery (ref insights/
-    timing_correlation.py:25-140): next-day self-join in Spark,
-    quintile intensity buckets, Spearman ρ, recent-14d vs prior
-    comparison."""
+    timing_correlation.py:25-140): next-day self-join, quintile
+    intensity buckets, Spearman ρ, recent-14d vs prior comparison."""
 
     name = "timing_correlation"
     BUCKET_LABELS = ["Rest", "Light", "Moderate", "Hard", "Max"]
 
-    def __init__(self, gold: DataFrame) -> None:
+    def __init__(self, gold: pd.DataFrame) -> None:
         self.gold = gold
 
     def analyze(self) -> InsightResult:
-        from bio_lakehouse_spark.functions.dates import safe_date
-
-        a, b = self.gold.alias("a"), self.gold.alias("b")
-        pdf = (
-            a.join(
-                b,
-                safe_date(F.col("b.date"))
-                == F.date_add(safe_date(F.col("a.date")), 1),
-            )
-            .filter(
-                (F.col("a.had_workout") == True)  # noqa: E712
-                & F.col("a.total_output_kj").isNotNull()
-                & F.col("b.readiness_score").isNotNull()
-            )
-            .select(
-                F.col("a.date").alias("date"),
-                F.col("a.total_output_kj").cast("double").alias(
-                    "total_output_kj"
-                ),
-                F.col("b.readiness_score").cast("double").alias(
-                    "next_day_readiness"
-                ),
-            )
-            .orderBy("date")
-            .toPandas()
+        g = self.gold
+        pairs = _next_day_pairs(
+            g,
+            g["had_workout"].eq(True) & g["total_output_kj"].notna(),
+            g["readiness_score"].notna(),
         )
+        pdf = _rows(pd.DataFrame({
+            "date": pairs["date_a"],
+            "total_output_kj": pairs["total_output_kj_a"].astype(float),
+            "next_day_readiness": pairs["readiness_score_b"].astype(float),
+        }), order_by="date")
         n = len(pdf)
         if n < 5:
             return InsightResult(
@@ -778,71 +776,44 @@ class TimingCorrelationAnalyzer(InsightAnalyzer):
 class WorkoutRecoveryAnalyzer(InsightAnalyzer):
     """Next-day readiness by prior-day workout TYPE (ref insights/
     workout_recovery.py:20-135): categorize from disciplines +
-    HealthKit types (Spark CASE chain), group stats, Mann-Whitney U
-    between the two largest groups."""
+    HealthKit types (first matching keyword wins), group stats,
+    Mann-Whitney U between the two largest groups."""
 
     name = "workout_recovery"
     MIN_DAYS = 20
+    # (category, keywords) in match order; Rest Day and Other Workout
+    # bracket the list.
+    CATEGORIES = [
+        ("Cycling", ("cycling",)),
+        ("Strength", ("strength",)),
+        ("Walking", ("walking", "hiking")),
+        ("Cardio", ("running", "bootcamp", "hiit", "high_intensity")),
+        ("Recovery", ("yoga", "stretching", "meditation", "flexibility",
+                      "pilates")),
+    ]
 
-    def __init__(self, gold: DataFrame) -> None:
+    def __init__(self, gold: pd.DataFrame) -> None:
         self.gold = gold
 
     def analyze(self) -> InsightResult:
-        from bio_lakehouse_spark.functions.dates import safe_date
-
-        a, b = self.gold.alias("a"), self.gold.alias("b")
-        combined = F.lower(
-            F.concat_ws(
-                ",",
-                F.coalesce(F.col("a.disciplines"), F.lit("")),
-                F.coalesce(F.col("a.hk_workout_types"), F.lit("")),
-            )
+        g = self.gold
+        pairs = _next_day_pairs(
+            g, pd.Series(True, index=g.index), g["readiness_score"].notna()
         )
-        category = (
-            F.when(
-                F.coalesce(F.col("a.had_workout"), F.lit(False)) == False,  # noqa: E712
-                "Rest Day",
-            )
-            .when(combined.contains("cycling"), "Cycling")
-            .when(combined.contains("strength"), "Strength")
-            .when(
-                combined.contains("walking") | combined.contains("hiking"),
-                "Walking",
-            )
-            .when(
-                combined.contains("running")
-                | combined.contains("bootcamp")
-                | combined.contains("hiit")
-                | combined.contains("high_intensity"),
-                "Cardio",
-            )
-            .when(
-                combined.contains("yoga")
-                | combined.contains("stretching")
-                | combined.contains("meditation")
-                | combined.contains("flexibility")
-                | combined.contains("pilates"),
-                "Recovery",
-            )
-            .otherwise("Other Workout")
-        )
-        pdf = (
-            a.join(
-                b,
-                safe_date(F.col("b.date"))
-                == F.date_add(safe_date(F.col("a.date")), 1),
-            )
-            .filter(F.col("b.readiness_score").isNotNull())
-            .select(
-                F.col("a.date").alias("workout_date"),
-                category.alias("workout_category"),
-                F.col("b.readiness_score").cast("double").alias(
-                    "next_day_readiness"
-                ),
-            )
-            .orderBy("workout_date")
-            .toPandas()
-        )
+        combined = (pairs["disciplines_a"].fillna("") + ","
+                    + pairs["hk_workout_types_a"].fillna("")).str.lower()
+        conditions = [~pairs["had_workout_a"].eq(True)] + [
+            np.logical_or.reduce([combined.str.contains(k, regex=False)
+                                  for k in keywords])
+            for _, keywords in self.CATEGORIES
+        ]
+        labels = ["Rest Day"] + [c for c, _ in self.CATEGORIES]
+        pdf = _rows(pd.DataFrame({
+            "workout_date": pairs["date_a"],
+            "workout_category": np.select(conditions, labels,
+                                          "Other Workout").astype(object),
+            "next_day_readiness": pairs["readiness_score_b"].astype(float),
+        }), order_by="workout_date")
         unique_days = pdf["workout_date"].nunique()
         if unique_days < self.MIN_DAYS:
             return InsightResult(
@@ -916,26 +887,17 @@ class RecoveryWindowAnalyzer(InsightAnalyzer):
     name = "recovery_windows"
     MIN_WORKOUTS = 10
 
-    def __init__(self, recovery_windows: DataFrame) -> None:
+    def __init__(self, recovery_windows: pd.DataFrame) -> None:
         self.view = recovery_windows
 
     def analyze(self) -> InsightResult:
-        pdf = (
-            self.view.select(
-                "workout_date", "intensity",
-                F.col("days_to_recover").cast("double").alias(
-                    "days_to_recover"
-                ),
-                *[
-                    F.col(c).cast("double").alias(c)
-                    for c in ("readiness_delta_d1", "readiness_delta_d2",
-                              "readiness_delta_d3", "total_minutes",
-                              "total_calories")
-                ],
-            )
-            .orderBy("workout_date")
-            .toPandas()
-        )
+        v = _rows(self.view, order_by="workout_date")
+        pdf = v[["workout_date", "intensity"]].assign(**{
+            c: v[c].astype(float)
+            for c in ("days_to_recover", "readiness_delta_d1",
+                      "readiness_delta_d2", "readiness_delta_d3",
+                      "total_minutes", "total_calories")
+        })
         n = len(pdf)
         if n < self.MIN_WORKOUTS:
             return InsightResult(
@@ -1003,31 +965,17 @@ class SleepArchitectureAnalyzer(InsightAnalyzer):
 
     name = "sleep_architecture"
 
-    def __init__(self, sleep_architecture_view: DataFrame) -> None:
+    def __init__(self, sleep_architecture_view: pd.DataFrame) -> None:
         self.view = sleep_architecture_view
 
     def analyze(self) -> InsightResult:
-        from pyspark.sql import Window
-
-        w7 = Window.orderBy("day").rowsBetween(-6, 0)
-        pdf = (
-            self.view.select(
-                "day",
-                *[
-                    F.col(c).cast("double").alias(c)
-                    for c in ("sleep_score", "deep_sleep", "rem_sleep")
-                ],
-            )
-            .select(
-                "*",
-                F.when(F.count("deep_sleep").over(w7) >= 3,
-                       F.avg("deep_sleep").over(w7)).alias("deep_sleep_7d"),
-                F.when(F.count("rem_sleep").over(w7) >= 3,
-                       F.avg("rem_sleep").over(w7)).alias("rem_sleep_7d"),
-            )
-            .orderBy("day")
-            .toPandas()
-        )
+        v = _rows(self.view, order_by="day")
+        pdf = v[["day"]].assign(**{
+            c: v[c].astype(float) for c in ("sleep_score", "deep_sleep",
+                                          "rem_sleep")
+        })
+        for c in ("deep_sleep", "rem_sleep"):
+            pdf[f"{c}_7d"] = window_mean(pdf[c], -6, 0, min_count=3)
         n = len(pdf)
         if n == 0:
             return InsightResult(self.name, {"n": 0}, "No sleep data.",
@@ -1086,83 +1034,87 @@ OVERLOAD_THRESHOLDS = {
 
 class ProgressiveOverloadAnalyzer(InsightAnalyzer):
     """Week-over-week cycling progression (ref insights/
-    progressive_overload.py:23-294): weekly aggregation + deltas run in
-    Spark (window lag over the weekly grain), the 4-signal
-    Progressing/Maintaining/Regressing vote and CTL context on the
-    collected weekly frame. ST16 as an InsightResult product — the
-    driver-verified weekly query twin is suite/stats_queries.py
-    progressive_overload_weekly."""
+    progressive_overload.py:23-294): weekly aggregation over Monday
+    weeks + week-over-week deltas, the 4-signal
+    Progressing/Maintaining/Regressing vote and CTL context. ST16 as
+    an InsightResult product — the driver-verified weekly query twin
+    is suite/stats_queries.py progressive_overload_weekly."""
 
     name = "progressive_overload"
 
-    def __init__(self, peloton_silver: DataFrame,
-                 training_load: DataFrame | None = None) -> None:
+    def __init__(self, peloton_silver: pd.DataFrame,
+                 training_load: pd.DataFrame | None = None) -> None:
         self.workouts = peloton_silver
         self.tl = training_load
 
-    def analyze(self) -> InsightResult:
-        from pyspark.sql import Window
-
-        TH = OVERLOAD_THRESHOLDS
-        df = self.workouts.filter(
-            F.col("total_output_kj").isNotNull()
-            & (F.col("total_output_kj") > 0)
+    @staticmethod
+    def weekly(rides: pd.DataFrame) -> pd.DataFrame:
+        """One row per Monday week (``date_trunc('week')``), in week
+        order: sums and means of the week's rides, accumulated in ride
+        order as Spark's aggregates are, then the deltas to the week
+        before (a zero-output week before leaves the change NULL)."""
+        stamp = pd.to_datetime(rides["workout_date"])
+        monday = stamp.dt.normalize() - pd.to_timedelta(stamp.dt.weekday,
+                                                        unit="D")
+        weeks: dict = {}
+        for key, row in zip(monday.dt.date.where(monday.notna(), None),
+                            rides.itertuples()):
+            weeks.setdefault(key, []).append(row)
+        rows = []
+        for key in sorted(weeks, key=lambda k: (k is not None, k)):
+            w = weeks[key]
+            watts = spark_mean(r.avg_watts for r in w)
+            hr = spark_mean(r.avg_heartrate for r in w)
+            rows.append({
+                "week_start": key,
+                "weekly_total_output": spark_sum(
+                    r.total_output_kj for r in w),
+                "weekly_avg_watts": watts,
+                "weekly_avg_output_per_min": spark_mean(
+                    r.output_per_minute for r in w),
+                "weekly_workout_count": len(w),
+                "weekly_avg_hr": hr,
+                "weekly_total_minutes": spark_sum(
+                    r.length_minutes for r in w),
+                "weekly_hr_efficiency": (
+                    None if watts is None else watts / hr
+                ) if hr is not None and hr > 0 else 0.0,
+            })
+        weekly = pd.DataFrame(rows, columns=[
+            "week_start", "weekly_total_output", "weekly_avg_watts",
+            "weekly_avg_output_per_min", "weekly_workout_count",
+            "weekly_avg_hr", "weekly_total_minutes", "weekly_hr_efficiency",
+        ])
+        # Fetched, a BIGINT column is int64 unless it holds a NULL.
+        for c in weekly.columns[1:]:
+            integral = (c in ("weekly_workout_count", "weekly_total_minutes")
+                        and weekly[c].notna().all())
+            weekly[c] = weekly[c].astype("int64" if integral else float)
+        prev = weekly.shift(1)
+        total, prev_total = weekly["weekly_total_output"], prev[
+            "weekly_total_output"]
+        return weekly.assign(
+            output_pct_change=((total - prev_total) / prev_total)
+            .where(prev_total != 0),
+            watts_delta=weekly["weekly_avg_watts"] - prev["weekly_avg_watts"],
+            output_per_min_delta=weekly["weekly_avg_output_per_min"]
+            - prev["weekly_avg_output_per_min"],
+            hr_efficiency_delta=weekly["weekly_hr_efficiency"]
+            - prev["weekly_hr_efficiency"],
         )
-        if df.isEmpty():
+
+    def analyze(self) -> InsightResult:
+        TH = OVERLOAD_THRESHOLDS
+        w = self.workouts
+        rides = w[w["total_output_kj"].notna() & (w["total_output_kj"] > 0)]
+        if rides.empty:
             return InsightResult(
                 self.name, {},
                 "No cycling workouts with power data found.",
                 ["Insufficient data."])
-        week = F.date_trunc("week", F.col("workout_date")).cast("date")
-        weekly_sdf = (
-            df.groupBy(week.alias("week_start"))
-            .agg(
-                F.sum("total_output_kj").alias("weekly_total_output"),
-                F.avg("avg_watts").alias("weekly_avg_watts"),
-                F.avg("output_per_minute").alias(
-                    "weekly_avg_output_per_min"
-                ),
-                F.count(F.lit(1)).alias("weekly_workout_count"),
-                F.avg("avg_heartrate").alias("weekly_avg_hr"),
-                F.sum("length_minutes").alias("weekly_total_minutes"),
-            )
-            .withColumn(
-                "weekly_hr_efficiency",
-                F.when(
-                    F.col("weekly_avg_hr") > 0,
-                    F.col("weekly_avg_watts") / F.col("weekly_avg_hr"),
-                ).otherwise(F.lit(0.0)),
-            )
-        )
-        w = Window.orderBy("week_start")
-        lag = lambda c: F.lag(F.col(c), 1).over(w)  # noqa: E731
-        weekly = (
-            weekly_sdf.select(
-                "*",
-                # try_divide: a zero-output week in the lag position
-                # aborted the whole report under ANSI mode (r11 audit)
-                F.try_divide(
-                    F.col("weekly_total_output")
-                    - lag("weekly_total_output"),
-                    lag("weekly_total_output"),
-                ).alias("output_pct_change"),
-                (F.col("weekly_avg_watts") - lag("weekly_avg_watts")).alias(
-                    "watts_delta"
-                ),
-                (F.col("weekly_avg_output_per_min")
-                 - lag("weekly_avg_output_per_min")).alias(
-                    "output_per_min_delta"
-                ),
-                (F.col("weekly_hr_efficiency")
-                 - lag("weekly_hr_efficiency")).alias(
-                    "hr_efficiency_delta"
-                ),
-            )
-            .orderBy("week_start")
-            .toPandas()
-        )
+        weekly = self.weekly(rides)
         n_weeks = len(weekly)
-        n_workouts = df.count()
+        n_workouts = len(rides)
         if n_weeks < TH["min_weeks"]:
             return InsightResult(
                 self.name, {"n_weeks": n_weeks},
@@ -1206,9 +1158,7 @@ class ProgressiveOverloadAnalyzer(InsightAnalyzer):
         # CTL context from the daily TSS series (exact EMA span 42).
         ctl_now = ctl_delta = 0.0
         if self.tl is not None:
-            tss = (
-                self.tl.select("date", "tss").orderBy("date").toPandas()
-            )
+            tss = _rows(self.tl[["date", "tss"]], order_by="date")
             if len(tss) >= 7:
                 ctl_series = ema_exact_series(
                     pd.to_numeric(tss["tss"], errors="coerce").fillna(0.0),
@@ -1266,55 +1216,72 @@ def default_analyzers(spark, gold: DataFrame,
     """The full 13-analyzer roster the reference's weekly report fans
     over (ref reports/weekly_report.py:121-205). Pass the silver
     peloton frame (or a silver_root to read it from) to include
-    progressive overload; pass stg_sleep for sleep architecture.
+    progressive overload; pass stg_sleep for sleep architecture. A
+    silver table is read with its declared schema, so no read runs a
+    job to infer one.
 
     Every input is day grain for one person (O(calendar days) rows;
-    peloton one row per workout), so each is pinned first, all at
-    once (``gold.pin_day_grain``): the analyzers' windows and
-    aggregates then read one in-memory partition and plan no
-    exchange. The pins live as long as the returned analyzers."""
+    peloton one row per workout), so each is fetched into pandas once,
+    all at once through ``fan_out`` (Arrow): gold, the recovery
+    windows, silver peloton and the four views the analyzers read.
+    Gold is pinned first (``gold.pin_day_grain``), so the four views
+    read it from memory instead of re-scanning parquet.
+    The views keep their one SQL implementation and are fetched, not
+    re-derived; the analyzers are pandas functions of the frames."""
+    from bio_lakehouse_spark.bio import schemas as S
     from bio_lakehouse_spark.bio import views as V
     from bio_lakehouse_spark.bio.gold import pin_day_grain, stg_sleep
 
     if silver_root is not None:
         if stg_sleep_df is None:
             stg_sleep_df = stg_sleep(
-                spark.read.parquet(f"{silver_root}/oura_daily_sleep")
+                spark.read.schema(S.OURA_DAILY_SLEEP_SILVER_SCHEMA)
+                .parquet(f"{silver_root}/oura_daily_sleep")
             )
         if peloton_silver is None:
-            peloton_silver = spark.read.parquet(
-                f"{silver_root}/peloton_workouts"
-            )
-    gold, stg_sleep_df, peloton_silver, recovery_windows = fan_out([
-        (lambda df=df: None if df is None else pin_day_grain(df))
-        for df in (gold, stg_sleep_df, peloton_silver, recovery_windows)
-    ])
+            peloton_silver = spark.read.schema(
+                S.PELOTON_WORKOUTS_SILVER_SCHEMA
+            ).parquet(f"{silver_root}/peloton_workouts")
+    # Gold feeds four views as well: pinned, it is read once.
+    gold = pin_day_grain(gold)
+    inputs = {
+        "gold": gold,
+        "training_load": V.training_load_daily(gold),
+        "temperature": V.temperature_trends(gold),
+        # Only the pair columns: the projection sizes the self-join's
+        # sides, and so its build side and the row order the
+        # regression sums in.
+        "sleep_prediction": V.sleep_performance_prediction(gold).select(
+            "sleep_date", "prev_night_sleep", "next_day_readiness"
+        ),
+        "sleep_architecture": None if stg_sleep_df is None
+        else V.sleep_architecture(gold, stg_sleep_df),
+        "peloton": peloton_silver,
+        "recovery_windows": recovery_windows,
+    }
+    fetched = [k for k, df in inputs.items() if df is not None]
+    pdf = dict(zip(fetched, fan_out([inputs[k].toPandas for k in fetched])))
+    g = pdf["gold"]
     analyzers: list[InsightAnalyzer] = [
-        SleepReadinessAnalyzer(V.sleep_performance_prediction(gold)),
-        ReadinessTrendAnalyzer(gold),
-        TrainingLoadAnalyzer(V.training_load_daily(gold), gold),
-        AnomalyDetectionAnalyzer(gold),
-        HRVTrendAnalyzer(gold),
-        RHRTrendAnalyzer(gold),
-        TemperatureTrendAnalyzer(V.temperature_trends(gold)),
-        NutritionAnalyzer(gold),
-        TimingCorrelationAnalyzer(gold),
-        WorkoutRecoveryAnalyzer(gold),
+        SleepReadinessAnalyzer(pdf["sleep_prediction"]),
+        ReadinessTrendAnalyzer(g),
+        TrainingLoadAnalyzer(pdf["training_load"], g),
+        AnomalyDetectionAnalyzer(g),
+        HRVTrendAnalyzer(g),
+        RHRTrendAnalyzer(g),
+        TemperatureTrendAnalyzer(pdf["temperature"]),
+        NutritionAnalyzer(g),
+        TimingCorrelationAnalyzer(g),
+        WorkoutRecoveryAnalyzer(g),
     ]
-    if stg_sleep_df is not None:
+    if "sleep_architecture" in pdf:
+        analyzers.append(SleepArchitectureAnalyzer(pdf["sleep_architecture"]))
+    if "peloton" in pdf:
         analyzers.append(
-            SleepArchitectureAnalyzer(
-                V.sleep_architecture(gold, stg_sleep_df)
-            )
+            ProgressiveOverloadAnalyzer(pdf["peloton"], pdf["training_load"])
         )
-    if peloton_silver is not None:
-        analyzers.append(
-            ProgressiveOverloadAnalyzer(
-                peloton_silver, V.training_load_daily(gold)
-            )
-        )
-    if recovery_windows is not None:
-        analyzers.append(RecoveryWindowAnalyzer(recovery_windows))
+    if "recovery_windows" in pdf:
+        analyzers.append(RecoveryWindowAnalyzer(pdf["recovery_windows"]))
     return analyzers
 
 
@@ -1403,9 +1370,9 @@ def _stats_table(stats: dict) -> str:
 
 
 class WeeklyReportGenerator:
-    """S17 (ref reports/weekly_report.py:121-456): fan across the
-    analyzers concurrently (``session.fan_out``; results stay in
-    analyzer order), render Jinja2 HTML with embedded plotly
+    """S17 (ref reports/weekly_report.py:121-456): run the analyzers
+    in order (pandas over frames already fetched, so threads would
+    only contend for the GIL), render Jinja2 HTML with embedded plotly
     figure JSON (products.render — the reference's weekly.html
     equivalent, with browser-side plotly.js standing in for the
     reference's server-side PNG export), deliver to a file sink.
@@ -1415,7 +1382,7 @@ class WeeklyReportGenerator:
         self.analyzers = analyzers
 
     def generate(self, week_label: str) -> tuple[str, list[InsightResult]]:
-        results = fan_out([a.analyze for a in self.analyzers])
+        results = [a.analyze() for a in self.analyzers]
         # Only the render-module IMPORT may degrade to the plain-text
         # fallback (render raises RuntimeError solely when jinja2 is
         # absent, re-raised here as the same signal). Exceptions from

@@ -410,10 +410,12 @@ def fan_out(fns: Sequence[Callable[[], _T]]) -> list[_T]:
         return []
     spark = SparkSession.active()
     jsession = spark._jsparkSession
+    # Resolved once: each step of a ``_jvm`` path is a round trip.
+    jsession_class = spark._jvm.org.apache.spark.sql.SparkSession
 
     def task(fn: Callable[[], _T]) -> Callable[[], _T]:
         def run() -> _T:
-            spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(jsession)
+            jsession_class.setActiveSession(jsession)
             return fn()
 
         # Wrapping here, in the caller's thread, snapshots its local

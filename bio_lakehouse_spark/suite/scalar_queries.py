@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bio_lakehouse_spark.functions.banding import case_banding, map_lookup
+from bio_lakehouse_spark.functions.banding import case_banding, map_lookup_sql
 from bio_lakehouse_spark.functions.dates import (
     day_of_week_iso,
     safe_date,
@@ -160,7 +160,7 @@ def map_lookup_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEAST cap (F7 — output_per_minute, readiness_to_output_ratio) and
     ROUND/ABS (F11)."""
     ev = load(spark, sf_dir, "events")
-    category = map_lookup(
+    category = F.expr(map_lookup_sql(
         "event_type",
         {
             "click": "engagement",
@@ -168,7 +168,7 @@ def map_lookup_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase": "revenue",
             "signup": "growth",
         },
-    )
+    ))
     zone = case_banding(
         "value",
         [(400, "zone5"), (300, "zone4"), (200, "zone3"), (100, "zone2")],

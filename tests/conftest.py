@@ -81,16 +81,20 @@ def count_jobs(spark):
 def count_py4j(spark):
     """``count_py4j(fn)`` calls ``fn()`` and returns how many py4j
     commands the Python side sent the JVM meanwhile, from any thread:
-    each is one driver round trip."""
+    each is one driver round trip. py4j's memory commands (``m``, the
+    release of a freed proxy) are not counted: py4j's own thread sends
+    them whenever Python frees proxies, those of earlier work
+    included, and no call waits on them."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
 
     def count(fn) -> int:
         calls = itertools.count()
 
-        def counted(*args, **kwargs):
-            next(calls)
-            return send(*args, **kwargs)
+        def counted(command, *args, **kwargs):
+            if not command.startswith("m\n"):
+                next(calls)
+            return send(command, *args, **kwargs)
 
         client.send_command = counted
         try:

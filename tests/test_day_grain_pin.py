@@ -15,9 +15,15 @@ import pandas as pd
 import pytest
 
 BIO_ROOT = Path(__file__).resolve().parents[1] / ".fixtures" / "bio"
-# Jobs of default_analyzers + generate on the fixture refresh: 51 when
-# every analyzer re-scanned parquet and shuffled for its windows.
-REPORT_JOBS = 30
+# Jobs of the report on the fixture refresh, reads included: 51 when
+# every analyzer re-scanned parquet and shuffled for its windows, 30
+# when they ran their own Spark jobs over pinned inputs. Now: the two
+# footer reads of gold and the windows, the gold pin, the seven
+# fetched inputs and the broadcasts of the two join views.
+REPORT_JOBS = 12
+# py4j round trips of default_analyzers + generate; ~5.5k when the
+# analyzers built their own Spark frames.
+REPORT_PY4J = 600
 _SHUFFLE = re.compile(
     r"Exchange (hashpartitioning|SinglePartition|rangepartitioning)"
 )
@@ -118,3 +124,24 @@ def test_report_job_count(spark, count_jobs, refreshed):
     session, work = refreshed
     jobs = count_jobs(lambda: _report(session, work))
     assert jobs <= REPORT_JOBS, jobs
+
+
+def test_report_driver_round_trips(count_py4j, refreshed):
+    from bio_lakehouse_spark.products import insights
+
+    session, work = refreshed
+    gold = session.read.parquet(str(work / "gold" / "gold_daily_rollup"))
+    windows = session.read.parquet(
+        str(work / "gold" / "workout_recovery_windows")
+    )
+
+    def report():
+        analyzers = insights.default_analyzers(
+            session, gold, silver_root=str(work / "silver"),
+            recovery_windows=windows,
+        )
+        insights.WeeklyReportGenerator(analyzers).generate("pin")
+
+    report()
+    calls = count_py4j(report)
+    assert calls <= REPORT_PY4J, calls

@@ -24,7 +24,7 @@ from bio_lakehouse_spark.sources.csv_source import (
     sniff_delimiter,
     snake_case,
 )
-from bio_lakehouse_spark.sources.files import latest_file, list_files
+from bio_lakehouse_spark.sources.files import latest_file, list_files, recursive_csv
 
 BIO_ROOT = Path(__file__).resolve().parents[1] / ".fixtures" / "bio"
 
@@ -217,6 +217,28 @@ def test_header_grouped_read_spends_no_job_on_headers(spark, tmp_path, count_job
     (tmp_path / "b.csv").write_text("day;id\ny;2\n")
     paths = list_files(tmp_path, "*.csv")
     assert count_jobs(lambda: read_header_grouped_csv(spark, paths)) == 0
+
+
+@pytest.mark.parametrize("second, jobs", [
+    ("id,day\n3,z\n", 0),    # one shared header: its schema, no job
+    ("day,id\nz,3\n", 1),    # headers differ: Spark infers from one file
+    ("", 1),                  # an empty file: Spark infers
+])
+def test_recursive_csv_reads_a_shared_header(spark, tmp_path, count_jobs,
+                                             second, jobs):
+    (tmp_path / "y=1").mkdir()
+    (tmp_path / "a.csv").write_text("id,day\n1,x\n2,y\n")
+    (tmp_path / "y=1" / "b.csv").write_text(second)
+    (tmp_path / "_SUCCESS").write_text("")  # hidden from Spark's listing
+    got: list = []
+    assert count_jobs(lambda: got.append(recursive_csv(spark, tmp_path))) == jobs
+    inferred = (spark.read.option("header", "true")
+                .option("recursiveFileLookup", "true")
+                .option("inferSchema", "false").csv(str(tmp_path)))
+    assert got[0].schema == inferred.schema
+    assert sorted(map(tuple, got[0].collect())) == sorted(
+        map(tuple, inferred.collect())
+    )
 
 
 def test_latest_file(tmp_path):

@@ -24,13 +24,17 @@ BIO_ROOT = Path(__file__).resolve().parents[1] / ".fixtures" / "bio"
 # job each; the rollup it writes is read back with the written schema
 # and pinned in one job, after which the window writes run no shuffle.
 # SILVER_JOBS was 28 while each header-grouped and Peloton CSV read ran
-# a job to read its header; they now take the schema from the header
-# line the driver already read.
-SILVER_JOBS = 23
+# a job to read its header, and 23 while each of the four HealthKit
+# trees and the MFP tree ran one too; every read now takes the schema
+# from a header line the driver reads.
+SILVER_JOBS = 18
 GOLD_JOBS = 28
 # py4j round trips allowed for publishing gold and the 11 views; built
 # call by call as DataFrames they took ~9.1k.
 REGISTER_VIEWS_PY4J = 400
+# ... and for building and writing the nine silver tables, one SQL
+# statement each; built column by column they took ~6.9k.
+RUN_SILVER_PY4J = 1000
 
 
 def _order(spark, count_jobs):
@@ -199,3 +203,13 @@ def test_register_views_driver_round_trips(spark, count_py4j, silver_ref):
     )
     assert len(names) == 12
     assert calls <= REGISTER_VIEWS_PY4J, calls
+
+
+def test_run_silver_driver_round_trips(spark, count_py4j, silver_ref,
+                                       tmp_path):
+    from bio_lakehouse_spark.bio.silver import run_silver
+
+    bronze = silver_ref[0]
+    run_silver(spark, bronze, str(tmp_path / "warm"))
+    calls = count_py4j(lambda: run_silver(spark, bronze, str(tmp_path / "out")))
+    assert calls <= RUN_SILVER_PY4J, calls

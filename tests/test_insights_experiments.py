@@ -118,10 +118,11 @@ def test_discover_end_to_end(gold, tmp_path):
 def test_insight_analyzers_and_report(spark, gold, tmp_path):
     from bio_lakehouse_spark.bio import views as V
 
+    frame = gold.toPandas()
     analyzers = [
-        SleepReadinessAnalyzer(V.sleep_performance_prediction(gold)),
-        ReadinessTrendAnalyzer(gold),
-        TrainingLoadAnalyzer(V.training_load_daily(gold), gold),
+        SleepReadinessAnalyzer(V.sleep_performance_prediction(gold).toPandas()),
+        ReadinessTrendAnalyzer(frame),
+        TrainingLoadAnalyzer(V.training_load_daily(gold).toPandas(), frame),
     ]
     results = {a.name: a.analyze() for a in analyzers}
     sr = results["sleep_readiness"]

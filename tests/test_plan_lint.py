@@ -82,10 +82,11 @@ def test_unpartitioned_window_inventory_is_pinned():
     `windows.global_row_number` (range-partitioned, no global sort),
     or re-audit the site as bounded and update the pin.
 
-    The gold models and views are Spark SQL text under `bio/`, so
-    their windows are counted there as SQL: each `OVER (ORDER BY` or
-    named `WINDOW w AS (ORDER BY` line is one unpartitioned window,
-    all over daily- or weekly-grain frames. (The other modules' SQL
+    The silver normalizers, gold models and views are Spark SQL text
+    under `bio/`, so their windows are counted there as SQL: each
+    `OVER (ORDER BY` or named `WINDOW w AS (ORDER BY` line is one
+    unpartitioned window, all over one person's daily readings or
+    daily- or weekly-grain frames. (The other modules' SQL
     text is DuckDB oracle SQL, which this net does not cover.)"""
     import os
     import subprocess
@@ -106,6 +107,7 @@ def test_unpartitioned_window_inventory_is_pinned():
 
     assert inventory(r"(OVER|AS) \(ORDER BY", "bio_lakehouse_spark/bio") == {
         "bio_lakehouse_spark/bio/gold.py": 22,
+        "bio_lakehouse_spark/bio/silver.py": 1,
         "bio_lakehouse_spark/bio/views.py": 12,
     }, (
         "unpartitioned SQL-window inventory of the gold models and views "
@@ -116,7 +118,6 @@ def test_unpartitioned_window_inventory_is_pinned():
     assert counts == {
         "bio_lakehouse_spark/suite/stats_queries.py": 17,
         "bio_lakehouse_spark/operators/stats.py": 12,
-        "bio_lakehouse_spark/products/insights.py": 5,
         "bio_lakehouse_spark/suite/hypothesis_queries.py": 4,
         "bio_lakehouse_spark/suite/text_queries.py": 3,
         "bio_lakehouse_spark/suite/window_queries.py": 2,

@@ -13,6 +13,7 @@ from bio_lakehouse_spark.functions.dates import (
     day_of_week_iso,
     day_of_week_iso_sql,
     safe_date,
+    safe_date_pandas,
     safe_date_sql,
     week_start,
     week_start_sql,
@@ -56,6 +57,15 @@ def test_date_snippet_matches_helper(spark, helper, snippet):
     assert all(got[d] is None for d in ("", "garbage", "2025-02-30", None))
     if helper is safe_date:
         assert str(got["2025-03-02 23:59:59"]) == "2025-03-02"
+
+
+def test_safe_date_pandas_matches_helper(spark):
+    import pandas as pd
+
+    df = spark.createDataFrame(DATES, "d string")
+    want = [r["col"] for r in df.select(safe_date("d").alias("col")).collect()]
+    got = safe_date_pandas(pd.Series([d for (d,) in DATES], dtype=object))
+    assert [None if pd.isna(v) else v.date() for v in got] == want
 
 
 def test_day_of_week_and_week_start_edges(spark):
