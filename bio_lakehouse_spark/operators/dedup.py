@@ -110,26 +110,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
-    """(doc_id, shingles, minhash_0..k-1): minhash_j = MIN over
-    shingles of xxhash64(j, shingle).
-
-    xxhash64 is a JVM built-in returning a long — ~10× cheaper than
-    the md5-hex-string variant (no string allocation per element) and
-    just as uniform for min-wise hashing. The LSH correctness oracle
-    is the brute-force Jaccard scan, so signature hash values never
-    need cross-engine reproducibility."""
-    sig_cols = [
-        F.array_min(
-            F.transform(F.col("shingles"), lambda s: F.xxhash64(F.lit(j), s))
-        ).alias(f"mh_{j}")
-        for j in range(num_hashes)
-    ]
-    return sh.select("doc_id", "shingles", *sig_cols)
-
-
 def minhash_signatures_raw(
     df: DataFrame,
     id_col: str,
@@ -151,8 +131,8 @@ def minhash_signatures_raw(
     columns — measured 2.5× slower), then k array_min/transform passes
     over the in-memory array. No explode, no window, no groupBy: the
     scan → signature stage is embarrassingly parallel, the shape that
-    survives 100 TB. Bit-identical to ``minhash_signatures`` over
-    ``shingle_sets`` (same xxhash64(j, gram) family, same short-doc
+    survives 100 TB. Each mh_j equals the minimum of xxhash64(j, ·)
+    over the gram set ``shingle_sets`` builds (same short-doc
     full-text fallback) — verified by the brute-force oracle."""
     from bio_lakehouse_spark.operators.textops import let, word_ngram_stream
 
@@ -710,39 +690,6 @@ def simhash64(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_cols: Sequence[str] = (),
-    n: int = 3,
-    max_hamming: int = 6,
-) -> DataFrame:
-    """Blocked SimHash pairs with hamming distance ≤ ``max_hamming``
-    (xor + bit_count)."""
-    sig = simhash32(df, id_col, text_col, n)
-    if block_cols:
-        sig = sig.join(
-            df.select(F.col(id_col).alias("doc_id"), *block_cols), on="doc_id"
-        )
-    a, b = sig.alias("a"), sig.alias("b")
-    cond = F.col("a.doc_id") < F.col("b.doc_id")
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    hamming = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def _band_specs(n_bands: int) -> list[tuple[str, int, int]]:
     """Split the 64-bit (sim_hi, sim_lo) signature into ``n_bands``
     disjoint bit ranges that never cross the 32-bit half boundary
@@ -788,9 +735,9 @@ def simhash_pairs_banded(
     of assuming it away. Candidates come from one explode +
     (band, value)-keyed aggregation — the same single-exchange shape
     as the MinHash LSH path — then exact xor+bit_count verification.
-    Compare ``simhash_pairs``: quadratic within its blocking column,
-    unusable when blocks are corpus-sized (an 'en' block IS the
-    corpus).
+    A blocked self-join would instead be quadratic within its
+    blocking column, unusable when blocks are corpus-sized (an 'en'
+    block IS the corpus).
 
     Generalized pigeonhole (r7): a pair within hamming ≤ h differs in
     at most h of the ``n_bands`` disjoint bit ranges, so it matches

@@ -5,9 +5,7 @@
   Streaming file source: new CSVs landing under a directory are
   discovered by the source's file tracking (exactly-once per file via
   the checkpoint), normalized minimally, and appended to a parquet
-  bronze table. ``availableNow`` drains the backlog and stops — the
-  daily-batch cadence — while the same code runs continuously with a
-  processing-time trigger on a cluster.
+  bronze table.
 - ``windowed_event_counts``: tumbling-window aggregation with a
   watermark for late data — the standard stateful-agg shape
   (SURVEY §2.10 notes the reference defers real-time to future work;
@@ -19,6 +17,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.sql.utils import AnalysisException
+
+from bio_lakehouse_spark.streaming import drain_foreach_batch, drain_to_parquet
+
+
+def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None while nothing has been
+    written there yet."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
 
 
 def stream_landing_to_bronze(
@@ -27,15 +37,14 @@ def stream_landing_to_bronze(
     bronze_dir: str,
     checkpoint_dir: str,
     schema: StructType | str,
-    available_now: bool = True,
 ):
     """File-source stream → parquet append sink.
 
-    Returns the started StreamingQuery; with ``available_now`` the
-    caller should ``awaitTermination()`` — the query stops by itself
-    after draining. The checkpoint directory carries the processed-file
-    log, so re-runs pick up only new files (the DynamoDB ingestion-log
-    role, handled by the engine itself).
+    Returns the started StreamingQuery; the caller
+    ``awaitTermination()``s it and it stops by itself after draining.
+    The checkpoint directory carries the processed-file log, so
+    re-runs pick up only new files (the DynamoDB ingestion-log role,
+    handled by the engine itself).
     """
     src = (
         spark.readStream.schema(schema)
@@ -44,17 +53,7 @@ def stream_landing_to_bronze(
         .csv(landing_dir)
     )
     src = src.withColumn("_ingested_file", F.input_file_name())
-    writer = (
-        src.writeStream.format("parquet")
-        .option("path", bronze_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return drain_to_parquet(src, bronze_dir, checkpoint_dir)
 
 
 def windowed_event_counts(
@@ -106,14 +105,7 @@ def stream_windowed_counts(
         .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     )
     agg = windowed_event_counts(src, ts_col, window_duration, watermark)
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_to_parquet(agg, out_dir, checkpoint_dir)
 
 
 def dedup_within_watermark(
@@ -155,14 +147,7 @@ def stream_dedup_to_parquet(
     deduped = dedup_within_watermark(
         src, key_cols or ["event_id"], ts_col, watermark
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_to_parquet(deduped, out_dir, checkpoint_dir)
 
 
 def stream_upsert_to_table(
@@ -174,7 +159,6 @@ def stream_upsert_to_table(
     key_cols: list[str],
     seq_col: str = "ts",
     partition_cols: list[str] | None = None,
-    available_now: bool = True,
 ):
     """Streaming CDC apply: file source → ``foreachBatch`` keyed
     MERGE into a parquet table (the canonical Structured Streaming +
@@ -196,7 +180,6 @@ def stream_upsert_to_table(
     """
     from bio_lakehouse_spark.sources.sinks import merge_upsert
     from pyspark.sql import Window
-    from pyspark.sql.utils import AnalysisException
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
         if not batch_df.columns:
@@ -210,8 +193,11 @@ def stream_upsert_to_table(
         )
         if latest.isEmpty():
             return
-        try:
-            current = spark.read.parquet(table_path).join(
+        table = _read_parquet_or_none(spark, table_path)
+        if table is None:
+            resolved = latest  # first batch — table doesn't exist yet
+        else:
+            current = table.join(
                 latest.select(*key_cols), key_cols, "left_semi"
             )
             resolved = (
@@ -224,8 +210,6 @@ def stream_upsert_to_table(
                 )
                 .select(*key_cols, "_v.*")
             )
-        except AnalysisException:
-            resolved = latest  # first batch — table doesn't exist yet
         merge_upsert(
             spark,
             table_path,
@@ -234,16 +218,12 @@ def stream_upsert_to_table(
             partition_cols or (),
         )
 
-    writer = (
+    src = (
         spark.readStream.schema(schema)
         .option("header", "true")
         .csv(landing_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_foreach_batch(src, apply_batch, checkpoint_dir)
 
 
 def stream_vectors_to_ivf_index(
@@ -254,7 +234,6 @@ def stream_vectors_to_ivf_index(
     schema: StructType | str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ):
     """Streaming ANN ingestion: JSON vector batches landing in a
     directory flow through ``foreachBatch`` into the persisted IVF
@@ -284,13 +263,7 @@ def stream_vectors_to_ivf_index(
             spark, index_path, batch_df, id_col=id_col, vec_col=vec_col
         )
 
-    writer = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_foreach_batch(src, apply_batch, checkpoint_dir)
 
 
 def stream_documents_dedup_ingest(
@@ -302,7 +275,6 @@ def stream_documents_dedup_ingest(
     schema: StructType | str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """Streaming corpus ingestion with incremental exact dedup — the
     LLM-pipeline ingest loop as one Structured Streaming job: each
@@ -338,21 +310,18 @@ def stream_documents_dedup_ingest(
     foreachBatch's (queryId, batchId), the crash window disappears,
     and this guard — and the assumption — go away entirely."""
     from bio_lakehouse_spark.operators.dedup import exact_dedup_groups
-    from pyspark.sql.utils import AnalysisException
 
     src = spark.readStream.schema(schema).json(landing_dir)
 
     def apply_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        groups = exact_dedup_groups(batch_df, id_col, text_col)
-        try:
-            store = spark.read.parquet(fingerprint_dir).select(
-                "text_hash"
-            ).distinct()
-            novel = groups.join(store, "text_hash", "left_anti")
-        except AnalysisException:
-            novel = groups
+        novel = exact_dedup_groups(batch_df, id_col, text_col)
+        store = _read_parquet_or_none(spark, fingerprint_dir)
+        if store is not None:
+            novel = novel.join(
+                store.select("text_hash").distinct(), "text_hash", "left_anti"
+            )
         novel = novel.localCheckpoint()  # consumed twice below
         survivors = batch_df.join(
             novel.select(F.col("keep_id").alias(id_col)), on=id_col
@@ -364,23 +333,93 @@ def stream_documents_dedup_ingest(
         # half-committed rows drop (their fingerprints, still absent
         # from the store, are then appended below — completing the
         # interrupted commit instead of repeating it).
-        try:
-            existing_ids = spark.read.parquet(corpus_dir).select(id_col)
-            survivors = survivors.join(existing_ids, id_col, "left_anti")
-        except AnalysisException:
-            pass  # first-ever batch: corpus doesn't exist yet
+        corpus = _read_parquet_or_none(spark, corpus_dir)
+        if corpus is not None:
+            survivors = survivors.join(
+                corpus.select(id_col), id_col, "left_anti"
+            )
         survivors.write.mode("append").parquet(corpus_dir)
         novel.select("text_hash").write.mode("append").parquet(
             fingerprint_dir
         )
 
-    writer = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return drain_foreach_batch(src, apply_batch, checkpoint_dir)
+
+
+def _append_neardup_survivors(
+    spark: SparkSession,
+    batch: DataFrame,
+    corpus_dir: str,
+    band_dir: str,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+) -> DataFrame:
+    """The near-dup step and the two appends shared by the MinHash
+    ingests. ``batch`` loses the larger id of each within-batch
+    near-dup pair (``minhash_lsh_pairs``), the ids already in the
+    corpus, and the docs the persistent (doc_id, band, value) index
+    flags (``minhash_incremental_pairs`` — corpus text touched only
+    for candidate docs, per-batch cost O(batch + candidates)). The
+    survivors append to the corpus and their band rows to the index;
+    they are returned, materialized.
+
+    Crash replay: the corpus append lands before the band append, so a
+    crash between the two leaves docs in the corpus with no band rows.
+    On replay the corpus-id anti-join keeps them out of the corpus
+    (pair generation requires distinct ids, so the LSH hit alone would
+    not catch a same-id replay), and the replayed ids with no band
+    rows get them appended now, completing the interrupted commit —
+    otherwise such a doc stays invisible to every later near-dup
+    check. Both guards are column-pruned id scans."""
+    from bio_lakehouse_spark.operators.dedup import (
+        minhash_band_table,
+        minhash_incremental_pairs,
+        minhash_lsh_pairs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    inner = minhash_lsh_pairs(batch, id_col, text_col, threshold=threshold)
+    losers = inner.select(F.col("doc_b").alias(id_col)).distinct()
+    kept = batch.join(losers, on=id_col, how="left_anti")
+    # Corpus and index read SEPARATELY: a crash between the two
+    # appends of the very first batch leaves the corpus present with
+    # NO band dir, and the corpus-id guard is needed exactly then.
+    corpus = _read_parquet_or_none(spark, corpus_dir)
+    bands = _read_parquet_or_none(spark, band_dir)
+    replayed = None
+    if corpus is not None:
+        corpus_ids = corpus.select(id_col).distinct()
+        replayed = kept.join(corpus_ids, on=id_col, how="left_semi")
+        kept = kept.join(corpus_ids, on=id_col, how="left_anti")
+    survivors = kept
+    if bands is not None:
+        flagged = minhash_incremental_pairs(
+            corpus, kept, id_col, text_col,
+            threshold=threshold, corpus_bands=bands,
+        ).select(F.col("doc_b").alias(id_col)).distinct()
+        survivors = kept.join(flagged, on=id_col, how="left_anti")
+        if replayed is not None:
+            # the band table always names its id 'doc_id'
+            # (dedup.minhash_band_table), whatever the caller's id_col
+            replayed = replayed.join(
+                bands.select(F.col("doc_id").alias(id_col)).distinct(),
+                on=id_col,
+                how="left_anti",
+            )
+    # Both frames are computed against the corpus as it was before the
+    # appends below, so materialize them first.
+    half_committed = None if replayed is None else replayed.localCheckpoint()
+    survivors = survivors.localCheckpoint()
+    survivors.write.mode("append").parquet(corpus_dir)
+    to_index = (
+        survivors
+        if half_committed is None
+        else survivors.unionByName(half_committed)
+    )
+    minhash_band_table(to_index, id_col, text_col).write.mode(
+        "append"
+    ).parquet(band_dir)
+    return survivors
 
 
 def stream_documents_neardup_ingest(
@@ -393,111 +432,32 @@ def stream_documents_neardup_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    available_now: bool = True,
 ):
     """Streaming NEAR-dup corpus ingestion — the MinHash twin of
     ``stream_documents_dedup_ingest``: each landed batch is checked
-    against the persistent (doc_id, band, value) LSH index
-    (``dedup.minhash_incremental_pairs`` — corpus text touched only
-    for candidate docs, per-batch cost O(batch + candidates)), and
-    within itself (``minhash_lsh_pairs``, keep the smaller id).
-    Survivors append to the corpus and their band rows to the index,
-    so the NEXT batch dedupes against them too.
+    against the persistent (doc_id, band, value) LSH index and within
+    itself (keep the smaller id). Survivors append to the corpus and
+    their band rows to the index, so the NEXT batch dedupes against
+    them too (``_append_neardup_survivors``).
 
     Idempotent under replay via the same TWO guards as the exact
     twin: the corpus-id anti-join drops a replayed doc from the
-    corpus (pair generation requires distinct ids, so the LSH hit
-    alone would not catch a same-id replay), and the band append
-    COMPLETES a half-committed crash (corpus append landed, band
-    append did not): replayed ids whose band rows are absent from the
-    index get them appended now — without this the half-committed doc
-    stays in the corpus but invisible to every future near-dup check.
-    Both guards are column-pruned id scans; the corpus text is read
-    only for candidate docs. At production scale ``band_dir`` is
+    corpus, and the band append COMPLETES a half-committed crash
+    (corpus append landed, band append did not). The corpus text is
+    read only for candidate docs. At production scale ``band_dir`` is
     partitioned/bucketed by (band, value); the ingest body is
     unchanged."""
-    from bio_lakehouse_spark.operators.dedup import (
-        minhash_band_table,
-        minhash_incremental_pairs,
-        minhash_lsh_pairs,
-    )
-    from pyspark.sql.utils import AnalysisException
-
     src = spark.readStream.schema(schema).json(landing_dir)
 
     def apply_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df = batch_df.localCheckpoint()
-        # within-batch near-dups: keep the smaller id of each pair
-        inner = minhash_lsh_pairs(
-            batch_df, id_col, text_col, threshold=threshold
+        _append_neardup_survivors(
+            spark, batch_df.localCheckpoint(), corpus_dir, band_dir,
+            id_col, text_col, threshold,
         )
-        losers = inner.select(F.col("doc_b").alias(id_col)).distinct()
-        kept = batch_df.join(losers, on=id_col, how="left_anti")
-        # Corpus and index read SEPARATELY: a crash between the two
-        # appends of the very first batch leaves the corpus present
-        # with NO band dir — one shared try would skip the corpus-id
-        # replay guard exactly when it's needed (double ingest).
-        try:
-            corpus_ids = (
-                spark.read.parquet(corpus_dir).select(id_col).distinct()
-            )
-        except AnalysisException:
-            corpus_ids = None
-        try:
-            bands = spark.read.parquet(band_dir)
-        except AnalysisException:
-            bands = None
-        replayed = None
-        if corpus_ids is not None:
-            replayed = kept.join(corpus_ids, on=id_col, how="left_semi")
-            kept = kept.join(corpus_ids, on=id_col, how="left_anti")
-        if bands is not None:
-            flagged = minhash_incremental_pairs(
-                spark.read.parquet(corpus_dir), kept, id_col, text_col,
-                threshold=threshold, corpus_bands=bands,
-            ).select(F.col("doc_b").alias(id_col)).distinct()
-            survivors = kept.join(flagged, on=id_col, how="left_anti")
-        else:
-            survivors = kept
-        # Crash-completion guard: replayed ids with no band rows are
-        # the half-committed docs — finish their interrupted commit.
-        half_committed = None
-        if replayed is not None:
-            half_committed = (
-                replayed
-                if bands is None
-                else replayed.join(
-                    # band table always stores its id as 'doc_id'
-                    # (dedup.minhash_band_table) — re-alias to the
-                    # caller's id_col or this breaks for any
-                    # non-default id column.
-                    bands.select(
-                        F.col("doc_id").alias(id_col)
-                    ).distinct(),
-                    on=id_col,
-                    how="left_anti",
-                )
-            ).localCheckpoint()
-        survivors = survivors.localCheckpoint()  # consumed twice
-        survivors.write.mode("append").parquet(corpus_dir)
-        to_index = (
-            survivors
-            if half_committed is None
-            else survivors.unionByName(half_committed)
-        )
-        minhash_band_table(to_index, id_col, text_col).write.mode(
-            "append"
-        ).parquet(band_dir)
 
-    writer = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_foreach_batch(src, apply_batch, checkpoint_dir)
 
 
 def stream_documents_curated_ingest(
@@ -515,7 +475,6 @@ def stream_documents_curated_ingest(
     source_col: str = "source",
     quality_cutoff: float = 0.7,
     threshold: float = 0.5,
-    available_now: bool = True,
 ):
     """Streaming twin of `curation_pipeline_full`: every landed batch
     runs the full curation chain before ingestion — heuristic quality
@@ -537,23 +496,10 @@ def stream_documents_curated_ingest(
     feed of `curation_summary_by_source`; a pipeline that silently
     drops data is a pipeline nobody can debug.
 
-    Idempotent under replay exactly like the near-dup ingest: the
-    batch's survivors anti-join the corpus's id column before any
-    write (no double ingest), and replayed ids whose band rows never
-    landed — a crash between the corpus append and the band append —
-    get their bands appended now, completing the interrupted commit
-    (corpus/index read in separate guards so the first-batch crash
-    state, corpus present + no band dir, still takes the replay
-    path).
+    Idempotent under replay exactly like the near-dup ingest, whose
+    near-dup step and appends it shares (``_append_neardup_survivors``).
     """
-    from pyspark.sql.utils import AnalysisException
-
-    from bio_lakehouse_spark.operators.dedup import (
-        minhash_band_table,
-        minhash_incremental_pairs,
-        minhash_lsh_pairs,
-        ngram_overlap_contamination,
-    )
+    from bio_lakehouse_spark.operators.dedup import ngram_overlap_contamination
     from bio_lakehouse_spark.operators.textops import (
         predicted_lang,
         quality_metrics,
@@ -589,59 +535,9 @@ def stream_documents_curated_ingest(
         gated = flagged.filter(
             F.col("__q_ok") & F.col("__l_ok") & ~F.col("__ct")
         ).drop("__q_ok", "__l_ok", "__ct")
-        # near-dup within the gated batch: keep the smaller id
-        inner = minhash_lsh_pairs(
-            gated, id_col, text_col, threshold=threshold
+        survivors = _append_neardup_survivors(
+            spark, gated, corpus_dir, band_dir, id_col, text_col, threshold
         )
-        losers = inner.select(F.col("doc_b").alias(id_col)).distinct()
-        kept = gated.join(losers, on=id_col, how="left_anti")
-        try:
-            corpus_ids = (
-                spark.read.parquet(corpus_dir).select(id_col).distinct()
-            )
-        except AnalysisException:
-            corpus_ids = None
-        try:
-            bands = spark.read.parquet(band_dir)
-        except AnalysisException:
-            bands = None
-        replayed = None
-        if corpus_ids is not None:
-            replayed = kept.join(corpus_ids, on=id_col, how="left_semi")
-            kept = kept.join(corpus_ids, on=id_col, how="left_anti")
-        if bands is not None:
-            nd_flagged = minhash_incremental_pairs(
-                spark.read.parquet(corpus_dir), kept, id_col, text_col,
-                threshold=threshold, corpus_bands=bands,
-            ).select(F.col("doc_b").alias(id_col)).distinct()
-            survivors = kept.join(nd_flagged, on=id_col, how="left_anti")
-        else:
-            survivors = kept
-        half_committed = None
-        if replayed is not None:
-            half_committed = (
-                replayed
-                if bands is None
-                else replayed.join(
-                    # band table id is always 'doc_id' — see note in
-                    # stream_documents_dedup_ingest above.
-                    bands.select(
-                        F.col("doc_id").alias(id_col)
-                    ).distinct(),
-                    on=id_col,
-                    how="left_anti",
-                )
-            ).localCheckpoint()
-        survivors = survivors.localCheckpoint()  # consumed 2-3 times
-        survivors.write.mode("append").parquet(corpus_dir)
-        to_index = (
-            survivors
-            if half_committed is None
-            else survivors.unionByName(half_committed)
-        )
-        minhash_band_table(to_index, id_col, text_col).write.mode(
-            "append"
-        ).parquet(band_dir)
         if stats_dir is not None:
             surv_ids = survivors.select(id_col).withColumn(
                 "__ing", F.lit(True)
@@ -662,10 +558,4 @@ def stream_documents_curated_ingest(
             )
             stats.coalesce(1).write.mode("append").parquet(stats_dir)
 
-    writer = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_foreach_batch(src, apply_batch, checkpoint_dir)

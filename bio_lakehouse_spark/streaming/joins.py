@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from bio_lakehouse_spark.streaming import drain_to_parquet
+
 
 def attribute_purchases_to_clicks(
     clicks: DataFrame,
@@ -70,9 +72,8 @@ def stream_attribution_to_parquet(
     horizon: str = "30 minutes",
     watermark: str = "1 hour",
 ):
-    """File-source → stream-stream interval join → parquet append.
-    ``availableNow`` drains the landing dirs batch-style with full
-    streaming semantics (same idiom as the other streaming sinks)."""
+    """File-source → stream-stream interval join → parquet append,
+    drained batch-style with full streaming semantics."""
 
     def src(d: str) -> DataFrame:
         return (
@@ -85,11 +86,4 @@ def stream_attribution_to_parquet(
     joined = attribute_purchases_to_clicks(
         src(clicks_dir), src(purchases_dir), horizon, watermark
     )
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_to_parquet(joined, out_dir, checkpoint_dir)

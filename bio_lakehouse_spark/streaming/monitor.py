@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bio_lakehouse_spark.operators.stats import msprt_two_sample
+from bio_lakehouse_spark.streaming import drain_foreach_batch
 
 
 def daily_arm_sums(
@@ -78,7 +79,6 @@ def stream_msprt_monitor(
     treat_type: str = "click",
     control_type: str = "view",
     tau2: float = 1.0,
-    available_now: bool = True,
 ):
     """Continuously-monitored A/B experiment over a landed event
     stream: each microbatch folds its events into per-day sufficient
@@ -121,10 +121,4 @@ def stream_msprt_monitor(
         except AnalysisException:
             pass  # nothing landed yet
 
-    writer = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_foreach_batch(src, apply_batch, checkpoint_dir)

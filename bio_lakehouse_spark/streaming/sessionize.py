@@ -24,6 +24,8 @@ import pandas as pd
 
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from bio_lakehouse_spark.streaming import drain_to_parquet
+
 SESSION_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events long, total_value double, closed_by string"
@@ -130,11 +132,4 @@ def stream_sessions(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_to_parquet(sessions, out_dir, checkpoint_dir)

@@ -21,6 +21,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bio_lakehouse_spark.streaming import drain_to_parquet
 from bio_lakehouse_spark.suite.pipeline_queries import fixture_path
 from bio_lakehouse_spark.suite.registry import REGISTRY, load, register
 
@@ -263,15 +264,7 @@ def stream_hopping_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+        drain_to_parquet(agg, out, ckpt).awaitTermination(600)
 
     if not done.exists():
         shutil.rmtree(root, ignore_errors=True)

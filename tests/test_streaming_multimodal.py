@@ -600,8 +600,34 @@ def test_stream_documents_neardup_ingest(spark, tmp_path):
     assert spark.read.parquet(corpus).count() == 3
 
 
+_ALPHA = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+          "lambda mu nu xi omicron pi rho sigma tau upsilon")
+# long, stopword-rich English: passes the curated ingest's gates
+_FOX = ("the quick brown fox jumps over the lazy dog and then the "
+        "fox runs into the wide green field where the birds sing "
+        "and the river bends south toward the old stone bridge")
+
+
+@pytest.mark.parametrize(
+    "ingest, schema, base, mutated, extra",
+    [
+        pytest.param(
+            "stream_documents_neardup_ingest",
+            "doc_id long, text string",
+            _ALPHA, _ALPHA.replace("pi", "PI"), {},
+            id="neardup",
+        ),
+        pytest.param(
+            "stream_documents_curated_ingest",
+            "doc_id long, text string, lang string, source string",
+            _FOX, _FOX.replace("green", "GREEN"),
+            {"lang": "en", "source": "s0"},
+            id="curated",
+        ),
+    ],
+)
 def test_stream_neardup_ingest_crash_replay_completes_bands(
-    spark, tmp_path
+    spark, tmp_path, ingest, schema, base, mutated, extra
 ):
     """r10: crash between the corpus append and the band append, then
     replay. The corpus-id guard must drop the half-committed rows (no
@@ -610,31 +636,30 @@ def test_stream_neardup_ingest_crash_replay_completes_bands(
     was invisible to the LSH index forever, so later near-dups of it
     sailed through. Worst case exercised here: the FIRST-ever batch
     crashed, so the band dir does not exist at all (a shared
-    corpus+bands read guard used to skip the replay path entirely)."""
+    corpus+bands read guard used to skip the replay path entirely).
+    Both MinHash ingests run the same append step, so both are
+    checked."""
     import json as _json
 
-    from bio_lakehouse_spark.streaming.ingest import (
-        stream_documents_neardup_ingest,
-    )
+    from bio_lakehouse_spark.streaming import ingest as ingest_mod
 
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lambda mu nu xi omicron pi rho sigma tau upsilon")
-    mutated = base.replace("pi", "PI")  # near-dup of base
+    stream_ingest = getattr(ingest_mod, ingest)
 
     landing = tmp_path / "landing"
     landing.mkdir()
     corpus = str(tmp_path / "corpus")
     bands = str(tmp_path / "bands")
-    schema = "doc_id long, text string"
 
     with open(landing / "d0.json", "w") as fh:
-        fh.write(_json.dumps({"doc_id": 1, "text": base}) + "\n")
+        fh.write(_json.dumps({"doc_id": 1, "text": base, **extra}) + "\n")
 
     # Simulate the crash state: doc 1 already IN the corpus, its band
     # rows NOT yet in the index (band dir absent entirely).
-    spark.createDataFrame([(1, base)], schema).write.parquet(corpus)
+    spark.createDataFrame(
+        [(1, base, *extra.values())], schema
+    ).write.parquet(corpus)
 
-    q = stream_documents_neardup_ingest(
+    q = stream_ingest(
         spark, str(landing), corpus, bands, str(tmp_path / "ck"), schema
     )
     q.awaitTermination()
@@ -644,8 +669,8 @@ def test_stream_neardup_ingest_crash_replay_completes_bands(
     # so a later near-dup of it is caught
     assert spark.read.parquet(bands).filter("doc_id = 1").count() > 0
     with open(landing / "d1.json", "w") as fh:
-        fh.write(_json.dumps({"doc_id": 9, "text": mutated}) + "\n")
-    q2 = stream_documents_neardup_ingest(
+        fh.write(_json.dumps({"doc_id": 9, "text": mutated, **extra}) + "\n")
+    q2 = stream_ingest(
         spark, str(landing), corpus, bands, str(tmp_path / "ck"), schema
     )
     q2.awaitTermination()
@@ -819,3 +844,33 @@ def test_stream_documents_curated_ingest(spark, tmp_path):
     )
     q2.awaitTermination()
     assert spark.read.parquet(corpus).count() == 3
+
+
+def test_stream_trigger_policy_lives_in_the_drain_helpers():
+    """Every stream drains what has landed and stops: the checkpoint
+    and ``availableNow`` trigger are set in exactly one place,
+    ``streaming.drain_to_parquet`` / ``drain_foreach_batch``. A
+    writer that sets either itself fails here."""
+    import ast
+    import pathlib
+
+    import bio_lakehouse_spark
+
+    pkg = pathlib.Path(bio_lakehouse_spark.__file__).parent
+    helpers = pkg / "streaming" / "__init__.py"
+    allowed = {
+        n
+        for node in ast.parse(helpers.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+        and node.name in ("drain_to_parquet", "drain_foreach_batch")
+        for n in range(node.lineno, node.end_lineno + 1)
+    }
+    assert allowed, "drain helpers missing from streaming/__init__.py"
+    stray = [
+        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if (".trigger(" in line or "checkpointLocation" in line)
+        and not (path == helpers and i in allowed)
+    ]
+    assert not stray, "\n".join(stray)
