@@ -1233,7 +1233,7 @@ def huber_irls_fit(
     then ``iters`` weighted-least-squares steps with Huber weights
     w = min(1, delta/|r|). Returns the ONE-ROW (a, b, delta) frame —
     every step is a single map-side-combinable aggregate with the
-    parameters riding along broadcast (the logistic-GD shape), so
+    parameters riding along broadcast (logistic_gd_fit's shape), so
     the cost is ``iters + 2`` scans of ``d`` and nothing else.
     Differentially certified end-to-end by
     suite.stats_queries.huber_irls_audit's unrolled-CTE oracle."""
@@ -1336,5 +1336,59 @@ def poisson_glm_fit(
                     det,
                 )
             ).alias("b1"),
+        )
+    return beta
+
+
+def sigmoid(z: Column) -> Column:
+    """Logistic function 1 / (1 + e^(−z)) as a Spark column."""
+    return 1.0 / (1.0 + F.exp(-z))
+
+
+def linear_predictor(features: Sequence[str]) -> Column:
+    """b0 + b1·f1 + … + bk·fk over a frame that carries
+    logistic_gd_fit's β columns next to the features."""
+    z = F.col("b0")
+    for i, f in enumerate(features, 1):
+        z = z + F.col(f"b{i}") * F.col(f)
+    return z
+
+
+def logistic_gd_fit(
+    df: DataFrame,
+    features: Sequence[str],
+    label: str,
+    steps: int,
+    eta: float = 2.0,
+) -> DataFrame:
+    """Logistic regression by full-batch gradient descent from β = 0:
+    ``steps`` updates β ← β + η·avg(xᵢ(yᵢ − σ(xᵢ·β))) with an
+    intercept b0 and one coefficient b1…bk per feature. Returns the
+    ONE-ROW (b0, …, bk) frame. Each step is ONE map-side-combinable
+    aggregate over ``df`` with β riding along as a broadcast one-row
+    frame — per-executor partial sums and a k-sized combine, no
+    weight shuffle, no Python — so the cost is ``steps`` scans of
+    ``df``. Differentially certified end-to-end by
+    suite.stats_queries.logistic_gd_audit's unrolled-CTE oracle."""
+    b = [f"b{i}" for i in range(len(features) + 1)]
+    beta = df.sparkSession.range(1).select(
+        *(F.lit(0.0).alias(c) for c in b)
+    )
+    r = F.col(label) - sigmoid(linear_predictor(features))
+    grads = [F.avg(r).alias("g0")] + [
+        F.avg(F.col(f) * r).alias(f"g{i}")
+        for i, f in enumerate(features, 1)
+    ]
+    for _ in range(steps):
+        beta = (
+            df.crossJoin(F.broadcast(beta))
+            .groupBy(*b)
+            .agg(*grads)
+            .select(
+                *(
+                    (F.col(c) + eta * F.col(f"g{i}")).alias(c)
+                    for i, c in enumerate(b)
+                )
+            )
         )
     return beta

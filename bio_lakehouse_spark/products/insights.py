@@ -156,7 +156,8 @@ class SleepReadinessAnalyzer(InsightAnalyzer):
         pdf = _rows(v[["sleep_date", "prev_night_sleep",
                        "next_day_readiness"]],
                     v["prev_night_sleep"].notna()
-                    & v["next_day_readiness"].notna())
+                    & v["next_day_readiness"].notna(),
+                    "sleep_date")
         n = len(pdf)
         if n < 3:
             return InsightResult(self.name, {"n": n},
@@ -1248,9 +1249,6 @@ def default_analyzers(spark, gold: DataFrame,
         "gold": gold,
         "training_load": V.training_load_daily(gold),
         "temperature": V.temperature_trends(gold),
-        # Only the pair columns: the projection sizes the self-join's
-        # sides, and so its build side and the row order the
-        # regression sums in.
         "sleep_prediction": V.sleep_performance_prediction(gold).select(
             "sleep_date", "prev_night_sleep", "next_day_readiness"
         ),

@@ -13,6 +13,7 @@ their oracles can still be expressed against the original tables.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import zlib
@@ -25,31 +26,37 @@ from bio_lakehouse_spark.suite.registry import load, register
 
 R6 = lambda c: F.round(c, 6)  # noqa: E731
 
-_FIXTURE_ROOT = Path(__file__).resolve().parents[2] / ".fixtures"
+_PACKAGE_DIR = Path(__file__).resolve().parents[1]
+_FIXTURE_ROOT = _PACKAGE_DIR.parent / ".fixtures"
 
-# Bump whenever the *code or session confs* that bake bytes into a
-# fixture change (e.g. parquet timestamp confs, writer layout). The
-# testdata fingerprint alone can't see those: a conf change with
-# unchanged testdata would silently reuse a semantically stale fixture
-# (the round-3 red row on `partitioned_sink_pruned_read` was exactly
-# this — fixtures written under pre-`outputTimestampType` confs).
-_FIXTURE_VERSION = 2
+
+@functools.cache
+def _source_digest(package_dir: Path) -> int:
+    """CRC-32 over the path and bytes of every ``.py`` file under
+    ``package_dir``, read once per process."""
+    sig = 0
+    for f in sorted(package_dir.rglob("*.py")):
+        sig = zlib.crc32(f.relative_to(package_dir).as_posix().encode(), sig)
+        sig = zlib.crc32(f.read_bytes(), sig)
+    return sig
 
 
 def _sf_tag(sf_dir: str) -> str:
     """Fixture tag = sf name + a fingerprint of the source parquet
-    files (size + mtime), the fixture-format version and the resolved
+    files (size + mtime), the package's source and the resolved
     fixture root. Derived fixtures (CSV variants, partitioned sinks,
-    LSH band tables, IVF indexes) persist across rounds under
-    .fixtures/; if the testdata is regenerated OR the building code
-    changes format (_FIXTURE_VERSION), a stale fixture would silently
-    diverge from the fresh oracle — the fingerprint forces a rebuild
-    instead. The root is in it because a streaming file sink's
-    ``_spark_metadata`` log (and every checkpoint) records absolute
-    paths: a copied or moved ``.fixtures/`` reads as an empty sink
-    unless it is rebuilt where it now lives."""
+    LSH band tables, IVF indexes, streaming sinks) persist across
+    runs under .fixtures/; if the testdata is regenerated OR the code
+    or session confs that write them change, a stale fixture would
+    silently diverge from the fresh oracle — the fingerprint forces a
+    rebuild instead. The root is in it because a streaming file
+    sink's ``_spark_metadata`` log (and every checkpoint) records
+    absolute paths: a copied or moved ``.fixtures/`` reads as an
+    empty sink unless it is rebuilt where it now lives."""
     p = Path(sf_dir)
-    sig = _FIXTURE_VERSION ^ zlib.crc32(str(_FIXTURE_ROOT).encode())
+    sig = _source_digest(_PACKAGE_DIR) ^ zlib.crc32(
+        str(_FIXTURE_ROOT).encode()
+    )
     for f in sorted(p.glob("*.parquet")):
         st = f.stat()
         sig = (sig * 1000003 + st.st_size + int(st.st_mtime)) & 0xFFFFFFFF

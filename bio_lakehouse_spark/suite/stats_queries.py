@@ -9,13 +9,16 @@ is the engine output and the p-value lookup is a presentation concern.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bio_lakehouse_spark.operators.stats import (
     bayesian_effect,
+    linear_predictor,
+    logistic_gd_fit,
     mann_whitney_u,
     pearson_ols,
+    sigmoid,
     spearman,
     trend_slope,
     zscore_anomalies,
@@ -2159,26 +2162,23 @@ def gain_lift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _logistic_gd_oracle() -> str:
-    """Unrolled-SQL twin of the 4-step logistic gradient descent:
-    each iteration is one CTE that carries the previous β scalars
-    through a GROUP BY and adds η·avg-gradient — the same
+def _gd_chain_sql(label: str, steps: int) -> str:
+    """Unrolled-SQL twin of operators.stats.logistic_gd_fit over the
+    (x1, x2) columns of CTE ``p``: closes the CTE before it, then
+    i0 (β = 0) and one CTE per step that carries the previous β
+    scalars through a GROUP BY and adds η·avg-gradient — the same
     differential-certification treatment as the ridge Cramer solve
-    and the unigram Viterbi DP."""
+    and the unigram Viterbi DP. The fitted β is CTE ``i{steps}``."""
     sql = """
-WITH p AS (
-  SELECT l_quantity / 50.0 AS x1, l_discount * 10.0 AS x2,
-         CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
-  FROM lineitem
 ), i0 AS (
   SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2
 )"""
     prev = "i0"
-    for k in range(1, 5):
+    for k in range(1, steps + 1):
         sql += f""", i{k} AS (
-  SELECT b0 + 2.0 * AVG(y - s) AS b0,
-         b1 + 2.0 * AVG(x1 * (y - s)) AS b1,
-         b2 + 2.0 * AVG(x2 * (y - s)) AS b2
+  SELECT b0 + 2.0 * AVG({label} - s) AS b0,
+         b1 + 2.0 * AVG(x1 * ({label} - s)) AS b1,
+         b2 + 2.0 * AVG(x2 * ({label} - s)) AS b2
   FROM (SELECT p.*, {prev}.b0, {prev}.b1, {prev}.b2,
                1.0 / (1.0 + EXP(-({prev}.b0 + {prev}.b1 * x1
                                   + {prev}.b2 * x2))) AS s
@@ -2186,7 +2186,35 @@ WITH p AS (
   GROUP BY b0, b1, b2
 )"""
         prev = f"i{k}"
-    sql += f"""
+    return sql
+
+
+# Lineitem feature frame of the certified logistic model: scaled
+# (quantity, discount), label l_returnflag = 'R'.
+_LINEITEM_GD_P_SQL = """
+WITH p AS (
+  SELECT l_quantity / 50.0 AS x1, l_discount * 10.0 AS x2,
+         CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
+  FROM lineitem"""
+
+
+def _lineitem_gd_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of _LINEITEM_GD_P_SQL."""
+    li = load(spark, sf_dir, "lineitem")
+    return li.select(
+        (F.col("l_quantity") / 50.0).alias("x1"),
+        (F.col("l_discount") * 10.0).alias("x2"),
+        F.when(F.col("l_returnflag") == "R", 1.0)
+        .otherwise(0.0)
+        .alias("y"),
+    )
+
+
+def _logistic_gd_oracle() -> str:
+    """Unrolled-SQL twin of logistic_gd_audit: the 4-step GD chain,
+    then the fitted β and mean log-loss in one aggregate."""
+    prev = "i4"
+    return _LINEITEM_GD_P_SQL + _gd_chain_sql("y", 4) + f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n,
        ROUND(b0, 6) AS b0, ROUND(b1, 6) AS b1, ROUND(b2, 6) AS b2,
        ROUND(AVG(-(y * LN(s) + (1.0 - y) * LN(1.0 - s))), 6) AS log_loss
@@ -2196,7 +2224,6 @@ FROM (SELECT p.*, {prev}.b0, {prev}.b1, {prev}.b2,
       FROM p, {prev})
 GROUP BY b0, b1, b2
 """
-    return sql
 
 
 @register(
@@ -2209,67 +2236,23 @@ def logistic_gd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     differentially certified: 4 unrolled iterations of
     β ← β + η·avg(xᵢ(yᵢ − σ(xᵢ·β))) (η=2, β₀=0) predicting
     l_returnflag='R' from scaled (quantity, discount), plus the final
-    mean log-loss. Every iteration is ONE map-side-combinable
-    aggregate over the feature projection with the current β riding
-    along as a broadcast one-row frame — the canonical distributed-GD
-    shape: per-executor partial sums, a d-sized combine, no weight
-    shuffling, no Python. The DuckDB oracle unrolls the identical
-    arithmetic CTE-per-iteration, so the whole optimizer trajectory
+    mean log-loss. Every iteration of operators.stats.logistic_gd_fit
+    is ONE map-side-combinable aggregate over the feature projection
+    with the current β riding along as a broadcast one-row frame —
+    the canonical distributed-GD shape: per-executor partial sums, a
+    d-sized combine, no weight shuffling, no Python. The DuckDB
+    oracle unrolls the identical arithmetic CTE-per-iteration, so
+    the whole optimizer trajectory
     (not just the fixed point) is cross-engine certified — the same
     treatment as ridge_normal_equation_audit's Cramer solve and the
     unigram tokenizer's Viterbi DP. At 100 TB: cache the 3-column
     projection once; each step is a scan + tiny combine (the known
     5-pass cost of full-batch GD; SGD/minibatch trades passes for
     steps but loses the differential oracle)."""
-    li = load(spark, sf_dir, "lineitem")
-    p = li.select(
-        (F.col("l_quantity") / 50.0).alias("x1"),
-        (F.col("l_discount") * 10.0).alias("x2"),
-        F.when(F.col("l_returnflag") == "R", 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    )
-    beta = spark.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"),
-        F.lit(0.0).alias("b2"),
-    )
-    for _ in range(4):
-        j = p.crossJoin(F.broadcast(beta))
-        s = 1.0 / (
-            1.0
-            + F.exp(
-                -(
-                    F.col("b0")
-                    + F.col("b1") * F.col("x1")
-                    + F.col("b2") * F.col("x2")
-                )
-            )
-        )
-        r = F.col("y") - s
-        beta = (
-            j.groupBy("b0", "b1", "b2")
-            .agg(
-                F.avg(r).alias("g0"),
-                F.avg(F.col("x1") * r).alias("g1"),
-                F.avg(F.col("x2") * r).alias("g2"),
-            )
-            .select(
-                (F.col("b0") + 2.0 * F.col("g0")).alias("b0"),
-                (F.col("b1") + 2.0 * F.col("g1")).alias("b1"),
-                (F.col("b2") + 2.0 * F.col("g2")).alias("b2"),
-            )
-        )
+    p = _lineitem_gd_frame(spark, sf_dir)
+    beta = logistic_gd_fit(p, ["x1", "x2"], "y", steps=4)
     f = p.crossJoin(F.broadcast(beta))
-    s = 1.0 / (
-        1.0
-        + F.exp(
-            -(
-                F.col("b0")
-                + F.col("b1") * F.col("x1")
-                + F.col("b2") * F.col("x2")
-            )
-        )
-    )
+    s = sigmoid(linear_predictor(["x1", "x2"]))
     ll = -(
         F.col("y") * F.log(s) + (1.0 - F.col("y")) * F.log(1.0 - s)
     )
@@ -2387,12 +2370,10 @@ def decision_stump_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     return best_splits(gains)
 
 
-def _ipw_oracle(iters: int = 3) -> str:
-    """Unrolled-SQL twin of the IPW pipeline: per-user treatment/
-    outcome/covariates, 3 logistic-GD propensity steps (the
-    logistic_gd_audit treatment), then clipped Horvitz–Thompson and
-    Hájek ATEs in one aggregate."""
-    sql = """
+# Per-user treatment frame of the causal audits: treated = more clicks
+# than errors, outcome = purchase value, covariates = scaled activity
+# count / mean value.
+_TREATMENT_P_SQL = """
 WITH p AS (
   SELECT CASE WHEN SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
               > SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
@@ -2402,24 +2383,106 @@ WITH p AS (
          COUNT(*) / 100.0 AS x1,
          AVG(value) / 100.0 AS x2
   FROM events WHERE value IS NOT NULL
-  GROUP BY user_id
-), i0 AS (
-  SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2
-)"""
-    prev = "i0"
-    for k in range(1, iters + 1):
-        sql += f""", i{k} AS (
-  SELECT b0 + 2.0 * AVG(t - s) AS b0,
-         b1 + 2.0 * AVG(x1 * (t - s)) AS b1,
-         b2 + 2.0 * AVG(x2 * (t - s)) AS b2
-  FROM (SELECT p.*, {prev}.b0, {prev}.b1, {prev}.b2,
-               1.0 / (1.0 + EXP(-({prev}.b0 + {prev}.b1 * x1
-                                  + {prev}.b2 * x2))) AS s
-        FROM p, {prev})
-  GROUP BY b0, b1, b2
-)"""
-        prev = f"i{k}"
-    sql += f"""
+  GROUP BY user_id"""
+
+# Per-arm closed-form OLS outcome models over the treatment frame.
+_OUTCOME_MODEL_SQL = """
+), om AS (
+  SELECT
+    (AVG(CASE WHEN t = 1.0 THEN x1 * yv END)
+     - AVG(CASE WHEN t = 1.0 THEN x1 END)
+       * AVG(CASE WHEN t = 1.0 THEN yv END))
+    / (AVG(CASE WHEN t = 1.0 THEN x1 * x1 END)
+       - AVG(CASE WHEN t = 1.0 THEN x1 END)
+         * AVG(CASE WHEN t = 1.0 THEN x1 END)) AS slope1,
+    (AVG(CASE WHEN t = 0.0 THEN x1 * yv END)
+     - AVG(CASE WHEN t = 0.0 THEN x1 END)
+       * AVG(CASE WHEN t = 0.0 THEN yv END))
+    / (AVG(CASE WHEN t = 0.0 THEN x1 * x1 END)
+       - AVG(CASE WHEN t = 0.0 THEN x1 END)
+         * AVG(CASE WHEN t = 0.0 THEN x1 END)) AS slope0,
+    AVG(CASE WHEN t = 1.0 THEN yv END) AS my1,
+    AVG(CASE WHEN t = 0.0 THEN yv END) AS my0,
+    AVG(CASE WHEN t = 1.0 THEN x1 END) AS mx1,
+    AVG(CASE WHEN t = 0.0 THEN x1 END) AS mx0
+  FROM p"""
+
+
+def _treatment_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of _TREATMENT_P_SQL: one (t, yv, x1, x2) row per
+    user, over the events that carry a value."""
+    ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    return ev.groupBy("user_id").agg(
+        F.when(
+            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
+            > F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)),
+            1.0,
+        ).otherwise(0.0).alias("t"),
+        F.sum(
+            F.when(F.col("event_type") == "purchase", F.col("value"))
+            .otherwise(0.0)
+        ).alias("yv"),
+        (F.count(F.lit(1)) / 100.0).alias("x1"),
+        (F.avg("value") / 100.0).alias("x2"),
+    ).drop("user_id")
+
+
+def _outcome_model(p: DataFrame) -> DataFrame:
+    """Spark twin of _OUTCOME_MODEL_SQL: per-arm OLS outcome models
+    m_a(x1) = ȳ_a + b_a(x1 − x̄_a) fit in ONE conditional aggregate
+    over the treatment frame — the one-row (slope1, slope0, my1,
+    my0, mx1, mx0) frame that _arm_outcome reads."""
+
+    def cavg(cond, col):
+        return F.avg(F.when(cond, col))
+
+    t1, t0 = F.col("t") == 1.0, F.col("t") == 0.0
+    x1, yv = F.col("x1"), F.col("yv")
+    # try_divide (r12 ANSI audit): an arm where the covariate is
+    # CONSTANT (every treated user has the same activity count) has
+    # zero within-arm variance — the outcome-model slope is undefined
+    # → NULL, not a job abort.
+    return p.agg(
+        F.try_divide(
+            cavg(t1, x1 * yv) - cavg(t1, x1) * cavg(t1, yv),
+            cavg(t1, x1 * x1) - cavg(t1, x1) * cavg(t1, x1),
+        ).alias("slope1"),
+        F.try_divide(
+            cavg(t0, x1 * yv) - cavg(t0, x1) * cavg(t0, yv),
+            cavg(t0, x1 * x1) - cavg(t0, x1) * cavg(t0, x1),
+        ).alias("slope0"),
+        cavg(t1, yv).alias("my1"),
+        cavg(t0, yv).alias("my0"),
+        cavg(t1, x1).alias("mx1"),
+        cavg(t0, x1).alias("mx0"),
+    )
+
+
+def _arm_outcome(arm: int) -> Column:
+    """m_arm(x1) over a frame carrying _outcome_model's columns."""
+    return (
+        F.col(f"my{arm}")
+        - F.col(f"slope{arm}") * F.col(f"mx{arm}")
+        + F.col(f"slope{arm}") * F.col("x1")
+    )
+
+
+def _clipped_propensity() -> Column:
+    """σ(b0 + b1·x1 + b2·x2) clipped to 0.05–0.95, over the treatment
+    frame joined to its fitted propensity β."""
+    return F.greatest(
+        F.lit(0.05),
+        F.least(F.lit(0.95), sigmoid(linear_predictor(["x1", "x2"]))),
+    )
+
+
+def _ipw_oracle(iters: int = 3) -> str:
+    """Unrolled-SQL twin of the IPW pipeline: per-user treatment/
+    outcome/covariates, 3 logistic-GD propensity steps (the
+    logistic_gd_audit treatment), then clipped Horvitz–Thompson and
+    Hájek ATEs in one aggregate."""
+    prev = f"i{iters}"
+    return _TREATMENT_P_SQL + _gd_chain_sql("t", iters) + f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
        ROUND(b0, 6) AS b0, ROUND(b1, 6) AS b1, ROUND(b2, 6) AS b2,
        ROUND(AVG(CASE WHEN t = 1.0 THEN yv END)
@@ -2436,7 +2499,6 @@ FROM (SELECT p.*, {prev}.b0, {prev}.b1, {prev}.b2,
       FROM p, {prev})
 GROUP BY b0, b1, b2
 """
-    return sql
 
 
 @register(
@@ -2451,7 +2513,7 @@ def ipw_ate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     covariates =
     scaled activity count / mean value), propensity from 3 unrolled
     logistic-GD steps (each ONE map-side-combinable aggregate with β
-    as a broadcast one-row frame — logistic_gd_audit's shape), then
+    as a broadcast one-row frame — logistic_gd_fit's shape), then
     the naive difference, the clipped (0.05–0.95) Horvitz–Thompson
     ATE, and the Hájek (self-normalized) ATE in one final aggregate.
     The causal upgrade of `did_pre_post`/`cuped_adjustment`: same
@@ -2459,70 +2521,10 @@ def ipw_ate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle unrolls the identical CTE trajectory, so the
     certified surface includes the optimizer path AND the weighting
     arithmetic."""
-    ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    p = ev.groupBy("user_id").agg(
-        F.when(
-            F.sum(
-                F.when(F.col("event_type") == "click", 1).otherwise(0)
-            )
-            > F.sum(
-                F.when(F.col("event_type") == "error", 1).otherwise(0)
-            ),
-            1.0,
-        )
-        .otherwise(0.0)
-        .alias("t"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", F.col("value"))
-            .otherwise(0.0)
-        ).alias("yv"),
-        (F.count(F.lit(1)) / 100.0).alias("x1"),
-        (F.avg("value") / 100.0).alias("x2"),
-    ).drop("user_id")
-    beta = spark.range(1).select(
-        F.lit(0.0).alias("b0"),
-        F.lit(0.0).alias("b1"),
-        F.lit(0.0).alias("b2"),
-    )
-    for _ in range(3):
-        j = p.crossJoin(F.broadcast(beta))
-        s = 1.0 / (
-            1.0
-            + F.exp(
-                -(
-                    F.col("b0")
-                    + F.col("b1") * F.col("x1")
-                    + F.col("b2") * F.col("x2")
-                )
-            )
-        )
-        beta = j.groupBy("b0", "b1", "b2").agg(
-            F.avg(F.col("t") - s).alias("g0"),
-            F.avg(F.col("x1") * (F.col("t") - s)).alias("g1"),
-            F.avg(F.col("x2") * (F.col("t") - s)).alias("g2"),
-        ).select(
-            (F.col("b0") + 2.0 * F.col("g0")).alias("b0"),
-            (F.col("b1") + 2.0 * F.col("g1")).alias("b1"),
-            (F.col("b2") + 2.0 * F.col("g2")).alias("b2"),
-        )
+    p = _treatment_frame(spark, sf_dir)
+    beta = logistic_gd_fit(p, ["x1", "x2"], "t", steps=3)
     f = p.crossJoin(F.broadcast(beta))
-    e = F.greatest(
-        F.lit(0.05),
-        F.least(
-            F.lit(0.95),
-            1.0
-            / (
-                1.0
-                + F.exp(
-                    -(
-                        F.col("b0")
-                        + F.col("b1") * F.col("x1")
-                        + F.col("b2") * F.col("x2")
-                    )
-                )
-            ),
-        ),
-    )
+    e = _clipped_propensity()
     t, yv = F.col("t"), F.col("yv")
     return f.groupBy("b0", "b1", "b2").agg(
         F.count(F.lit(1)).alias("n_users"),
@@ -2888,53 +2890,12 @@ def _aipw_oracle(iters: int = 3) -> str:
     """Unrolled-SQL twin of the AIPW pipeline: the ipw_ate_audit
     propensity trajectory plus per-arm closed-form OLS outcome models
     in one aggregate, combined into the doubly-robust estimator."""
-    sql = """
-WITH p AS (
-  SELECT CASE WHEN SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              > SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-         THEN 1.0 ELSE 0.0 END AS t,
-         SUM(CASE WHEN event_type = 'purchase' THEN value ELSE 0 END)
-           AS yv,
-         COUNT(*) / 100.0 AS x1,
-         AVG(value) / 100.0 AS x2
-  FROM events WHERE value IS NOT NULL
-  GROUP BY user_id
-), om AS (
-  SELECT
-    (AVG(CASE WHEN t = 1.0 THEN x1 * yv END)
-     - AVG(CASE WHEN t = 1.0 THEN x1 END)
-       * AVG(CASE WHEN t = 1.0 THEN yv END))
-    / (AVG(CASE WHEN t = 1.0 THEN x1 * x1 END)
-       - AVG(CASE WHEN t = 1.0 THEN x1 END)
-         * AVG(CASE WHEN t = 1.0 THEN x1 END)) AS slope1,
-    (AVG(CASE WHEN t = 0.0 THEN x1 * yv END)
-     - AVG(CASE WHEN t = 0.0 THEN x1 END)
-       * AVG(CASE WHEN t = 0.0 THEN yv END))
-    / (AVG(CASE WHEN t = 0.0 THEN x1 * x1 END)
-       - AVG(CASE WHEN t = 0.0 THEN x1 END)
-         * AVG(CASE WHEN t = 0.0 THEN x1 END)) AS slope0,
-    AVG(CASE WHEN t = 1.0 THEN yv END) AS my1,
-    AVG(CASE WHEN t = 0.0 THEN yv END) AS my0,
-    AVG(CASE WHEN t = 1.0 THEN x1 END) AS mx1,
-    AVG(CASE WHEN t = 0.0 THEN x1 END) AS mx0
-  FROM p
-), i0 AS (
-  SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2
-)"""
-    prev = "i0"
-    for k in range(1, iters + 1):
-        sql += f""", i{k} AS (
-  SELECT b0 + 2.0 * AVG(t - s) AS b0,
-         b1 + 2.0 * AVG(x1 * (t - s)) AS b1,
-         b2 + 2.0 * AVG(x2 * (t - s)) AS b2
-  FROM (SELECT p.*, {prev}.b0, {prev}.b1, {prev}.b2,
-               1.0 / (1.0 + EXP(-({prev}.b0 + {prev}.b1 * x1
-                                  + {prev}.b2 * x2))) AS s
-        FROM p, {prev})
-  GROUP BY b0, b1, b2
-)"""
-        prev = f"i{k}"
-    sql += f"""
+    prev = f"i{iters}"
+    return (
+        _TREATMENT_P_SQL
+        + _OUTCOME_MODEL_SQL
+        + _gd_chain_sql("t", iters)
+        + f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
        ROUND(slope1, 6) AS m1_slope, ROUND(slope0, 6) AS m0_slope,
        ROUND(AVG((my1 - slope1 * mx1 + slope1 * x1)
@@ -2949,7 +2910,7 @@ FROM (SELECT p.*, om.*, {prev}.b0, {prev}.b1, {prev}.b2,
       FROM p, om, {prev})
 GROUP BY slope1, slope0, my1, my0, mx1, mx0
 """
-    return sql
+    )
 
 
 @register(
@@ -2968,90 +2929,13 @@ def aipw_doubly_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     (outcome coefficients, β) over the per-user scan; the DuckDB
     oracle unrolls the identical trajectory, completing the causal
     triad (naive → IPW/Hájek → AIPW)."""
-    ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    p = ev.groupBy("user_id").agg(
-        F.when(
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            > F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)),
-            1.0,
-        ).otherwise(0.0).alias("t"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", F.col("value"))
-            .otherwise(0.0)
-        ).alias("yv"),
-        (F.count(F.lit(1)) / 100.0).alias("x1"),
-        (F.avg("value") / 100.0).alias("x2"),
-    ).drop("user_id")
-
-    def cavg(cond, col):
-        return F.avg(F.when(cond, col))
-
-    t1, t0 = F.col("t") == 1.0, F.col("t") == 0.0
-    x1, yv = F.col("x1"), F.col("yv")
-    # try_divide (r12 ANSI audit): an arm where the covariate is
-    # CONSTANT (every treated user has the same activity count) has
-    # zero within-arm variance — the outcome-model slope is undefined
-    # → NULL, not a job abort.
-    om = p.agg(
-        F.try_divide(
-            cavg(t1, x1 * yv) - cavg(t1, x1) * cavg(t1, yv),
-            cavg(t1, x1 * x1) - cavg(t1, x1) * cavg(t1, x1),
-        ).alias("slope1"),
-        F.try_divide(
-            cavg(t0, x1 * yv) - cavg(t0, x1) * cavg(t0, yv),
-            cavg(t0, x1 * x1) - cavg(t0, x1) * cavg(t0, x1),
-        ).alias("slope0"),
-        cavg(t1, yv).alias("my1"),
-        cavg(t0, yv).alias("my0"),
-        cavg(t1, x1).alias("mx1"),
-        cavg(t0, x1).alias("mx0"),
-    )
-    beta = spark.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"),
-        F.lit(0.0).alias("b2"),
-    )
-    for _ in range(3):
-        j = p.crossJoin(F.broadcast(beta))
-        s = 1.0 / (
-            1.0
-            + F.exp(
-                -(
-                    F.col("b0")
-                    + F.col("b1") * F.col("x1")
-                    + F.col("b2") * F.col("x2")
-                )
-            )
-        )
-        beta = j.groupBy("b0", "b1", "b2").agg(
-            F.avg(F.col("t") - s).alias("g0"),
-            F.avg(F.col("x1") * (F.col("t") - s)).alias("g1"),
-            F.avg(F.col("x2") * (F.col("t") - s)).alias("g2"),
-        ).select(
-            (F.col("b0") + 2.0 * F.col("g0")).alias("b0"),
-            (F.col("b1") + 2.0 * F.col("g1")).alias("b1"),
-            (F.col("b2") + 2.0 * F.col("g2")).alias("b2"),
-        )
+    p = _treatment_frame(spark, sf_dir)
+    om = _outcome_model(p)
+    beta = logistic_gd_fit(p, ["x1", "x2"], "t", steps=3)
     f = p.crossJoin(F.broadcast(om)).crossJoin(F.broadcast(beta))
-    e = F.greatest(
-        F.lit(0.05),
-        F.least(
-            F.lit(0.95),
-            1.0
-            / (
-                1.0
-                + F.exp(
-                    -(
-                        F.col("b0")
-                        + F.col("b1") * F.col("x1")
-                        + F.col("b2") * F.col("x2")
-                    )
-                )
-            ),
-        ),
-    )
-    m1 = F.col("my1") - F.col("slope1") * F.col("mx1") + F.col("slope1") * x1
-    m0 = F.col("my0") - F.col("slope0") * F.col("mx0") + F.col("slope0") * x1
-    t = F.col("t")
+    e = _clipped_propensity()
+    m1, m0 = _arm_outcome(1), _arm_outcome(0)
+    t, yv = F.col("t"), F.col("yv")
     aipw = (
         (m1 - m0)
         + t * (yv - m1) / e
@@ -3391,26 +3275,9 @@ WITH p AS (
            AS yv,
          COUNT(*) / 100.0 AS x1
   FROM events WHERE value IS NOT NULL
-  GROUP BY user_id
-), om AS (
-  SELECT
-    (AVG(CASE WHEN t = 1.0 THEN x1 * yv END)
-     - AVG(CASE WHEN t = 1.0 THEN x1 END)
-       * AVG(CASE WHEN t = 1.0 THEN yv END))
-    / (AVG(CASE WHEN t = 1.0 THEN x1 * x1 END)
-       - AVG(CASE WHEN t = 1.0 THEN x1 END)
-         * AVG(CASE WHEN t = 1.0 THEN x1 END)) AS slope1,
-    (AVG(CASE WHEN t = 0.0 THEN x1 * yv END)
-     - AVG(CASE WHEN t = 0.0 THEN x1 END)
-       * AVG(CASE WHEN t = 0.0 THEN yv END))
-    / (AVG(CASE WHEN t = 0.0 THEN x1 * x1 END)
-       - AVG(CASE WHEN t = 0.0 THEN x1 END)
-         * AVG(CASE WHEN t = 0.0 THEN x1 END)) AS slope0,
-    AVG(CASE WHEN t = 1.0 THEN yv END) AS my1,
-    AVG(CASE WHEN t = 0.0 THEN yv END) AS my0,
-    AVG(CASE WHEN t = 1.0 THEN x1 END) AS mx1,
-    AVG(CASE WHEN t = 0.0 THEN x1 END) AS mx0
-  FROM p
+  GROUP BY user_id"""
+    + _OUTCOME_MODEL_SQL
+    + """
 ), scored AS (
   SELECT t, yv,
          (my1 - slope1 * mx1 + slope1 * x1)
@@ -3443,58 +3310,9 @@ def uplift_two_model_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     targeting counterpart of gain_lift_by_decile. Shares the AIPW
     machinery: one per-user aggregate, one-row model frames, tiny
     band aggregate."""
-    ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    p = ev.groupBy("user_id").agg(
-        F.when(
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            > F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)),
-            1.0,
-        ).otherwise(0.0).alias("t"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", F.col("value"))
-            .otherwise(0.0)
-        ).alias("yv"),
-        (F.count(F.lit(1)) / 100.0).alias("x1"),
-    ).drop("user_id")
-
-    def cavg(cond, col):
-        return F.avg(F.when(cond, col))
-
-    t1, t0 = F.col("t") == 1.0, F.col("t") == 0.0
-    x1, yv = F.col("x1"), F.col("yv")
-    # try_divide (r12 ANSI audit): an arm where the covariate is
-    # CONSTANT (every treated user has the same activity count) has
-    # zero within-arm variance — the outcome-model slope is undefined
-    # → NULL, not a job abort.
-    om = p.agg(
-        F.try_divide(
-            cavg(t1, x1 * yv) - cavg(t1, x1) * cavg(t1, yv),
-            cavg(t1, x1 * x1) - cavg(t1, x1) * cavg(t1, x1),
-        ).alias("slope1"),
-        F.try_divide(
-            cavg(t0, x1 * yv) - cavg(t0, x1) * cavg(t0, yv),
-            cavg(t0, x1 * x1) - cavg(t0, x1) * cavg(t0, x1),
-        ).alias("slope0"),
-        cavg(t1, yv).alias("my1"),
-        cavg(t0, yv).alias("my0"),
-        cavg(t1, x1).alias("mx1"),
-        cavg(t0, x1).alias("mx0"),
-    )
-    scored = p.crossJoin(F.broadcast(om)).select(
-        "t",
-        "yv",
-        (
-            (
-                F.col("my1")
-                - F.col("slope1") * F.col("mx1")
-                + F.col("slope1") * x1
-            )
-            - (
-                F.col("my0")
-                - F.col("slope0") * F.col("mx0")
-                + F.col("slope0") * x1
-            )
-        ).alias("u"),
+    p = _treatment_frame(spark, sf_dir)
+    scored = p.crossJoin(F.broadcast(_outcome_model(p))).select(
+        "t", "yv", (_arm_outcome(1) - _arm_outcome(0)).alias("u")
     )
     lim = scored.agg(F.min("u").alias("lo"), F.max("u").alias("hi"))
     binned = scored.crossJoin(F.broadcast(lim)).select(
@@ -3647,7 +3465,7 @@ def huber_irls_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations with Huber weights w = min(1, delta/|r|). Every
     iteration is ONE map-side-combinable aggregate with (a, b,
     delta) riding along as a broadcast one-row frame — the
-    logistic_gd_audit shape; the median is a single exact-median
+    logistic_gd_fit shape; the median is a single exact-median
     aggregate over the daily grain (cross-engine pinned by
     mode_median_by_type). The DuckDB oracle unrolls the identical
     arithmetic CTE-per-iteration, certifying the whole IRLS
@@ -4353,12 +4171,10 @@ def shapley_linear_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pd_oracle() -> str:
-    """Partial-dependence oracle: reuses _logistic_gd_oracle's
-    unrolled GD chain verbatim, then averages the model over the
-    data with x1 clamped to each grid point."""
-    lg = _logistic_gd_oracle()
-    chain = lg[: lg.rindex("\nSELECT CAST(COUNT(*) AS BIGINT)")]
-    return chain + """, grid AS (
+    """Partial-dependence oracle: logistic_gd_audit's feature frame
+    and unrolled GD chain, then the model averaged over the data
+    with x1 clamped to each grid point."""
+    return _LINEITEM_GD_P_SQL + _gd_chain_sql("y", 4) + """, grid AS (
   SELECT unnest([0.1, 0.3, 0.5, 0.7, 0.9]) AS v
 )
 SELECT v AS x1_grid,
@@ -4381,59 +4197,16 @@ def partial_dependence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-inspection readout next to SHAP (shapley_linear_audit
     covers the linear side; this marginalizes the trained GLM the
     way a model card plots it). The model is logistic_gd_audit's
-    exact 4-step GD trajectory (its oracle chain reused verbatim);
+    exact 4-step GD trajectory (the same fit and oracle chain);
     each grid point is one pass of the SAME map-side-combinable
     aggregate with (β, v) riding broadcast — grid × one scan, never
     grid × shuffle."""
-    li = load(spark, sf_dir, "lineitem")
-    p = li.select(
-        (F.col("l_quantity") / 50.0).alias("x1"),
-        (F.col("l_discount") * 10.0).alias("x2"),
-        F.when(F.col("l_returnflag") == "R", 1.0).otherwise(0.0).alias("y"),
-    )
-    beta = spark.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"),
-        F.lit(0.0).alias("b2"),
-    )
-    for _ in range(4):
-        j = p.crossJoin(F.broadcast(beta))
-        s = 1.0 / (
-            1.0
-            + F.exp(
-                -(
-                    F.col("b0")
-                    + F.col("b1") * F.col("x1")
-                    + F.col("b2") * F.col("x2")
-                )
-            )
-        )
-        r = F.col("y") - s
-        beta = (
-            j.groupBy("b0", "b1", "b2")
-            .agg(
-                F.avg(r).alias("g0"),
-                F.avg(F.col("x1") * r).alias("g1"),
-                F.avg(F.col("x2") * r).alias("g2"),
-            )
-            .select(
-                (F.col("b0") + 2.0 * F.col("g0")).alias("b0"),
-                (F.col("b1") + 2.0 * F.col("g1")).alias("b1"),
-                (F.col("b2") + 2.0 * F.col("g2")).alias("b2"),
-            )
-        )
+    p = _lineitem_gd_frame(spark, sf_dir)
+    beta = logistic_gd_fit(p, ["x1", "x2"], "y", steps=4)
     grid = spark.createDataFrame(
         [(0.1,), (0.3,), (0.5,), (0.7,), (0.9,)], "v double"
     )
-    pd_s = 1.0 / (
-        1.0
-        + F.exp(
-            -(
-                F.col("b0")
-                + F.col("b1") * F.col("v")
-                + F.col("b2") * F.col("x2")
-            )
-        )
-    )
+    pd_s = sigmoid(linear_predictor(["v", "x2"]))
     return (
         p.crossJoin(F.broadcast(beta))
         .crossJoin(F.broadcast(grid))

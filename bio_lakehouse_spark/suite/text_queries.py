@@ -20,6 +20,7 @@ from bio_lakehouse_spark.operators.dedup import (
 )
 from bio_lakehouse_spark.operators.joins import explode_pairs
 from bio_lakehouse_spark.operators.skew import spread
+from bio_lakehouse_spark.operators.stats import sigmoid
 from bio_lakehouse_spark.operators.textops import (
     STOPWORDS,
     TOKEN_REGEX,
@@ -2756,7 +2757,7 @@ def nb_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.col("__pos").cast("int").alias("y")),
         "doc_id",
     )
-    p = 1.0 / (1.0 + F.exp(-F.round("nb_logodds", 6)))
+    p = sigmoid(F.round("nb_logodds", 6))
     bucketed = j.select(
         F.least(F.floor(p * 10).cast("int"), F.lit(9)).alias("bucket"),
         p.alias("p"),
@@ -4225,7 +4226,7 @@ def ece_calibration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.col("__pos").cast("int").alias("y")),
         "doc_id",
     )
-    p = 1.0 / (1.0 + F.exp(-F.round("nb_logodds", 6)))
+    p = sigmoid(F.round("nb_logodds", 6))
     scored = j.select(
         F.least(F.floor(p * 10).cast("int"), F.lit(9)).alias("bucket"),
         p.alias("p"),

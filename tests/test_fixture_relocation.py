@@ -6,7 +6,8 @@ checkpoint names its source files. Read from anywhere else, the sink
 log lists nothing, so a fixture trusted across a move reads as empty
 (``stream_hopping_replay`` failed with "Unable to infer schema for
 Parquet"). The fixture tag carries the resolved root, so a moved cache
-is rebuilt where it now lives.
+is rebuilt where it now lives, and a digest of the package source, so
+a cache written by older code is rebuilt too.
 """
 
 from __future__ import annotations
@@ -21,11 +22,26 @@ from bio_lakehouse_spark.suite.registry import REGISTRY
 HOPPING_ROWS = 1950  # hopping_window_counts at sf0.001
 
 
-def test_tag_follows_the_fixture_root(tmp_path, monkeypatch, sf_dir):
-    monkeypatch.setattr(pq, "_FIXTURE_ROOT", tmp_path / "a")
+def _place_root(monkeypatch, d):
+    monkeypatch.setattr(pq, "_FIXTURE_ROOT", d)
+
+
+def _place_source(monkeypatch, d):
+    d.mkdir()
+    (d / "session.py").write_text(f"CONF = {d.name!r}\n")
+    monkeypatch.setattr(pq, "_PACKAGE_DIR", d)
+
+
+@pytest.mark.parametrize(
+    "place", [_place_root, _place_source], ids=["root", "source"]
+)
+def test_tag_follows_the_fixture_root(place, tmp_path, monkeypatch, sf_dir):
+    """The tag changes with the fixture root and with the package
+    source (a conf edited in ``session.py`` rewrites fixture bytes)."""
+    place(monkeypatch, tmp_path / "a")
     tag_a = pq._sf_tag(sf_dir)
     assert pq._sf_tag(sf_dir) == tag_a
-    monkeypatch.setattr(pq, "_FIXTURE_ROOT", tmp_path / "b")
+    place(monkeypatch, tmp_path / "b")
     assert pq._sf_tag(sf_dir) != tag_a
 
 

@@ -156,21 +156,6 @@ def test_silver_schemas_are_declared(spark, recorded):
         assert written.schema == declared, (corpus, table)
 
 
-def _rows_unordered(data: dict) -> dict:
-    """``data`` with its rows sorted and its index dropped."""
-    cols = data["columns"]
-    rows = sorted(zip(*(data["values"][c] for c in cols)), key=repr)
-    return {**data, "index": None,
-            "values": {c: [r[i] for r in rows] for i, c in enumerate(cols)}}
-
-
-# The sleep-readiness pairs come in the self-join's output order, which
-# no ORDER BY fixes: where gold's parquet files tie in size (the
-# degenerate corpus) their scan order, and so the pair order, changes
-# between runs. The statistics do not (constant series there).
-UNORDERED = {"sleep_readiness"}
-
-
 def test_report_matches_golden(recorded):
     corpus, got, want, _ = recorded
     assert [r["name"] for r in got["report"]] == [
@@ -178,9 +163,6 @@ def test_report_matches_golden(recorded):
     ]
     for g, w in zip(got["report"], want["report"]):
         for key in ("statistics", "narrative", "caveats", "data"):
-            if key == "data" and g["name"] in UNORDERED:
-                assert _rows_unordered(g[key]) == _rows_unordered(w[key])
-                continue
             assert g[key] == w[key], (corpus, g["name"], key)
     assert got["html_sha256"] == want["html_sha256"], corpus
 

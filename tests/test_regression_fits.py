@@ -1,18 +1,21 @@
-"""Property tests for operators/stats.huber_irls_fit and
-poisson_glm_fit — the oracle audits certify the trajectory on the
+"""Property tests for operators/stats.huber_irls_fit, poisson_glm_fit
+and logistic_gd_fit — the oracle audits certify the trajectory on the
 corpus; these pin the estimators' MATH on constructed data where the
-right answer is known analytically.
+right answer is known analytically (or, for logistic_gd_fit, by the
+same update written out in numpy).
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from bio_lakehouse_spark.operators.stats import (
     huber_irls_fit,
+    logistic_gd_fit,
     poisson_glm_fit,
 )
 
@@ -79,3 +82,32 @@ def test_huber_weights_bounded(spark):
     d = spark.createDataFrame(rows, "x double, y double")
     r = _fit_row(huber_irls_fit(d, "x", "y", iters=2))
     assert r["delta"] > 0 and math.isfinite(r["a"]) and math.isfinite(r["b"])
+
+
+def _logistic_rows():
+    return [
+        (0.1 * (i % 7), 0.3 * (i % 4) - 0.4, float((i * 5) % 3 == 0))
+        for i in range(24)
+    ]
+
+
+def test_logistic_gd_zero_steps_is_zero(spark):
+    d = spark.createDataFrame(_logistic_rows(), "x1 double, x2 double, y double")
+    r = _fit_row(logistic_gd_fit(d, ["x1", "x2"], "y", steps=0))
+    assert r.asDict() == {"b0": 0.0, "b1": 0.0, "b2": 0.0}
+
+
+def test_logistic_gd_matches_numpy_update(spark):
+    """Four steps equal the textbook full-batch update
+    β ← β + η·mean(X(y − σ(Xβ))) from β = 0, η = 2."""
+    rows = _logistic_rows()
+    d = spark.createDataFrame(rows, "x1 double, x2 double, y double")
+    r = _fit_row(logistic_gd_fit(d, ["x1", "x2"], "y", steps=4))
+    a = np.array(rows)
+    x = np.column_stack([np.ones(len(a)), a[:, 0], a[:, 1]])
+    y = a[:, 2]
+    b = np.zeros(3)
+    for _ in range(4):
+        s = 1.0 / (1.0 + np.exp(-(x @ b)))
+        b = b + 2.0 * (x * (y - s)[:, None]).mean(axis=0)
+    assert [r["b0"], r["b1"], r["b2"]] == pytest.approx(b.tolist(), abs=1e-12)
