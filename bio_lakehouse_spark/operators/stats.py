@@ -1359,10 +1359,9 @@ def logistic_gd_fit(
     features: Sequence[str],
     label: str,
     steps: int,
-    eta: float = 2.0,
 ) -> DataFrame:
     """Logistic regression by full-batch gradient descent from β = 0:
-    ``steps`` updates β ← β + η·avg(xᵢ(yᵢ − σ(xᵢ·β))) with an
+    ``steps`` updates β ← β + η·avg(xᵢ(yᵢ − σ(xᵢ·β))), η = 2, with an
     intercept b0 and one coefficient b1…bk per feature. Returns the
     ONE-ROW (b0, …, bk) frame. Each step is ONE map-side-combinable
     aggregate over ``df`` with β riding along as a broadcast one-row
@@ -1386,7 +1385,7 @@ def logistic_gd_fit(
             .agg(*grads)
             .select(
                 *(
-                    (F.col(c) + eta * F.col(f"g{i}")).alias(c)
+                    (F.col(c) + 2.0 * F.col(f"g{i}")).alias(c)
                     for i, c in enumerate(b)
                 )
             )

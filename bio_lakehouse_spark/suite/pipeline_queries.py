@@ -52,7 +52,11 @@ def _sf_tag(sf_dir: str) -> str:
     rebuild instead. The root is in it because a streaming file
     sink's ``_spark_metadata`` log (and every checkpoint) records
     absolute paths: a copied or moved ``.fixtures/`` reads as an
-    empty sink unless it is rebuilt where it now lives."""
+    empty sink unless it is rebuilt where it now lives. The source
+    digest is read once per process, so a process started after an
+    edit, a branch switch or a stash gets a new tag — and
+    fixture_path purges the old one under any run still using it:
+    do not run two processes in one checkout across a source edit."""
     p = Path(sf_dir)
     sig = _source_digest(_PACKAGE_DIR) ^ zlib.crc32(
         str(_FIXTURE_ROOT).encode()
@@ -69,7 +73,9 @@ def fixture_path(prefix: str, sf_dir: str) -> Path:
     their `_DONE` sentinels). Old dirs are actively dangerous, not
     just wasteful: any older code path that still resolves the
     unfingerprinted name reads bytes written under different confs and
-    hash-mismatches the oracle."""
+    hash-mismatches the oracle. A sibling may be one that another
+    process, started before a source edit, is still reading or
+    building (see _sf_tag)."""
     tag = _sf_tag(sf_dir)
     current = f"{prefix}_{tag}"
     sf_name = Path(sf_dir).name.replace(".", "_")

@@ -2162,13 +2162,14 @@ def gain_lift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gd_chain_sql(label: str, steps: int) -> str:
+def _gd_chain_sql(label: str, steps: int) -> tuple[str, str]:
     """Unrolled-SQL twin of operators.stats.logistic_gd_fit over the
     (x1, x2) columns of CTE ``p``: closes the CTE before it, then
     i0 (β = 0) and one CTE per step that carries the previous β
     scalars through a GROUP BY and adds η·avg-gradient — the same
     differential-certification treatment as the ridge Cramer solve
-    and the unigram Viterbi DP. The fitted β is CTE ``i{steps}``."""
+    and the unigram Viterbi DP. Returns the CTE text and the name of
+    the CTE that holds the fitted β."""
     sql = """
 ), i0 AS (
   SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2
@@ -2186,7 +2187,7 @@ def _gd_chain_sql(label: str, steps: int) -> str:
   GROUP BY b0, b1, b2
 )"""
         prev = f"i{k}"
-    return sql
+    return sql, prev
 
 
 # Lineitem feature frame of the certified logistic model: scaled
@@ -2213,8 +2214,8 @@ def _lineitem_gd_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _logistic_gd_oracle() -> str:
     """Unrolled-SQL twin of logistic_gd_audit: the 4-step GD chain,
     then the fitted β and mean log-loss in one aggregate."""
-    prev = "i4"
-    return _LINEITEM_GD_P_SQL + _gd_chain_sql("y", 4) + f"""
+    chain, prev = _gd_chain_sql("y", 4)
+    return _LINEITEM_GD_P_SQL + chain + f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n,
        ROUND(b0, 6) AS b0, ROUND(b1, 6) AS b1, ROUND(b2, 6) AS b2,
        ROUND(AVG(-(y * LN(s) + (1.0 - y) * LN(1.0 - s))), 6) AS log_loss
@@ -2481,8 +2482,8 @@ def _ipw_oracle(iters: int = 3) -> str:
     outcome/covariates, 3 logistic-GD propensity steps (the
     logistic_gd_audit treatment), then clipped Horvitz–Thompson and
     Hájek ATEs in one aggregate."""
-    prev = f"i{iters}"
-    return _TREATMENT_P_SQL + _gd_chain_sql("t", iters) + f"""
+    chain, prev = _gd_chain_sql("t", iters)
+    return _TREATMENT_P_SQL + chain + f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
        ROUND(b0, 6) AS b0, ROUND(b1, 6) AS b1, ROUND(b2, 6) AS b2,
        ROUND(AVG(CASE WHEN t = 1.0 THEN yv END)
@@ -2890,11 +2891,11 @@ def _aipw_oracle(iters: int = 3) -> str:
     """Unrolled-SQL twin of the AIPW pipeline: the ipw_ate_audit
     propensity trajectory plus per-arm closed-form OLS outcome models
     in one aggregate, combined into the doubly-robust estimator."""
-    prev = f"i{iters}"
+    chain, prev = _gd_chain_sql("t", iters)
     return (
         _TREATMENT_P_SQL
         + _OUTCOME_MODEL_SQL
-        + _gd_chain_sql("t", iters)
+        + chain
         + f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
        ROUND(slope1, 6) AS m1_slope, ROUND(slope0, 6) AS m0_slope,
@@ -4174,13 +4175,14 @@ def _pd_oracle() -> str:
     """Partial-dependence oracle: logistic_gd_audit's feature frame
     and unrolled GD chain, then the model averaged over the data
     with x1 clamped to each grid point."""
-    return _LINEITEM_GD_P_SQL + _gd_chain_sql("y", 4) + """, grid AS (
+    chain, beta = _gd_chain_sql("y", 4)
+    return _LINEITEM_GD_P_SQL + chain + f""", grid AS (
   SELECT unnest([0.1, 0.3, 0.5, 0.7, 0.9]) AS v
 )
 SELECT v AS x1_grid,
        ROUND(AVG(1.0 / (1.0 + EXP(-(b0 + b1 * v + b2 * x2)))), 6)
          AS partial_dependence
-FROM p, i4, grid
+FROM p, {beta}, grid
 GROUP BY v ORDER BY v
 """
 
