@@ -25,6 +25,11 @@ from bio_lakehouse_spark.operators.graph import (
     triangle_stats,
 )
 from bio_lakehouse_spark.suite.registry import load, register
+from bio_lakehouse_spark.suite.relational import (
+    _symmetrized,
+    _trade_graph,
+    _trade_graph_sql,
+)
 
 R6 = lambda c: F.round(c, 6)  # noqa: E731
 
@@ -170,13 +175,7 @@ def _bfs_oracle(max_hops: int = 4) -> str:
     supplier trade graph (landmarks: suppliers 0-4) — fixed hop
     count makes frontier expansion SQL-expressible, same pattern as
     the unrolled PageRank/Lloyd oracles."""
-    parts = ["""WITH base AS (
-  SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-), e AS (
-  SELECT c AS src, s AS dst FROM base
-  UNION ALL SELECT s AS src, c AS dst FROM base
-), d0 AS (
+    parts = [_trade_graph_sql() + """, d0 AS (
   SELECT DISTINCT s_suppkey * 2 + 1 AS node, 0 AS dist
   FROM supplier WHERE s_suppkey < 5
 )"""]
@@ -210,19 +209,7 @@ def bfs_distance_landmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-neighborhood, not the graph."""
     from bio_lakehouse_spark.operators.graph import bfs_distances
 
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    e = base.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    e = _symmetrized(_trade_graph(spark, sf_dir))
     landmarks = (
         load(spark, sf_dir, "supplier")
         .filter(F.col("s_suppkey") < 5)

@@ -1071,19 +1071,48 @@ def unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("value").isNotNull())
 
 
+def _trade_graph_sql(edges: str = "e") -> str:
+    """Oracle CTEs of the customer-supplier trade graph the graph
+    family runs on: `base`, one (c, s) row per distinct trading pair
+    over orders ⋈ lineitem (customers are even node ids, suppliers
+    odd), and its symmetrized edge list (src, dst), named ``edges``."""
+    return f"""WITH base AS (
+  SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
+  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+), {edges} AS (
+  SELECT c AS src, s AS dst FROM base
+  UNION ALL SELECT s AS src, c AS dst FROM base
+)"""
+
+
+def _trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of ``_trade_graph_sql``'s `base`: distinct (c, s)."""
+    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
+        .select(
+            (F.col("o_custkey") * 2).alias("c"),
+            (F.col("l_suppkey") * 2 + 1).alias("s"),
+        )
+        .distinct()
+    )
+
+
+def _symmetrized(base: DataFrame) -> DataFrame:
+    """Both directions of every (c, s) edge of ``_trade_graph``."""
+    return base.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
+        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    )
+
+
 def _pagerank_oracle(iters: int = 3, d: str = "0.85") -> str:
     """Unrolled power-iteration PageRank over the symmetrized
     customer-supplier graph — fixed iteration count makes the full
     algorithm (degree normalization, dangling-mass redistribution,
     damping) SQL-expressible, same pattern as the unrolled-Lloyd
     KMeans oracle."""
-    parts = [f"""WITH base AS (
-  SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-), e AS (
-  SELECT c AS src, s AS dst FROM base
-  UNION ALL SELECT s AS src, c AS dst FROM base
-), deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
+    parts = [_trade_graph_sql() + """, deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
 vtx AS (SELECT DISTINCT v FROM
         (SELECT src AS v FROM e UNION ALL SELECT dst AS v FROM e)),
 n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM vtx),
@@ -1121,19 +1150,7 @@ def pagerank_cust_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     per iteration); rank mass sums to 1."""
     from bio_lakehouse_spark.operators.graph import pagerank
 
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    e = base.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    e = _symmetrized(_trade_graph(spark, sf_dir))
     out = pagerank(e, iters=3, damping=0.85)
     return out.select("node", F.round("rank", 9).alias("rank"))
 
@@ -1291,13 +1308,7 @@ def _lpa_oracle(iters: int = 2) -> str:
     customer-supplier graph — fixed iterations make the mode-label
     update (count desc, label asc argmax; isolated nodes keep their
     label) fully SQL-expressible, the unrolled-PageRank pattern."""
-    parts = ["""WITH base AS (
-  SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-), e AS (
-  SELECT c AS src, s AS dst FROM base
-  UNION ALL SELECT s AS src, c AS dst FROM base
-), vtx AS (SELECT DISTINCT v FROM
+    parts = [_trade_graph_sql() + """, vtx AS (SELECT DISTINCT v FROM
         (SELECT src AS v FROM e UNION ALL SELECT dst AS v FROM e)),
 l0 AS (SELECT v, v AS lab FROM vtx)"""]
     for i in range(1, iters + 1):
@@ -1367,32 +1378,13 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     argmax window (operators/graph.label_propagation)."""
     from bio_lakehouse_spark.operators.graph import label_propagation
 
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    e = base.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    return label_propagation(e, iters=2)
+    return label_propagation(_symmetrized(_trade_graph(spark, sf_dir)), iters=2)
 
 
 def _kcore_oracle(k: int = 3, iters: int = 3) -> str:
     """Unrolled fixed-round k-core peeling over the symmetrized
     customer-supplier graph (the LPA/PageRank unroll pattern)."""
-    parts = ["""WITH base AS (
-  SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-), e0 AS (
-  SELECT c AS src, s AS dst FROM base
-  UNION ALL SELECT s AS src, c AS dst FROM base
-)"""]
+    parts = [_trade_graph_sql("e0")]
     for i in range(1, iters + 1):
         parts.append(f""", d{i} AS (
   SELECT src, COUNT(*) AS deg FROM e{i-1} GROUP BY src
@@ -1422,20 +1414,7 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.kcore_prune)."""
     from bio_lakehouse_spark.operators.graph import kcore_prune
 
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    e = base.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    out = kcore_prune(e, k=3, iters=3)
+    out = kcore_prune(_symmetrized(_trade_graph(spark, sf_dir)), k=3, iters=3)
     return out.select("node", F.col("degree").cast("long"))
 
 
@@ -1564,6 +1543,34 @@ WITH prm AS (
   FROM customer
 )"""
 
+# Candidate pairs of both blocking rules with their agreement vector
+# (g1, g2, g3); shared by both FS oracles.
+_FS_PAIRS_CTE = _FS_PRM_CTE + """, rec AS (
+  SELECT c_custkey, c_nationkey, c_acctbal, c_mktsegment,
+         floor(c_acctbal / bw) AS bal_band,
+         right(c_name, sl) AS suffix
+  FROM customer, prm
+), pairs AS (
+  SELECT DISTINCT a.c_custkey AS ka, b.c_custkey AS kb,
+         a.c_mktsegment = b.c_mktsegment AS g1,
+         abs(a.c_acctbal - b.c_acctbal) < 100.0 AS g2,
+         a.suffix = b.suffix AS g3
+  FROM rec a JOIN rec b
+    ON a.c_nationkey = b.c_nationkey
+   AND a.bal_band = b.bal_band
+   AND a.c_custkey < b.c_custkey
+  UNION
+  SELECT DISTINCT a.c_custkey AS ka, b.c_custkey AS kb,
+         a.c_mktsegment = b.c_mktsegment AS g1,
+         abs(a.c_acctbal - b.c_acctbal) < 100.0 AS g2,
+         a.suffix = b.suffix AS g3
+  FROM rec a JOIN rec b
+    ON a.c_nationkey = b.c_nationkey
+   AND a.suffix = b.suffix
+   AND a.c_mktsegment = b.c_mktsegment
+   AND a.c_custkey < b.c_custkey
+)"""
+
 
 def _fs_adaptive_knobs(cust) -> tuple[float, int]:
     """Derive the two blocking knobs from the entity-dimension
@@ -1638,32 +1645,8 @@ def _fs_blocked_pairs(cust, bal_width: float, suffix_len: int):
 @register(
     "entity_resolution_fs",
     survey=("J6", "F8", "P10"),
-    oracle=_FS_PRM_CTE
-    + f""", rec AS (
-  SELECT c_custkey, c_nationkey, c_acctbal, c_mktsegment,
-         floor(c_acctbal / bw) AS bal_band,
-         right(c_name, sl) AS suffix
-  FROM customer, prm
-), pairs AS (
-  SELECT DISTINCT a.c_custkey AS ka, b.c_custkey AS kb,
-         a.c_mktsegment = b.c_mktsegment AS g1,
-         abs(a.c_acctbal - b.c_acctbal) < 100.0 AS g2,
-         a.suffix = b.suffix AS g3
-  FROM rec a JOIN rec b
-    ON a.c_nationkey = b.c_nationkey
-   AND a.bal_band = b.bal_band
-   AND a.c_custkey < b.c_custkey
-  UNION
-  SELECT DISTINCT a.c_custkey AS ka, b.c_custkey AS kb,
-         a.c_mktsegment = b.c_mktsegment AS g1,
-         abs(a.c_acctbal - b.c_acctbal) < 100.0 AS g2,
-         a.suffix = b.suffix AS g3
-  FROM rec a JOIN rec b
-    ON a.c_nationkey = b.c_nationkey
-   AND a.suffix = b.suffix
-   AND a.c_mktsegment = b.c_mktsegment
-   AND a.c_custkey < b.c_custkey
-), scored AS (
+    oracle=_FS_PAIRS_CTE
+    + f""", scored AS (
   SELECT {_FS_SCORE_SQL} AS score FROM pairs
 ), classed AS (
   SELECT score, {_FS_DECISION_SQL} AS decision FROM scored
@@ -1885,33 +1868,6 @@ def als_rank1_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             R6(F.col("v2n")).alias("v_sq_norm"),
         )
     )
-
-
-_FS_PAIRS_CTE = _FS_PRM_CTE + """, rec AS (
-  SELECT c_custkey, c_nationkey, c_acctbal, c_mktsegment,
-         floor(c_acctbal / bw) AS bal_band,
-         right(c_name, sl) AS suffix
-  FROM customer, prm
-), pairs AS (
-  SELECT DISTINCT a.c_custkey AS ka, b.c_custkey AS kb,
-         a.c_mktsegment = b.c_mktsegment AS g1,
-         abs(a.c_acctbal - b.c_acctbal) < 100.0 AS g2,
-         a.suffix = b.suffix AS g3
-  FROM rec a JOIN rec b
-    ON a.c_nationkey = b.c_nationkey
-   AND a.bal_band = b.bal_band
-   AND a.c_custkey < b.c_custkey
-  UNION
-  SELECT DISTINCT a.c_custkey AS ka, b.c_custkey AS kb,
-         a.c_mktsegment = b.c_mktsegment AS g1,
-         abs(a.c_acctbal - b.c_acctbal) < 100.0 AS g2,
-         a.suffix = b.suffix AS g3
-  FROM rec a JOIN rec b
-    ON a.c_nationkey = b.c_nationkey
-   AND a.suffix = b.suffix
-   AND a.c_mktsegment = b.c_mktsegment
-   AND a.c_custkey < b.c_custkey
-)"""
 
 
 def _fs_em_oracle(iters: int = 3) -> str:
@@ -2149,23 +2105,11 @@ def community_modularity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim and layers the same decomposition on top."""
     from bio_lakehouse_spark.operators.graph import label_propagation
 
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-        # the edge list feeds LP (2 rounds = 4 scans) plus the e_c and
-        # degree passes — materialize once instead of re-running the
-        # orders⋈lineitem join six times
-        .localCheckpoint()
-    )
-    e = base.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    # the edge list feeds LP (2 rounds = 4 scans) plus the e_c and
+    # degree passes — materialize once instead of re-running the
+    # orders⋈lineitem join six times
+    base = _trade_graph(spark, sf_dir).localCheckpoint()
+    e = _symmetrized(base)
     lab = label_propagation(e, iters=2).select(
         F.col("node").alias("v"), F.col("community").alias("lab")
     ).localCheckpoint()
@@ -2218,14 +2162,7 @@ def community_modularity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "degree_assortativity",
     survey=("J4", "A1", "ST1"),
-    oracle="""
-WITH base AS (
-  SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-), e AS (
-  SELECT c AS src, s AS dst FROM base
-  UNION ALL SELECT s AS src, c AS dst FROM base
-), deg AS (
+    oracle="\n" + _trade_graph_sql() + """, deg AS (
   SELECT src AS v, CAST(COUNT(*) AS DOUBLE) AS d FROM e GROUP BY 1
 ), pairs AS (
   SELECT da.d AS x, db.d AS y
@@ -2256,20 +2193,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines at the last bit). Completes the graph-metric family
     (modularity = partition quality; assortativity = mixing
     structure)."""
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    e = base.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    e = _symmetrized(_trade_graph(spark, sf_dir).localCheckpoint())
     deg = e.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("double").alias("d")
     )

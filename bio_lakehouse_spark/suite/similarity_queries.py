@@ -63,13 +63,15 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ann_ivf_topk",
-    survey=("O4", "F9", "J5"),
-    oracle=f"""
+# IVF cells: every 25th vector seeds one, its vec_id the cell id.
+_IVF_CENT_CTE = """
 WITH cent AS (
   SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings WHERE vec_id % 25 = 0
-), assigned AS (
+)"""
+
+# Each vector's nearest cell and each query's 3 nearest cells (ties to
+# the lower cell id): the probe both IVF top-5 oracles score.
+_IVF_PROBE_CTE = _IVF_CENT_CTE + f""", assigned AS (
   SELECT vec_id, embedding, centroid_id FROM (
     SELECT v.vec_id, v.embedding, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY v.vec_id
@@ -85,7 +87,20 @@ WITH cent AS (
              ORDER BY {_COS.format(a='q.qv', b='cent.cv')} DESC, cent.centroid_id) AS rn
     FROM q, cent
   ) WHERE rn <= 3
-), scored AS (
+)"""
+
+
+def _ivf_centroids(emb: DataFrame) -> DataFrame:
+    """Spark twin of ``_IVF_CENT_CTE``: (centroid_id, embedding)."""
+    return emb.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+
+
+@register(
+    "ann_ivf_topk",
+    survey=("O4", "F9", "J5"),
+    oracle=_IVF_PROBE_CTE + f""", scored AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
          {_COS.format(a='p.qv', b='a.embedding')} AS cos_sim
   FROM probed p JOIN assigned a ON a.centroid_id = p.centroid_id
@@ -107,9 +122,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is keyed, never a cross join. Deterministic pipeline →
     exactly reproduced by the SQL oracle."""
     emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
+    centroids = _ivf_centroids(emb)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     out = ivf_topk(emb, queries, centroids, k=5, nprobe=3)
     return out.select(
@@ -301,10 +314,7 @@ def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_neardup_ivf",
     survey=("J6", "F9", "J5"),
-    oracle=f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings WHERE vec_id % 25 = 0
-), assigned AS (
+    oracle=_IVF_CENT_CTE + f""", assigned AS (
   SELECT vec_id, centroid_id FROM (
     SELECT v.vec_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY v.vec_id
@@ -335,9 +345,7 @@ def embedding_neardup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bio_lakehouse_spark.operators.similarity import ivf_neardup_pairs
 
     emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
+    centroids = _ivf_centroids(emb)
     out = ivf_neardup_pairs(emb, centroids, threshold=0.35, nprobe=2)
     return out.select("vec_a", "vec_b", R6(F.col("cos_sim")).alias("cos_sim"))
 
@@ -453,8 +461,8 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bio_lakehouse_spark.suite.pipeline_queries import fixture_path
 
     emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").cast("int").alias("centroid_id"), "embedding"
+    centroids = _ivf_centroids(emb).withColumn(
+        "centroid_id", F.col("centroid_id").cast("int")
     )
     idx = str(fixture_path("ivf_index", sf_dir))
     if not Path(idx + "_DONE").exists():
@@ -482,26 +490,7 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_ivf_recall",
     survey=("O4", "J6", "A1"),
-    oracle=f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings WHERE vec_id % 25 = 0
-), assigned AS (
-  SELECT vec_id, embedding, centroid_id FROM (
-    SELECT v.vec_id, v.embedding, cent.centroid_id,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id
-             ORDER BY {_COS.format(a='v.embedding', b='cent.cv')} DESC, cent.centroid_id) AS rn
-    FROM embeddings v, cent
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0
-), probed AS (
-  SELECT query_id, qv, centroid_id FROM (
-    SELECT q.query_id, q.qv, cent.centroid_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-             ORDER BY {_COS.format(a='q.qv', b='cent.cv')} DESC, cent.centroid_id) AS rn
-    FROM q, cent
-  ) WHERE rn <= 3
-), ivf AS (
+    oracle=_IVF_PROBE_CTE + f""", ivf AS (
   SELECT query_id, neighbor_id FROM (
     SELECT p.query_id, a.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (PARTITION BY p.query_id
@@ -532,9 +521,7 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan fraction). Both rankings reuse the production operators;
     the comparison is one equi-join on (query, neighbor)."""
     emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
+    centroids = _ivf_centroids(emb)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     exact = cosine_topk(emb, queries, k=5).select(
         "query_id", "neighbor_id"
@@ -943,10 +930,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "semdedup_verdicts",
     survey=("A11", "J6"),
-    oracle=f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings WHERE vec_id % 25 = 0
-), assigned AS (
+    oracle=_IVF_CENT_CTE + f""", assigned AS (
   SELECT vec_id, embedding, centroid_id FROM (
     SELECT v.vec_id, v.embedding, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY v.vec_id
@@ -973,9 +957,7 @@ def semdedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bio_lakehouse_spark.operators.similarity import semdedup
 
     emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
+    centroids = _ivf_centroids(emb)
     out = semdedup(emb, centroids, threshold=0.35)
     return out.select("vec_id", "centroid_id", "is_dup").orderBy("vec_id")
 
@@ -1034,9 +1016,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics exactly (deterministic centroid-id tie-breaks), so
     this is hash-gated ANN, not rows-only."""
     emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
+    centroids = _ivf_centroids(emb)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         "vec_id", "embedding", F.col("label").alias("qlabel")
     )
@@ -1194,10 +1174,7 @@ def embedding_truncation_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "embedding_drift_psi",
     survey=("P10", "A6"),
-    oracle=f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings WHERE vec_id % 25 = 0
-), split AS (
+    oracle=_IVF_CENT_CTE + f""", split AS (
   SELECT vec_id, embedding,
          CASE WHEN (CAST(concat('0x', substr(md5(concat('edrift:',
                     CAST(vec_id AS VARCHAR))), 1, 15)) AS BIGINT)
@@ -1246,9 +1223,7 @@ def embedding_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bio_lakehouse_spark.operators.similarity import assign_cells
 
     emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
+    centroids = _ivf_centroids(emb)
     half = F.when(
         hash_unit(F.col("vec_id"), salt="edrift:") < 0.5, "ref"
     ).otherwise("cur")
@@ -1339,9 +1314,7 @@ def d4_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bio_lakehouse_spark.operators.similarity import prototype_prune
 
     emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
+    centroids = _ivf_centroids(emb)
     out = prototype_prune(emb, centroids, prune_frac=0.2)
     return out.select(
         "vec_id",

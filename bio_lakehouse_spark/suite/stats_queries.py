@@ -492,10 +492,9 @@ def progressive_overload_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sessionize_gap30",
-    survey=("W4", "A1"),
-    oracle="""
+# 30-minute-gap sessions: lag → new-session flag → per-user running
+# sum, one `session_id` per event.
+_SESSIONS_CTE = """
 WITH flagged AS (
   SELECT user_id, ts, event_id,
          CASE WHEN ts - LAG(ts) OVER w > INTERVAL 30 MINUTE OR LAG(ts) OVER w IS NULL
@@ -507,7 +506,40 @@ WITH flagged AS (
          SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
   FROM flagged
-), per_session AS (
+)"""
+
+
+def _sessions_gap30(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of ``_SESSIONS_CTE``: the events with their
+    `new_session` flag and per-user `session_id`. The gap is compared
+    in microseconds, the timestamps' own precision: whole seconds
+    would merge a gap in (1800 s, 1801 s) that the oracle splits."""
+    ev = load(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    flagged = ev.withColumn(
+        "new_session",
+        F.when(
+            (
+                F.unix_micros("ts")
+                - F.unix_micros(F.lag(F.col("ts")).over(w))
+                > 1800 * 1_000_000
+            )
+            | F.lag(F.col("ts")).over(w).isNull(),
+            1,
+        ).otherwise(0),
+    )
+    return flagged.withColumn(
+        "session_id",
+        F.sum("new_session").over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
+
+
+@register(
+    "sessionize_gap30",
+    survey=("W4", "A1"),
+    oracle=_SESSIONS_CTE + """, per_session AS (
   SELECT user_id, session_id, COUNT(*) AS n_events,
          DATE_DIFF('second', MIN(ts), MAX(ts)) AS duration_s
   FROM sessions GROUP BY 1, 2
@@ -524,29 +556,9 @@ def sessionize_gap30(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag→flag→cumsum — the batch twin of the streaming session-window
     operator in `streaming/` (the reference is batch-only, §2.10; this
     is the training-pipeline extension). Fully window-expressible: no
-    shuffle beyond the user_id partition. The gap is compared in
-    microseconds, the timestamps' own precision: whole seconds would
-    merge a gap in (1800 s, 1801 s) that the oracle splits."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            (
-                F.unix_micros("ts")
-                - F.unix_micros(F.lag(F.col("ts")).over(w))
-                > 1800 * 1_000_000
-            )
-            | F.lag(F.col("ts")).over(w).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    sessions = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
+    shuffle beyond the user_id partition. Sessions come from
+    ``_sessions_gap30``, which compares gaps in microseconds."""
+    sessions = _sessions_gap30(spark, sf_dir)
     per_session = sessions.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         (
@@ -907,18 +919,33 @@ def _ridge_cramer_sql() -> dict[str, str]:
 
 _RIDGE = _ridge_cramer_sql()
 
-# CTE chain ending in `scored` (one row per walk-forward test point
-# with y, ridge pred, and the fold's naive trailing-mean pred) —
-# shared by the per-fold oracle (walk_forward_cv_daily) and the
-# aggregate model-zoo ridge audit.
-_WF_SCORED_CTE = f"""
+# Per-day event totals (date, total_value, n_events, avg_value) the
+# daily regression audits fit on.
+_DAILY_EVENTS_CTE = """
 WITH d AS (
   SELECT CAST(ts AS DATE) AS date,
          ROUND(SUM(value), 6) AS total_value,
          CAST(COUNT(*) AS DOUBLE) AS n_events,
          ROUND(AVG(value), 6) AS avg_value
   FROM events GROUP BY 1
-), r AS (
+)"""
+
+
+def _daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of ``_DAILY_EVENTS_CTE``."""
+    ev = load(spark, sf_dir, "events")
+    return ev.groupBy(F.to_date("ts").alias("date")).agg(
+        R6(F.sum("value")).alias("total_value"),
+        F.count(F.lit(1)).cast("double").alias("n_events"),
+        R6(F.avg("value")).alias("avg_value"),
+    )
+
+
+# CTE chain ending in `scored` (one row per walk-forward test point
+# with y, ridge pred, and the fold's naive trailing-mean pred) —
+# shared by the per-fold oracle (walk_forward_cv_daily) and the
+# aggregate model-zoo ridge audit.
+_WF_SCORED_CTE = _DAILY_EVENTS_CTE + f""", r AS (
   SELECT ROW_NUMBER() OVER (ORDER BY date) AS rn,
          total_value AS x1, n_events AS x2, avg_value AS x3,
          LEAD(total_value) OVER (ORDER BY date) AS y
@@ -974,12 +1001,7 @@ def _wf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, t, y, ridge pred, naive_pred) — the Spark twin of
     ``_WF_SCORED_CTE``, shared by walk_forward_cv_daily (per-fold
     view) and model_zoo_ridge_audit (aggregate view)."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        R6(F.sum("value")).alias("total_value"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        R6(F.avg("value")).alias("avg_value"),
-    )
+    d = _daily_events(spark, sf_dir)
     wd = Window.orderBy("date")
     r = d.select(
         F.row_number().over(wd).alias("rn"),
@@ -1142,17 +1164,7 @@ def model_zoo_ridge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("fold").cast("long").alias("n_folds"),
     ).collect()[0]
 
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy(F.to_date("ts").alias("date"))
-        .agg(
-            R6(F.sum("value")).alias("total_value"),
-            F.count(F.lit(1)).cast("double").alias("n_events"),
-            R6(F.avg("value")).alias("avg_value"),
-        )
-        .orderBy("date")
-        .toPandas()
-    )
+    daily = _daily_events(spark, sf_dir).orderBy("date").toPandas()
     y = daily["total_value"].shift(-1).to_numpy(dtype=float)[:-1]
     X = daily[["total_value", "n_events", "avg_value"]].to_numpy(
         dtype=float
@@ -1395,14 +1407,7 @@ def model_zoo_cv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ridge_normal_equation_audit",
     survey=("ST14",),
-    oracle="""
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS date,
-         ROUND(SUM(value), 6) AS total_value,
-         CAST(COUNT(*) AS DOUBLE) AS n_events,
-         ROUND(AVG(value), 6) AS avg_value
-  FROM events GROUP BY 1
-), p AS (
+    oracle=_DAILY_EVENTS_CTE + """, p AS (
   SELECT n_events AS x1, avg_value AS x2,
          LEAD(total_value) OVER (ORDER BY date) AS y
   FROM d
@@ -1445,12 +1450,7 @@ def ridge_normal_equation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     member's exact linear algebra, cross-engine hashed. One
     aggregation over the daily frame; scales to any series length.
     Equality with ridge_closed_form is pinned in pytest."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        R6(F.sum("value")).alias("total_value"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        R6(F.avg("value")).alias("avg_value"),
-    )
+    d = _daily_events(spark, sf_dir)
     p = d.select(
         F.col("n_events").alias("x1"),
         F.col("avg_value").alias("x2"),
@@ -1757,19 +1757,7 @@ def discovery_scan_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "concurrent_sessions",
     survey=("J7", "W4", "A1"),
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN ts - LAG(ts) OVER w > INTERVAL 30 MINUTE OR LAG(ts) OVER w IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, ts,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM flagged
-), per_session AS (
+    oracle=_SESSIONS_CTE + """, per_session AS (
   SELECT user_id, session_id,
          CAST(FLOOR(epoch(MIN(ts))) AS BIGINT) AS s,
          CAST(FLOOR(epoch(MAX(ts))) AS BIGINT) AS e
@@ -1784,35 +1772,16 @@ GROUP BY 1, 2
 )
 def concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-user session co-presence: gap-30min sessions per user
-    (the sessionize_gap30 machinery), then an interval-OVERLAP
-    self-join counting concurrent session pairs per user pair. The
-    Spark side is the bucketized interval join
+    (``_sessions_gap30``, shared with sessionize_gap30), then an
+    interval-OVERLAP self-join counting concurrent session pairs per
+    user pair. The Spark side is the bucketized interval join
     (operators/joins.interval_overlap_join — bin equi-join + exact
     predicate + distinct, fan-out |interval|/bucket + 1 per row);
     the oracle is DuckDB's native inequality join over the same
     sessions — results must match exactly."""
     from bio_lakehouse_spark.operators.joins import interval_overlap_join
 
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            (
-                F.unix_timestamp("ts")
-                - F.unix_timestamp(F.lag(F.col("ts")).over(w))
-                > 1800
-            )
-            | F.lag(F.col("ts")).over(w).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    sessions = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
+    sessions = _sessions_gap30(spark, sf_dir)
     per_session = sessions.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s"), F.max("ts").alias("e")
     ).select(
@@ -1895,22 +1864,52 @@ def seasonal_decompose_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "kaplan_meier_churn",
-    survey=("ST8", "A13", "W7"),
-    oracle="""
+# Customer churn observations of the survival family: birth = first
+# order, churn event = last order before 2001-01-01, else right-
+# censored at the 2001-08-01 observation end. ``_CHURN_EV_T_SQL`` is
+# the (ev, t) select list over `span`.
+_CHURN_SPAN_CTE = """
 WITH span AS (
   SELECT o_custkey,
          MIN(CAST(o_orderdate AS DATE)) AS first_d,
          MAX(CAST(o_orderdate AS DATE)) AS last_d
   FROM orders GROUP BY 1
-), obs AS (
-  SELECT CASE WHEN last_d < DATE '2001-01-01' THEN 1 ELSE 0 END AS ev,
+)"""
+
+_CHURN_EV_T_SQL = """CASE WHEN last_d < DATE '2001-01-01' THEN 1 ELSE 0 END AS ev,
          CASE WHEN last_d < DATE '2001-01-01'
               THEN datediff('day', first_d, last_d)
-              ELSE datediff('day', first_d, DATE '2001-08-01') END AS t
+              ELSE datediff('day', first_d, DATE '2001-08-01') END AS t"""
+
+_CHURN_OBS_CTE = _CHURN_SPAN_CTE + """, obs AS (
+  SELECT """ + _CHURN_EV_T_SQL + """
   FROM span
-), by_t AS (
+)"""
+
+
+def _churn_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of `span` plus ``_CHURN_EV_T_SQL``: one row per
+    customer, (o_custkey, ev, t)."""
+    span = load(spark, sf_dir, "orders").groupBy("o_custkey").agg(
+        F.min(F.to_date("o_orderdate")).alias("first_d"),
+        F.max(F.to_date("o_orderdate")).alias("last_d"),
+    )
+    churned = F.col("last_d") < F.lit("2001-01-01").cast("date")
+    return span.select(
+        "o_custkey",
+        F.when(churned, 1).otherwise(0).alias("ev"),
+        F.when(churned, F.datediff("last_d", "first_d"))
+        .otherwise(
+            F.datediff(F.lit("2001-08-01").cast("date"), F.col("first_d"))
+        )
+        .alias("t"),
+    )
+
+
+@register(
+    "kaplan_meier_churn",
+    survey=("ST8", "A13", "W7"),
+    oracle=_CHURN_OBS_CTE + """, by_t AS (
   SELECT t, SUM(ev) AS d, SUM(1 - ev) AS c FROM obs GROUP BY 1
 ), curve AS (
   SELECT t, d, c,
@@ -1947,20 +1946,7 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     absorbing-zero flag so ln(0) is never evaluated."""
     from bio_lakehouse_spark.operators.stats import kaplan_meier
 
-    orders = load(spark, sf_dir, "orders")
-    span = orders.groupBy("o_custkey").agg(
-        F.min(F.to_date("o_orderdate")).alias("first_d"),
-        F.max(F.to_date("o_orderdate")).alias("last_d"),
-    )
-    churned = F.col("last_d") < F.lit("2001-01-01").cast("date")
-    obs = span.select(
-        churned.cast("int").alias("ev"),
-        F.when(churned, F.datediff("last_d", "first_d"))
-        .otherwise(
-            F.datediff(F.lit("2001-08-01").cast("date"), F.col("first_d"))
-        )
-        .alias("t"),
-    )
+    obs = _churn_obs(spark, sf_dir)
     out = kaplan_meier(obs, "t", "ev")
     return out.select(
         F.col("duration").alias("duration_days"),
@@ -2623,17 +2609,8 @@ def _cox_oracle(steps: int = 2) -> str:
     with β carried as a group key, suffix-cumulative risk windows,
     one Newton update per CTE pair — the logistic-GD treatment
     applied to the partial likelihood."""
-    obs = """
-WITH span AS (
-  SELECT o_custkey,
-         MIN(CAST(o_orderdate AS DATE)) AS first_d,
-         MAX(CAST(o_orderdate AS DATE)) AS last_d
-  FROM orders GROUP BY 1
-), obs AS (
-  SELECT CASE WHEN last_d < DATE '2001-01-01' THEN 1 ELSE 0 END AS ev,
-         CASE WHEN last_d < DATE '2001-01-01'
-              THEN datediff('day', first_d, last_d)
-              ELSE datediff('day', first_d, DATE '2001-08-01') END AS t,
+    obs = _CHURN_SPAN_CTE + """, obs AS (
+  SELECT """ + _CHURN_EV_T_SQL + """,
          c_acctbal / 10000.0 AS x
   FROM span JOIN customer ON c_custkey = o_custkey
 ), b0 AS (SELECT 0.0 AS b)"""
@@ -2700,27 +2677,15 @@ def cox_ph_newton_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp(β) hazard ratio, the final score (≈0 at convergence) and
     1/√I standard error; the DuckDB oracle unrolls the identical
     two-step trajectory (operators/stats.cox_ph_newton). Same
-    birth/churn/censoring construction as kaplan_meier_churn."""
+    birth/churn/censoring construction as kaplan_meier_churn
+    (``_churn_obs``)."""
     from bio_lakehouse_spark.operators.stats import cox_ph_newton
 
-    orders = load(spark, sf_dir, "orders")
+    churn = _churn_obs(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    span = orders.groupBy("o_custkey").agg(
-        F.min(F.to_date("o_orderdate")).alias("first_d"),
-        F.max(F.to_date("o_orderdate")).alias("last_d"),
-    )
-    churned = F.col("last_d") < F.lit("2001-01-01").cast("date")
-    obs = span.join(
-        cust, span["o_custkey"] == cust["c_custkey"]
-    ).select(
-        F.when(churned, 1).otherwise(0).alias("ev"),
-        F.when(
-            churned, F.datediff("last_d", "first_d")
-        ).otherwise(
-            F.datediff(F.lit("2001-08-01").cast("date"), F.col("first_d"))
-        ).alias("t"),
-        (F.col("c_acctbal") / 10000.0).alias("x"),
-    )
+    obs = churn.join(
+        cust, churn["o_custkey"] == cust["c_custkey"]
+    ).select("ev", "t", (F.col("c_acctbal") / 10000.0).alias("x"))
     out = cox_ph_newton(obs, steps=2)
     return out.select(
         "n_events",
@@ -2956,18 +2921,9 @@ def aipw_doubly_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "logrank_test_groups",
     survey=("ST8", "ST3"),
-    oracle="""
-WITH span AS (
-  SELECT o_custkey,
-         MIN(CAST(o_orderdate AS DATE)) AS first_d,
-         MAX(CAST(o_orderdate AS DATE)) AS last_d
-  FROM orders GROUP BY 1
-), obs AS (
+    oracle=_CHURN_SPAN_CTE + """, obs AS (
   SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS g,
-         CASE WHEN last_d < DATE '2001-01-01' THEN 1 ELSE 0 END AS ev,
-         CASE WHEN last_d < DATE '2001-01-01'
-              THEN datediff('day', first_d, last_d)
-              ELSE datediff('day', first_d, DATE '2001-08-01') END AS t
+         """ + _CHURN_EV_T_SQL + """
   FROM span JOIN customer ON c_custkey = o_custkey
 ), per_t AS (
   SELECT t,
@@ -3004,30 +2960,22 @@ def logrank_test_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     test that goes with the Kaplan–Meier curve and is the score test
     of cox_ph_newton at β=0: at each event time, observed-vs-expected
     group-1 events with the hypergeometric variance, summed into the
-    1-df χ². All risk-set quantities are the SAME suffix-cumulative
-    windows over the per-duration frame as KM/Cox — one scan, one
-    duration-bounded window pass, no per-subject joins."""
-    orders = load(spark, sf_dir, "orders")
+    1-df χ². Observations come from ``_churn_obs``, as for KM/Cox,
+    and all risk-set quantities are the same suffix-cumulative windows
+    over the per-duration frame — one scan, one duration-bounded
+    window pass, no per-subject joins."""
+    churn = _churn_obs(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    span = orders.groupBy("o_custkey").agg(
-        F.min(F.to_date("o_orderdate")).alias("first_d"),
-        F.max(F.to_date("o_orderdate")).alias("last_d"),
-    )
-    churned = F.col("last_d") < F.lit("2001-01-01").cast("date")
-    obs = span.join(
-        cust, span["o_custkey"] == cust["c_custkey"]
+    obs = churn.join(
+        cust, churn["o_custkey"] == cust["c_custkey"]
     ).select(
         F.when(F.col("c_mktsegment") == "BUILDING", 1)
         .otherwise(0)
         .alias("g"),
-        F.when(churned, 1).otherwise(0).alias("ev"),
-        F.when(
-            churned, F.datediff("last_d", "first_d")
-        ).otherwise(
-            F.datediff(F.lit("2001-08-01").cast("date"), F.col("first_d"))
-        ).alias("t"),
+        "ev",
+        "t",
     )
     from bio_lakehouse_spark.operators.stats import logrank_two_groups
 
@@ -3173,19 +3121,7 @@ def gbdt_two_round_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "nelson_aalen_hazard",
     survey=("ST8", "A13"),
-    oracle="""
-WITH span AS (
-  SELECT o_custkey,
-         MIN(CAST(o_orderdate AS DATE)) AS first_d,
-         MAX(CAST(o_orderdate AS DATE)) AS last_d
-  FROM orders GROUP BY 1
-), obs AS (
-  SELECT CASE WHEN last_d < DATE '2001-01-01' THEN 1 ELSE 0 END AS ev,
-         CASE WHEN last_d < DATE '2001-01-01'
-              THEN datediff('day', first_d, last_d)
-              ELSE datediff('day', first_d, DATE '2001-08-01') END AS t
-  FROM span
-), by_t AS (
+    oracle=_CHURN_OBS_CTE + """, by_t AS (
   SELECT t, CAST(SUM(ev) AS BIGINT) AS d, COUNT(*) AS all_n
   FROM obs GROUP BY 1
 ), risk AS (
@@ -3209,24 +3145,11 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson–Aalen cumulative hazard H(t)=Σ dᵢ/nᵢ with its Poisson
     variance Σ dᵢ/nᵢ² — Kaplan–Meier's estimator twin (KM ≈ exp(−H)),
     preferred when hazards are the modeling target (it feeds the Cox
-    baseline). Same one-aggregate + duration-frame-window shape as
-    kaplan_meier_churn: suffix window for the risk set, prefix window
-    for the hazard accumulation, nothing corpus-sized."""
-    orders = load(spark, sf_dir, "orders")
-    span = orders.groupBy("o_custkey").agg(
-        F.min(F.to_date("o_orderdate")).alias("first_d"),
-        F.max(F.to_date("o_orderdate")).alias("last_d"),
-    )
-    churned = F.col("last_d") < F.lit("2001-01-01").cast("date")
-    obs = span.select(
-        F.when(churned, 1).otherwise(0).alias("ev"),
-        F.when(
-            churned, F.datediff("last_d", "first_d")
-        ).otherwise(
-            F.datediff(F.lit("2001-08-01").cast("date"), F.col("first_d"))
-        ).alias("t"),
-    )
-    by_t = obs.groupBy("t").agg(
+    baseline). Same ``_churn_obs`` observations and one-aggregate +
+    duration-frame-window shape as kaplan_meier_churn: suffix window
+    for the risk set, prefix window for the hazard accumulation,
+    nothing corpus-sized."""
+    by_t = _churn_obs(spark, sf_dir).groupBy("t").agg(
         F.sum("ev").cast("long").alias("d"),
         F.count(F.lit(1)).alias("all_n"),
     )
@@ -3795,19 +3718,7 @@ def hbos_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "rmst_churn_audit",
     survey=("ST8", "A13", "W5"),
-    oracle="""
-WITH span AS (
-  SELECT o_custkey,
-         MIN(CAST(o_orderdate AS DATE)) AS first_d,
-         MAX(CAST(o_orderdate AS DATE)) AS last_d
-  FROM orders GROUP BY 1
-), obs AS (
-  SELECT CASE WHEN last_d < DATE '2001-01-01' THEN 1 ELSE 0 END AS ev,
-         CASE WHEN last_d < DATE '2001-01-01'
-              THEN datediff('day', first_d, last_d)
-              ELSE datediff('day', first_d, DATE '2001-08-01') END AS t
-  FROM span
-), by_t AS (
+    oracle=_CHURN_OBS_CTE + """, by_t AS (
   SELECT t, SUM(ev) AS d, SUM(1 - ev) AS c FROM obs GROUP BY 1
 ), curve AS (
   SELECT t, d, c,
@@ -3847,27 +3758,15 @@ def rmst_churn_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer lifetime within the observation window), computed as
     the exact step integral over the certified KM knots: S = 1 from
     0 to the first event time, then Σ S(tᵢ)·(tᵢ₊₁ − tᵢ) with the
-    last segment closed at τ. Rides the same duration-domain frame
-    as kaplan_meier_churn (corpus pass = one groupBy(duration));
+    last segment closed at τ. Rides kaplan_meier_churn's
+    ``_churn_obs`` duration-domain frame (corpus pass = one
+    groupBy(duration));
     the integral is two window functions over the knot frame. The
     headline number a retention team quotes from the curve, now in
     the hash contract."""
     from bio_lakehouse_spark.operators.stats import kaplan_meier
 
-    orders = load(spark, sf_dir, "orders")
-    span = orders.groupBy("o_custkey").agg(
-        F.min(F.to_date("o_orderdate")).alias("first_d"),
-        F.max(F.to_date("o_orderdate")).alias("last_d"),
-    )
-    churned = F.col("last_d") < F.lit("2001-01-01").cast("date")
-    obs = span.select(
-        churned.cast("int").alias("ev"),
-        F.when(churned, F.datediff("last_d", "first_d"))
-        .otherwise(
-            F.datediff(F.lit("2001-08-01").cast("date"), F.col("first_d"))
-        )
-        .alias("t"),
-    )
+    obs = _churn_obs(spark, sf_dir)
     km = kaplan_meier(obs, "t", "ev").select("duration", "survival")
     tau = obs.agg(F.max("t").cast("double").alias("tau"))
     seg = km.crossJoin(F.broadcast(tau)).select(
@@ -4013,14 +3912,7 @@ def mmd_two_sample_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "shapley_linear_audit",
     survey=("ST14", "ST13"),
-    oracle="""
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS date,
-         ROUND(SUM(value), 6) AS total_value,
-         CAST(COUNT(*) AS DOUBLE) AS n_events,
-         ROUND(AVG(value), 6) AS avg_value
-  FROM events GROUP BY 1
-), p AS (
+    oracle=_DAILY_EVENTS_CTE + """, p AS (
   SELECT date, n_events AS x1, avg_value AS x2,
          LEAD(total_value) OVER (ORDER BY date) AS y
   FROM d
@@ -4080,12 +3972,7 @@ def shapley_linear_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract. At 100 TB: exact SHAP stays one scan for linear
     models; tree/kernel SHAP falls back to per-model audits
     (gbdt_two_round_audit pins the tree side)."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        R6(F.sum("value")).alias("total_value"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        R6(F.avg("value")).alias("avg_value"),
-    )
+    d = _daily_events(spark, sf_dir)
     p = d.select(
         "date",
         F.col("n_events").alias("x1"),

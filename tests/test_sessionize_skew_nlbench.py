@@ -19,7 +19,21 @@ EVENT_SCHEMA = "event_id long, ts string, user_id long, event_type string, value
 # -- batch sessionization: the 30-minute gap at microsecond precision -------
 
 
-def test_sessionize_gap30_splits_subsecond_gap_over_limit(spark, tmp_path):
+@pytest.mark.parametrize(
+    "name, expected",
+    [
+        # (user_id, n_sessions, max_session_events, avg_session_duration_s)
+        ("sessionize_gap30", [[1, 2, 1, 0.0], [2, 1, 2, 1800.0]]),
+        # (user_a, user_b, n_concurrent): overlap is compared in whole
+        # seconds, and user 1's second session starts 0.5 s after user
+        # 2's session ends, so both of user 1's sessions overlap it
+        ("concurrent_sessions", [[1, 2, 2]]),
+    ],
+    ids=["sessionize_gap30", "concurrent_sessions"],
+)
+def test_gap30_sessions_split_subsecond_gap_over_limit(
+    spark, tmp_path, name, expected
+):
     """A gap of 1800.5 s exceeds 30 minutes and starts a new session;
     a gap of exactly 1800 s does not. Gaps compared in whole seconds
     merged the first; the query must match its DuckDB oracle here."""
@@ -50,9 +64,9 @@ def test_sessionize_gap30_splits_subsecond_gap_over_limit(spark, tmp_path):
         }),
         tmp_path / "events.parquet",
     )
-    spec = REGISTRY["sessionize_gap30"]
+    spec = REGISTRY[name]
     got = spec.fn(spark, str(tmp_path)).toPandas()
-    assert dict(zip(got["user_id"], got["n_sessions"])) == {1: 2, 2: 1}
+    assert sorted(got.values.tolist()) == expected
 
     import duckdb
 
